@@ -40,15 +40,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.operators.text import TOKENS_SQL, tokens_col
 from drive_health_etl_spark.sources.tables import load_table
 
 BPE_ROUNDS = 3
-
-# (applicationId, sf_dir) -> trained merge rows; values are tiny lists, the
-# scope-LRU bound just keeps a long-lived multi-dataset driver tidy
-_MERGE_CACHE = FitCache(scope_len=2)
 
 
 def _pair_counts(s_df: DataFrame) -> DataFrame:
@@ -79,7 +75,6 @@ def _train_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
     must never re-run the iterative loop twice in one session. The cached
     value is a plain list (bounded: BPE_ROUNDS rows of short strings), so
     FitCache's best-effort unpersist is a no-op on eviction."""
-    key = (spark.sparkContext.applicationId, sf_dir, "bpe_merges")
 
     def build() -> list[tuple]:
         docs = load_table(spark, sf_dir, "documents")
@@ -107,7 +102,7 @@ def _train_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
             rows.append((rnd, w1, w2, c, _token_total(s_df)))
         return rows
 
-    return _MERGE_CACHE.get_or_build(key, build)
+    return dataset_cached(spark, sf_dir, "bpe_merges", build)
 
 
 def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -402,7 +397,6 @@ def _word_counts(spark: SparkSession, sf_dir: str) -> dict:
     the single scan every subword-family fit reduces to. Fit-cached so
     the subword/WordPiece/unigram trainers and the encoder's ranking pass
     share ONE aggregate per (session, dataset) instead of re-scanning."""
-    key = (spark.sparkContext.applicationId, sf_dir, "word_counts")
 
     def build() -> dict:
         docs = load_table(spark, sf_dir, "documents")
@@ -414,7 +408,7 @@ def _word_counts(spark: SparkSession, sf_dir: str) -> dict:
         )
         return {r["w"]: int(r["wc"]) for r in rows}
 
-    return _MERGE_CACHE.get_or_build(key, build)
+    return dataset_cached(spark, sf_dir, "word_counts", build)
 
 
 def _spell(word: str) -> str:
@@ -429,7 +423,6 @@ def _train_subword(spark: SparkSession, sf_dir: str):
     the same literal left-to-right non-overlapping replace as the
     word-level loop (" a b " -> " ab "), so the unrolled DuckDB oracle is
     exact by the identical-replace-semantics argument."""
-    key = (spark.sparkContext.applicationId, sf_dir, "bpe_subword")
 
     def build():
         words = _word_counts(spark, sf_dir)
@@ -451,7 +444,7 @@ def _train_subword(spark: SparkSession, sf_dir: str):
             merges.append((rnd, a, b, a + b, c, n_after))
         return merges, {w: s.split() for w, s in spelled.items()}
 
-    return _MERGE_CACHE.get_or_build(key, build)
+    return dataset_cached(spark, sf_dir, "bpe_subword", build)
 
 
 def text_bpe_subword_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -694,7 +687,6 @@ def _train_wordpiece(spark: SparkSession, sf_dir: str):
     merge_rows = [(round, left, right, merged, pair_count, score,
     symbols_after)]. Same vocab-bounded word-frequency formulation and
     fit-cache discipline as `_train_subword`."""
-    key = (spark.sparkContext.applicationId, sf_dir, "wordpiece")
 
     def build():
         words = _word_counts(spark, sf_dir)
@@ -726,7 +718,7 @@ def _train_wordpiece(spark: SparkSession, sf_dir: str):
             merges.append((rnd, a, b, a + b, c, score, n_after))
         return merges, {w: s.split() for w, s in spelled.items()}
 
-    return _MERGE_CACHE.get_or_build(key, build)
+    return dataset_cached(spark, sf_dir, "wordpiece", build)
 
 
 def text_wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -886,7 +878,6 @@ def _train_unigram(spark: SparkSession, sf_dir: str):
     usage counts (the model numerators; total = their sum) and each corpus
     word's final-model Viterbi segmentation (the E-step of one more
     iteration, i.e. what encode applies). Vocab-bounded; fit-cached."""
-    key = (spark.sparkContext.applicationId, sf_dir, "unigram")
 
     def build():
         words = _word_counts(spark, sf_dir)
@@ -913,7 +904,7 @@ def _train_unigram(spark: SparkSession, sf_dir: str):
         spell = {w: _uni_viterbi(w, p) for w in words}
         return words, usage, spell
 
-    return _MERGE_CACHE.get_or_build(key, build)
+    return dataset_cached(spark, sf_dir, "unigram", build)
 
 
 def text_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:

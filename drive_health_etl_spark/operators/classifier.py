@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.operators.quality import (
     MAX_MEAN_WORD_LEN,
     MAX_WORDS,
@@ -154,13 +154,9 @@ def lr_train(spark: SparkSession, sf_dir: str, rounds: int = LR_ROUNDS) -> list[
 
 
 # Trained weights per (session, sf_dir): deterministic fit, shared by the
-# train-readout and eval queries (the _CENTROID_CACHE pattern).
-_LR_CACHE = FitCache()  # scope-LRU bounded
-
-
+# train-readout and eval queries (the similarity centroid pattern).
 def _lr_weights_cached(spark: SparkSession, sf_dir: str) -> list[float]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _LR_CACHE.get_or_build(key, lambda: lr_train(spark, sf_dir))
+    return dataset_cached(spark, sf_dir, "lr_weights", lambda: lr_train(spark, sf_dir))
 
 
 def quality_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -360,9 +356,6 @@ FT_BUCKETS = 512  # hashed bins: 40-word synthetic vocab + ~1.6k bigrams
 # (measured: D=256 -> 0.984 accuracy, D=512 -> 0.996)
 
 
-_FT_DB_CACHE = FitCache()  # keys (appId, sf_dir); scope-LRU bounded
-
-
 def _ft_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, y, b, c): per-doc hashed-gram bucket counts with the
     stopword-rule label carried through the explode (no doc-keyed join).
@@ -370,8 +363,7 @@ def _ft_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, dataset) — FOUR registry queries (ft_train/eval/calibration/
     histcal) each re-ran the identical fit scan + checkpoint; the bucket
     counts are a fitted artifact exactly like the LR weights above."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _FT_DB_CACHE.get_or_build(key, lambda: _build_ft_db(spark, sf_dir))
+    return dataset_cached(spark, sf_dir, "ft_db", lambda: _build_ft_db(spark, sf_dir))
 
 
 def _build_ft_db(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.operators.text import TOKENS_SQL, tokens_col
 from drive_health_etl_spark.sources.tables import load_table
 
@@ -114,19 +114,11 @@ FROM documents GROUP BY 1
 """
 
 
-# Shared-subtree cache: signatures and LSH pairs feed FOUR registry queries
+# Shared subtrees: signatures and LSH pairs feed FOUR registry queries
 # (signatures, pairs, components, jaccard). Recomputing the minhash subtree
 # per query dominated the driver-contract runtime; one persisted copy per
-# (session, sf_dir) amortizes it. Testdata is immutable, so staleness is not
-# a concern; memory cost is one (doc_id, 8 longs) row per document.
-# Scope-LRU bounded (fitcache.FitCache): a long-lived driver sweeping many
-# sf_dirs sheds whole past datasets, unpersisting their blocks on evict.
-_SUBTREE_CACHE = FitCache(scope_len=2)
-
-
-def _cached(spark: SparkSession, sf_dir: str, what: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, what)
-    return _SUBTREE_CACHE.get_or_build(key, lambda: build().persist())
+# (session, sf_dir) via fitcache.dataset_cached amortizes it. Memory cost is
+# one (doc_id, 8 longs) row per document.
 
 
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -148,13 +140,12 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `source`. Carry a null source for the bare shape so the shared relation
     # keeps one schema either way.
     src = F.col("source") if "source" in docs.columns else F.lit(None).cast("string")
-    return _cached(
-        spark,
-        sf_dir,
-        "sh_sets",
+    return dataset_cached(
+        spark, sf_dir, "sh_sets",
         lambda: docs.withColumn("toks", tokens_col())
         .select("doc_id", src.alias("source"), F.array_distinct(shingles_col()).alias("sh_set"))
-        .filter(F.size("sh_set") > 0),
+        .filter(F.size("sh_set") > 0)
+        .persist(),
     )
 
 
@@ -162,7 +153,9 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document MinHash signature (8 hash functions over the 3-gram
     shingle set). Explode + 8 min-aggs: one shuffle on doc_id with map-side
     partial mins — signature computation is linear in corpus size."""
-    return _cached(spark, sf_dir, "sigs", lambda: _build_minhash_signatures(spark, sf_dir))
+    return dataset_cached(
+        spark, sf_dir, "sigs", lambda: _build_minhash_signatures(spark, sf_dir).persist()
+    )
 
 
 def signatures_for(docs: DataFrame) -> DataFrame:
@@ -251,7 +244,9 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash, never a cross join. Buckets are truncated at BUCKET_CAP docs
     (sorted, so truncation is deterministic). Output: distinct
     (doc_a, doc_b), doc_a < doc_b."""
-    return _cached(spark, sf_dir, "pairs", lambda: _build_minhash_pairs(spark, sf_dir))
+    return dataset_cached(
+        spark, sf_dir, "pairs", lambda: _build_minhash_pairs(spark, sf_dir).persist()
+    )
 
 
 def _build_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -763,16 +758,15 @@ def _eval_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (PushedFilters), and the per-row transforms are identical to
     `_shingle_sets` (filter-then-shingle == shingle-then-filter row-wise),
     so every consumer's rows are unchanged."""
-    return _cached(
-        spark,
-        sf_dir,
-        "eval_sh_sets",
+    return dataset_cached(
+        spark, sf_dir, "eval_sh_sets",
         lambda: load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < _EVAL_N)
         .repartition(spark.sparkContext.defaultParallelism)
         .withColumn("toks", tokens_col())
         .select("doc_id", F.array_distinct(shingles_col()).alias("sh_set"))
-        .filter(F.size("sh_set") > 0),
+        .filter(F.size("sh_set") > 0)
+        .persist(),
     )
 
 
@@ -804,9 +798,9 @@ def _eval_pair_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a"
         ).join(
             sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b"
-        )
+        ).persist()
 
-    return _cached(spark, sf_dir, "eval_pair_overlap", build)
+    return dataset_cached(spark, sf_dir, "eval_pair_overlap", build)
 
 
 def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1339,8 +1333,6 @@ FROM toks t LEFT JOIN keptagg k USING (doc_id)
 _VOCAB_BROADCAST_MAX = 2_000_000  # distinct shingles above which the df map
 # is too big to force-broadcast (~64 MB at ~32 B/shingle) — AQE decides
 
-_VOCAB_SIZE_CACHE: dict[tuple[str, str], int] = {}  # (appId, sf_dir) -> |vocab|
-
 _PREFIX_T = 0.7  # Jaccard threshold: prefix filtering pays off at HIGH
 # thresholds (prefix length = n - ceil(t*n) + 1 ~ (1-t)*n). Measured on this
 # corpus (template-heavy docs, so even rare shingles are shared): t=0.2 ->
@@ -1384,11 +1376,7 @@ def _prefix_pre(spark: SparkSession, sf_dir: str) -> DataFrame:
         # distinct-shingle count (one cheap agg over the already-persisted
         # sets, cached per (app, dataset)); above the threshold the
         # equi-join stays keyed and AQE picks the strategy.
-        vkey = (spark.sparkContext.applicationId, sf_dir)
-        n_vocab = _VOCAB_SIZE_CACHE.get(vkey)
-        if n_vocab is None:
-            n_vocab = freq.count()
-            _VOCAB_SIZE_CACHE[vkey] = n_vocab
+        n_vocab = dataset_cached(spark, sf_dir, "vocab_size", freq.count)
         freq_j = F.broadcast(freq) if n_vocab <= _VOCAB_BROADCAST_MAX else freq
         return (
             ex.join(freq_j, "shingle")
@@ -1398,9 +1386,10 @@ def _prefix_pre(spark: SparkSession, sf_dir: str) -> DataFrame:
                 <= F.col("n") - F.ceil(F.lit(_PREFIX_T) * F.col("n")) + F.lit(1)
             )
             .select("doc_id", "n", "shingle", "pos")
+            .persist()
         )
 
-    return _cached(spark, sf_dir, "prefix_pre", build)
+    return dataset_cached(spark, sf_dir, "prefix_pre", build)
 
 
 def _prefix_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1424,9 +1413,10 @@ def _prefix_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             _shingle_sets(spark, sf_dir)
             .select("doc_id", F.size("sh_set").alias("n"), hashed.alias("hashed"))
             .select("doc_id", "n", cnt.alias("cnt"))
+            .persist()
         )
 
-    return _cached(spark, sf_dir, "prefix_sketch", build)
+    return dataset_cached(spark, sf_dir, "prefix_sketch", build)
 
 
 def dedup_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2109,18 +2099,17 @@ def dedup_suffix_lcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-joins above. Nothing is quadratic: candidate positions bound
     the work, never document pairs, and rung fingerprints hash at most
     2 * {_LCS_RUNG_CAP} chars per position regardless of document length."""
-    docs = _cached(
-        spark,
-        sf_dir,
-        "lcs_docs",
+    docs = dataset_cached(
+        spark, sf_dir, "lcs_docs",
         lambda: load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", "text", F.length("text").alias("n")),
+        .select("doc_id", "text", F.length("text").alias("n"))
+        .persist(),
     )
     # corpus stats are a dataset property like the cached docs relation
     # itself: fit-cache them so warm calls skip the stats job
-    stats = _SUBTREE_CACHE.get_or_build(
-        (spark.sparkContext.applicationId, sf_dir, "lcs_stats"),
+    stats = dataset_cached(
+        spark, sf_dir, "lcs_stats",
         lambda: tuple(docs.agg(F.max("n"), F.count("*")).first()),
     )
     max_n, n_docs = (stats[0] or 0), stats[1]
@@ -2560,11 +2549,9 @@ def dedup_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= n/Q structs — a hash aggregate, never a partition-wide sort. The
     brute branch is banded by length bucket, never all-pairs."""
     k = _EDJ_K
-    n_key = (spark.sparkContext.applicationId, sf_dir)
-    n_docs = _VOCAB_SIZE_CACHE.get(("edj_ndocs",) + n_key)
-    if n_docs is None:
-        n_docs = load_table(spark, sf_dir, "documents").count()
-        _VOCAB_SIZE_CACHE[("edj_ndocs",) + n_key] = n_docs
+    n_docs = dataset_cached(
+        spark, sf_dir, "edj_ndocs", lambda: load_table(spark, sf_dir, "documents").count()
+    )
     q = _EDJ_Q_BIG if n_docs > _EDJ_BIG_DOCS else _EDJ_Q
     # Family subtree cache (not a bare per-call persist): repeated calls in
     # one session must REUSE the materialized gram relation — stacking a
@@ -2575,10 +2562,8 @@ def dedup_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below (never silently dropped — their only possible partners have
     # n <= (q-1)+K, hence ng <= K <= Q*K, so every partner is in the brute
     # set too and completeness holds independent of the adaptive Q).
-    docs = _cached(
-        spark,
-        sf_dir,
-        f"edj_grams_q{q}",
+    docs = dataset_cached(
+        spark, sf_dir, "edj_grams",
         lambda: load_table(spark, sf_dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism)
         .select("doc_id", "text", F.length("text").alias("n"))
@@ -2591,7 +2576,9 @@ def dedup_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" cast(array() as array<bigint>))"
             ),
         )
-        .withColumn("ng", F.size("grams")),
+        .withColumn("ng", F.size("grams"))
+        .persist(),
+        q,
     )
     # Signature: the K+1 rarest full Q-chunks per doc (docs with
     # n >= (K+1)*Q — everything smaller is brute-set by the ng <= Q*K test
@@ -2632,9 +2619,9 @@ def dedup_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("doc_a"),
             F.col("n").alias("la"),
             F.explode("sc.c").alias("c"),
-        )
+        ).persist()
 
-    sig_flat = _cached(spark, sf_dir, f"edj_sig_q{q}", build_sig)
+    sig_flat = dataset_cached(spark, sf_dir, "edj_sig", build_sig, q)
     # Candidate join: every doc's gram relation probes the signature. The
     # signature is K+1 slim rows per doc — broadcastable until the corpus
     # is huge, after which a plain equi-join on the int64 hash (one

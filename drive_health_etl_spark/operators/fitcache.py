@@ -1,41 +1,41 @@
-"""Bounded, scope-LRU cache for per-(session, dataset) fit subtrees.
+"""The one per-(session, dataset) cache for fitted and reused subtrees.
 
-VERDICT r8 item 7: module-global dicts keyed by (applicationId, sf_dir)
-held persisted DataFrames (minhash signatures, weighted edge lists, media
-fixtures) with no eviction — fine for a test harness, but a long-lived
-driver that sweeps many sf_dirs accumulates pinned storage blocks without
-bound. ``FitCache`` bounds the number of live SCOPES — an
-(applicationId, sf_dir) pair — not entries: one dataset legitimately owns
-several subtree entries at once (shingle sets, gram relations, signatures,
-codebooks) and they must never evict each other mid-query; what a
-long-lived driver must shed is whole datasets it has moved past. When the
-scope bound is exceeded, every entry of the least-recently-touched scope is
-dropped and its DataFrames unpersisted (best-effort: a stopped session's
+What may be cached: a value that is a pure function of one dataset read in
+one Spark session — minhash subtrees, weighted edge lists, PQ codebooks,
+BPE merges, encoded media fixtures, and the dataset scalars that size them.
+Callers go through ``dataset_cached``; nothing else in the package builds a
+cache key.
+
+The key rule: every entry is keyed ``(applicationId, sf_dir, name, *params)``.
+``name`` names the artifact and ``params`` are every other input its value
+depends on (a centroid count, a codec's subsampling), so two artifacts of
+one dataset never share a key, and a key from a stopped session can never be
+hit by a live one.
+
+The bound: the cache keeps the entries of at most ``MAX_SCOPES`` live
+datasets — a scope is the key's ``(applicationId, sf_dir)`` prefix. One
+dataset legitimately owns many entries at once and they never evict each
+other mid-query; what a long-lived driver sheds is whole datasets it has
+moved past. Touching a fifth scope drops every entry of the least recently
+used one and unpersists its DataFrames (best-effort: a stopped session's
 handles are dead and its storage died with the JVM).
 
-Thread safety (ADVICE r9, medium): the module-global caches this backs are
-hit concurrently by ``tools/vanilla_rehearsal.py``'s ThreadPoolExecutor
-pools, so ``touch``'s check-then-remove/append on the LRU list and the
-eviction's iteration over the dict raced (list.remove ValueError /
-"dict changed size during iteration"). All mutating paths now hold one
-re-entrant lock. ``get_or_build`` deliberately builds OUTSIDE the lock —
-fit subtrees can take seconds to materialize and must not serialize the
-rehearsal pool — and resolves the build race by keeping the first value
-stored and unpersisting the loser.
+A ``build`` function that returns a DataFrame persists or checkpoints it
+itself, because values also include scalars, lists and tuples.
 
-A ``dict`` subclass on purpose: ``tools/scale_probe.py`` purges any
-module-global ``*_CACHE`` dict via plain ``.clear()`` when recycling
-sessions, and that must keep working unchanged (clear drops references
-without unpersisting — correct there, since the owning JVM is going away).
+Thread safety: ``tools/vanilla_rehearsal.py`` runs queries from a thread
+pool, so every mutating path holds one re-entrant lock. ``get_or_build``
+builds OUTSIDE the lock — fit subtrees can take seconds to materialize and
+must not serialize the pool — and resolves a build race by keeping the first
+value stored and unpersisting the loser.
 """
 
 from __future__ import annotations
 
 import threading
 
-# Live (applicationId, sf_dir) scopes kept per cache. 4 covers the standard
-# harness sweep (sf0.001 / sf0.01 / sf0.1 / sf1 in one session) without any
-# eviction; a wider ad-hoc sweep starts shedding the oldest dataset's blocks.
+# Live (applicationId, sf_dir) scopes kept. 4 covers the standard harness
+# sweep (sf0.001 / sf0.01 / sf0.1 / sf1 in one session) without eviction.
 MAX_SCOPES = 4
 
 
@@ -54,37 +54,40 @@ def _try_unpersist(v) -> None:
             pass  # owning session already stopped; blocks are gone
 
 
-class FitCache(dict):
-    """dict with scope-LRU eviction. Keys are tuples whose first
-    ``scope_len`` elements identify the (session, dataset) scope."""
+def _scope(key: tuple) -> tuple:
+    return tuple(key[:2])
 
-    def __init__(self, scope_len: int = 2, max_scopes: int = MAX_SCOPES,
-                 scope_of=None):
+
+class FitCache(dict):
+    """dict with scope-LRU eviction; a key's scope is its first two
+    elements, ``(applicationId, sf_dir)``."""
+
+    def __init__(self, max_scopes: int = MAX_SCOPES):
         super().__init__()
-        self._scope_len = scope_len
         self._max_scopes = max_scopes
-        self._scope_of = scope_of  # custom key -> scope extractor
         self._scope_order: list[tuple] = []  # LRU: most recently used last
         self._lock = threading.RLock()
 
-    def _scope(self, key: tuple) -> tuple:
-        if self._scope_of is not None:
-            return tuple(self._scope_of(key))
-        return tuple(key[: self._scope_len])
-
     def _drop_scope_if_empty(self, s: tuple) -> None:
-        # Caller holds the lock. Keep _scope_order exact: a scope whose last
-        # key was removed must not linger and occupy an LRU slot (ADVICE r9:
-        # the multimodal stale-session purge used plain `del`, leaving dead
-        # scopes to loosen the live-scope bound until later no-op evictions).
-        if s in self._scope_order and not any(
-                self._scope(k) == s for k in self):
+        # Caller holds the lock. A scope whose last key was removed must
+        # not linger and occupy an LRU slot.
+        if s in self._scope_order and not any(_scope(k) == s for k in self):
             self._scope_order.remove(s)
+
+    def _evict_over_bound(self) -> list:
+        # Caller holds the lock; returns the dropped values to unpersist
+        # once it is released (unpersist can RPC the JVM).
+        evicted = []
+        while len(self._scope_order) > self._max_scopes:
+            old = self._scope_order.pop(0)
+            for k in [k for k in self if _scope(k) == old]:
+                evicted.append(super().pop(k))
+        return evicted
 
     def __delitem__(self, key) -> None:
         with self._lock:
             super().__delitem__(key)
-            self._drop_scope_if_empty(self._scope(key))
+            self._drop_scope_if_empty(_scope(key))
 
     def pop(self, key, *default):
         with self._lock:
@@ -94,23 +97,17 @@ class FitCache(dict):
                 if default:
                     return default[0]
                 raise
-            self._drop_scope_if_empty(self._scope(key))
+            self._drop_scope_if_empty(_scope(key))
             return v
 
     def touch(self, key: tuple) -> None:
         """Mark key's scope as most-recently-used; evict over-bound scopes."""
         with self._lock:
-            s = self._scope(key)
+            s = _scope(key)
             if s in self._scope_order:
                 self._scope_order.remove(s)
             self._scope_order.append(s)
-            evicted = []
-            while len(self._scope_order) > self._max_scopes:
-                old = self._scope_order.pop(0)
-                for k in [k for k in self if self._scope(k) == old]:
-                    evicted.append(super().pop(k))
-        # Unpersist outside the lock: it can RPC the JVM and must not block
-        # concurrent touches.
+            evicted = self._evict_over_bound()
         for v in evicted:
             _try_unpersist(v)
 
@@ -129,49 +126,64 @@ class FitCache(dict):
         with self._lock:
             existing = self.get(key)
             if existing is not None:
-                loser = v
-                v = existing
+                loser, v = v, existing
             else:
                 loser = None
                 super().__setitem__(key, v)
-                # ADVICE r10: the touch() above ran BEFORE the build, so a
-                # concurrent touch-storm can evict this scope while the build
-                # runs; storing then would leave dict contents whose scope is
-                # absent from _scope_order, escaping the max_scopes bound
-                # until the scope is touched again. Re-register (and re-run
-                # the eviction bound) under the same lock as the store so the
-                # two structures can never diverge.
-                s = self._scope(key)
+                # touch() ran BEFORE the build, so concurrent touches can
+                # have evicted this scope meanwhile: re-register it (and
+                # re-apply the bound) under the same lock as the store, so
+                # dict contents and _scope_order never diverge.
+                s = _scope(key)
                 if s not in self._scope_order:
                     self._scope_order.append(s)
-                    while len(self._scope_order) > self._max_scopes:
-                        old = self._scope_order.pop(0)
-                        for k in [k for k in self if self._scope(k) == old]:
-                            evicted.append(super().pop(k))
+                    evicted = self._evict_over_bound()
         for ev in evicted:
             _try_unpersist(ev)
         if loser is not None:
             _try_unpersist(loser)
         return v
 
-    def purge(self, predicate, unpersist: bool = True) -> int:
-        """Remove every entry whose KEY satisfies ``predicate``, maintaining
-        the scope-order list; optionally unpersist the removed values.
-        Returns the number of entries removed. This is the supported path
-        for stale-session sweeps (don't `del cache[k]` in a loop over the
-        cache from another thread)."""
+    def purge(self, predicate) -> int:
+        """Remove and unpersist every entry whose KEY satisfies
+        ``predicate``, keeping the scope order exact. Returns the number of
+        entries removed."""
         with self._lock:
             doomed = [k for k in self if predicate(k)]
             removed = []
             for k in doomed:
                 removed.append(super().pop(k))
-                self._drop_scope_if_empty(self._scope(k))
-        if unpersist:
-            for v in removed:
-                _try_unpersist(v)
+                self._drop_scope_if_empty(_scope(k))
+        for v in removed:
+            _try_unpersist(v)
         return len(removed)
 
-    def clear(self) -> None:  # scale_probe purge path: drop refs, no unpersist
+    def clear(self) -> None:
+        """Drop every entry WITHOUT unpersisting: the session-recycle path,
+        where the handles belong to a JVM that is going away."""
         with self._lock:
             super().clear()
             self._scope_order.clear()
+
+
+_CACHE = FitCache()
+
+
+def dataset_cached(spark, sf_dir: str, name: str, build, *params):
+    """The value ``build()`` returns for artifact ``name`` of dataset
+    ``sf_dir`` in this session, built once and kept while the dataset is
+    among the ``MAX_SCOPES`` most recently used. ``params`` must carry every
+    input of the value that ``sf_dir`` and ``name`` do not."""
+    key = (spark.sparkContext.applicationId, sf_dir, name, *params)
+    return _CACHE.get_or_build(key, build)
+
+
+def purge(predicate) -> int:
+    """Remove and unpersist every entry whose key satisfies ``predicate``,
+    e.g. ``lambda k: k[2] == "sigs"`` or ``lambda k: k[1] == sf_dir``."""
+    return _CACHE.purge(predicate)
+
+
+def clear() -> None:
+    """Drop every entry without unpersisting (session recycle)."""
+    _CACHE.clear()

@@ -24,20 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.session import shuffle_partitions
 from drive_health_etl_spark.sources.tables import load_table
 
 PR_DAMPING = 0.85
 PR_ITERS = 3
 PR_TOP_N = 20
-
-
-# The degree-weighted edge relation is the expensive subtree (self-join +
-# two distincts); a real deployment materializes the edge table once and
-# iterates over it — cache it per (app, sf_dir) the same way dedup.py caches
-# the MinHash signature subtree.
-_EDGE_CACHE = FitCache()  # scope-LRU bounded; unpersist-on-evict
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,7 +78,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
+    """The degree-weighted edge relation (src, dst, 1/deg(src)) — the
+    expensive subtree (self-join + two distincts). A real deployment
+    materializes the edge table once and iterates over it, so it is cached
+    per (session, sf_dir) like dedup.py's MinHash signature subtree."""
 
     def build() -> DataFrame:
         edges = _edges(spark, sf_dir)
@@ -98,7 +94,7 @@ def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
         ).localCheckpoint()
 
-    return _EDGE_CACHE.get_or_build(key, build)
+    return dataset_cached(spark, sf_dir, "pr_edges", build)
 
 
 def _pagerank_nodes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
@@ -116,8 +112,7 @@ def _pagerank_nodes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
         nodes = ed.select(F.col("src").alias("node")).distinct().localCheckpoint()
         return (nodes, nodes.count())
 
-    key = (spark.sparkContext.applicationId, sf_dir, "nodes")
-    return _EDGE_CACHE.get_or_build(key, build)
+    return dataset_cached(spark, sf_dir, "pr_nodes", build)
 
 
 # Broadcast the node-sized iteration relations (ranks in, contributions out)
@@ -315,16 +310,11 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# The support-filtered pair relation is the expensive subtree (fact self-join
-# + aggregate) shared by the triangle census, BFS, and label propagation —
-# cache it per (app, sf_dir) like the pagerank edge list (a real deployment
-# materializes the edge table once and every graph job reads it).
-_SUPPORT_CACHE = FitCache()  # scope-LRU bounded; unpersist-on-evict
-
-
 def _support_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected support-filtered co-purchase pairs (pa < pb), cached."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    """Undirected support-filtered co-purchase pairs (pa < pb). The
+    expensive subtree (fact self-join + aggregate) shared by the triangle
+    census, BFS, and label propagation, so it is cached per (session,
+    sf_dir) like the pagerank edge list."""
 
     def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").select(
@@ -342,7 +332,7 @@ def _support_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    return _SUPPORT_CACHE.get_or_build(key, build)
+    return dataset_cached(spark, sf_dir, "support_pairs", build)
 
 
 def _support_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -609,17 +599,15 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11: the bipartite purchase relation is a dataset artifact like the
     # co-purchase edge list — cache it per (session, sf_dir) instead of
     # re-running the orders ⋈ lineitem distinct per call (guide §2.4).
-    edges = _EDGE_CACHE.get_or_build(
-        (spark.sparkContext.applicationId, sf_dir, "hits_edges"), build_edges
-    )
+    edges = dataset_cached(spark, sf_dir, "hits_edges", build_edges)
     # r12: the per-half-iteration score relations are side-sized (one row
     # per part / per cust) but join against a lineage-free edge relation
     # with no size stats, so the planner sort-merge-shuffled the full edge
     # list each half-iteration. Below the shared node-count threshold the
     # score side broadcasts and edges never re-shuffle (the PageRank rule);
     # the side counts are dataset artifacts, cached next to the edges.
-    n_part, n_cust = _EDGE_CACHE.get_or_build(
-        (spark.sparkContext.applicationId, sf_dir, "hits_sides"),
+    n_part, n_cust = dataset_cached(
+        spark, sf_dir, "hits_sides",
         lambda: tuple(
             edges.agg(
                 F.count_distinct("part"), F.count_distinct("cust")
@@ -696,10 +684,6 @@ SELECT * FROM auth UNION ALL SELECT * FROM hub
 _AA_HUB_MAX = 64  # exclude parts bought by more than this many customers
 _AA_TOP_N = 20
 
-# Per-(session, sf_dir) cache of the persisted weighted bipartite relation:
-# repeat calls must reuse the materialization, not stack fresh persists.
-_AA_CACHE = FitCache()  # scope-LRU bounded; unpersist-on-evict
-
 
 def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adamic-Adar link prediction (Adamic & Adar, Social Networks 2003)
@@ -722,7 +706,6 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical double on both engines, folded to exact integer pico-units
     BEFORE the per-pair sum (order-independent long aggregate); the top-k
     is a TakeOrdered on (score desc, ids) — fully tiebroken."""
-    key = (spark.sparkContext.applicationId, sf_dir)
 
     def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -753,7 +736,9 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         cpw.count()
         return cpw
 
-    cpw = _AA_CACHE.get_or_build(key, build)
+    # cached per (session, sf_dir): repeat calls must reuse the
+    # materialization, not stack fresh persists
+    cpw = dataset_cached(spark, sf_dir, "aa_weighted", build)
     a = cpw.select("part", F.col("cust").alias("cust_a"), "w")
     b = cpw.select(F.col("part").alias("part_b"), F.col("cust").alias("cust_b"))
     # The pair stream is the dominant volume (sum over parts of deg^2 rows);

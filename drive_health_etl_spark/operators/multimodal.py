@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.sources.tables import load_table
 
 MEDIA_SCHEMA = (
@@ -507,31 +507,8 @@ FROM px GROUP BY doc_id
 # every later query (and every bench repeat) measures only its own decode
 # work. Bounded: the fixture corpus is |documents|/3 thumbnail blobs of <=
 # ~1.5 KB each (a few MB per SF); at production scale media arrives already
-# encoded and this generation step does not exist.
-# Scope-LRU bounded; unpersist-on-evict. Keys are (applicationId, codec,
-# sf_dir, *params) — the dataset scope is (applicationId, sf_dir).
-_MEDIA_CACHE = FitCache(scope_of=lambda k: (k[0], k[2]))
-
-
-def _cached_media(spark: SparkSession, key: tuple, build) -> DataFrame:
-    full_key = (spark.sparkContext.applicationId, *key)
-    # Evict entries from stopped sessions (their DataFrame handles are dead
-    # and their storage memory is gone with the JVM) so the cache stays
-    # bounded in long-lived drivers — same discipline as _CENTROID_CACHE's
-    # session-keyed bound and dedup._cached. NOTE: "different applicationId"
-    # equals "stopped" only because this driver runs sessions sequentially
-    # (one local JVM at a time); if alternating live sessions ever share one
-    # driver, check liveness (SparkSession.getActiveSession / an app
-    # registry) before unpersisting another session's entries.
-    app_id = full_key[0]
-    # Routed through FitCache.purge so the scope-order list stays exact
-    # (plain `del` left dead scopes occupying LRU slots — ADVICE r9) and the
-    # sweep is atomic under the cache's lock (rehearsal pools hit this
-    # concurrently).
-    _MEDIA_CACHE.purge(lambda k: k[0] != app_id)
-    # Cross-dataset growth within ONE live session is bounded by FitCache's
-    # scope LRU (unpersist-on-evict).
-    return _MEDIA_CACHE.get_or_build(full_key, lambda: build().persist())
+# encoded and this generation step does not exist. Each fixture is
+# dataset-cached under its codec name plus every codec parameter.
 
 
 def attach_png_images(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -567,10 +544,9 @@ def attach_png_images(spark: SparkSession, sf_dir: str) -> DataFrame:
                 blobs.append(encode_png(img))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
 
-    return _cached_media(
-        spark,
-        ("png", sf_dir),
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary"),
+    return dataset_cached(
+        spark, sf_dir, "png",
+        lambda: raster.mapInPandas(op, schema="doc_id long, content binary").persist(),
     )
 
 
@@ -686,10 +662,9 @@ def multimodal_png_adam7_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 blobs.append(encode_png(img, interlace=True))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
 
-    media = _cached_media(
-        spark,
-        ("png_adam7", sf_dir),
-        lambda: raster.mapInPandas(enc, schema="doc_id long, content binary"),
+    media = dataset_cached(
+        spark, sf_dir, "png_adam7",
+        lambda: raster.mapInPandas(enc, schema="doc_id long, content binary").persist(),
     )
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -763,10 +738,11 @@ def attach_jpeg_images(
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs, "raw": pdf["raw"]})
 
-    return _cached_media(
-        spark,
-        ("jpeg", sf_dir, subsampling, restart_interval),
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary, raw binary"),
+    return dataset_cached(
+        spark, sf_dir, "jpeg",
+        lambda: raster.mapInPandas(op, schema="doc_id long, content binary, raw binary").persist(),
+        subsampling,
+        restart_interval,
     )
 
 
@@ -1263,10 +1239,9 @@ def attach_gif_images(spark: SparkSession, sf_dir: str) -> DataFrame:
                 blobs.append(encode_gif(idx, gray))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
 
-    return _cached_media(
-        spark,
-        ("gif", sf_dir),
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary"),
+    return dataset_cached(
+        spark, sf_dir, "gif",
+        lambda: raster.mapInPandas(op, schema="doc_id long, content binary").persist(),
     )
 
 
@@ -1352,10 +1327,9 @@ def attach_adpcm_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
                 blobs.append(encode_wav_ima(samples, WAV_RATE))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs, "raw": pdf["raw"]})
 
-    return _cached_media(
-        spark,
-        ("adpcm", sf_dir),
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary, raw binary"),
+    return dataset_cached(
+        spark, sf_dir, "adpcm",
+        lambda: raster.mapInPandas(op, schema="doc_id long, content binary, raw binary").persist(),
     )
 
 
@@ -1425,10 +1399,9 @@ def attach_flac_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
                 blobs.append(encode_flac(((b - 128) << 8).astype(np.int16), WAV_RATE))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
 
-    return _cached_media(
-        spark,
-        ("flac", sf_dir),
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary"),
+    return dataset_cached(
+        spark, sf_dir, "flac",
+        lambda: raster.mapInPandas(op, schema="doc_id long, content binary").persist(),
     )
 
 
@@ -1494,7 +1467,7 @@ def attach_mjpeg_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     '00dc' JPEG chunks, idx1 index — ``avi_codec.py``), frame f's raster
     drawn from the doc's text offset by 7*f so frames differ. Standards-
     compliant MJPEG players accept these blobs. Encoded once per session
-    (the `_cached_media` fixture discipline); repartitioned so the Python
+    (the dataset-cached fixture discipline); repartitioned so the Python
     codec spreads across cores."""
     from drive_health_etl_spark.operators.avi_codec import encode_avi_mjpeg
 
@@ -1528,10 +1501,9 @@ def attach_mjpeg_video(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raws.append(b"".join(bytes(pdf[f"raw{f}"].iloc[i]) for f in range(MJPEG_FRAMES)))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs, "raw": raws})
 
-    return _cached_media(
-        spark,
-        ("mjpeg", sf_dir),
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary, raw binary"),
+    return dataset_cached(
+        spark, sf_dir, "mjpeg",
+        lambda: raster.mapInPandas(op, schema="doc_id long, content binary, raw binary").persist(),
     )
 
 
@@ -1616,7 +1588,7 @@ def attach_lossless_p_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes a 4-frame AVI with a BI_RGB DIB keyframe and LP01
     conditional-replenishment P-frames (``avi_codec.encode_avi_lossless_p``
     — per-8x8-block skip flags + mod-256 deltas, fully lossless). Encoded
-    once per session (`_cached_media`); repartitioned so the Python codec
+    once per session (dataset-cached); repartitioned so the Python codec
     spreads across cores."""
     from drive_health_etl_spark.operators.avi_codec import encode_avi_lossless_p
 
@@ -1640,10 +1612,9 @@ def attach_lossless_p_video(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raws.append(b"".join(payloads))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs, "raw": raws})
 
-    return _cached_media(
-        spark,
-        ("mjpeg_p", sf_dir),
-        lambda: base.mapInPandas(op, schema="doc_id long, content binary, raw binary"),
+    return dataset_cached(
+        spark, sf_dir, "mjpeg_p",
+        lambda: base.mapInPandas(op, schema="doc_id long, content binary, raw binary").persist(),
     )
 
 

@@ -18,7 +18,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.sources.tables import load_table
 
 N_QUERIES = 8
@@ -231,21 +231,14 @@ def kmeans_centroids(
 # repeated sim_ann_ivf calls (contract sweep + bench + bench recall pass)
 # reuse one Lloyd run instead of re-fitting. Same pattern as the MinHash
 # subtree cache in operators/dedup.py.
-_CENTROID_CACHE = FitCache()  # keys (appId, sf_dir, k); scope-LRU bounded
-
-
 def _centroids_cached(
     spark: SparkSession, sf_dir: str, emb: DataFrame, k: int = N_CELLS
 ) -> list[tuple[int, list[float]]]:
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    return _CENTROID_CACHE.get_or_build(key, lambda: kmeans_centroids(emb, k=k))
-
-
-_ASSIGN_CACHE = FitCache()  # keys (appId, sf_dir, k); scope-LRU bounded
+    return dataset_cached(spark, sf_dir, "centroids", lambda: kmeans_centroids(emb, k=k), k)
 
 
 def _assigned_cached(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, cents, k: int = N_CELLS
+    spark: SparkSession, sf_dir: str, emb: DataFrame, k: int = N_CELLS
 ) -> DataFrame:
     """The INVERTED FILE — every vector's nearest-centroid cell plus its
     precomputed L2 norm — persisted once per (session, dataset, k). The
@@ -259,9 +252,11 @@ def _assigned_cached(
     cache what is reused and expensive). Columns: vec_id, e, cell, enorm,
     ccos (cosine to the assigned centroid — SemDeDup's keep priority, one
     fold at index time instead of per consumer); consumers project what
-    they need."""
+    they need. The centroids are resolved here, from the same cache, so
+    the (dataset, k) key covers every input."""
 
     def build() -> DataFrame:
+        cents = _centroids_cached(spark, sf_dir, emb, k)
         cent_rows = spark.createDataFrame(
             [(cid, ce, _const_norm(ce)) for cid, ce in cents],
             "cell int, ce array<double>, cnorm double",
@@ -278,8 +273,7 @@ def _assigned_cached(
             .persist()
         )
 
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    return _ASSIGN_CACHE.get_or_build(key, build)
+    return dataset_cached(spark, sf_dir, "ivf_assign", build, k)
 
 
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,8 +287,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     )
-    cents = _centroids_cached(spark, sf_dir, emb)
-    assigned = _assigned_cached(spark, sf_dir, emb, cents).select(
+    assigned = _assigned_cached(spark, sf_dir, emb).select(
         "vec_id", "e", "cell"
     )
     q = assigned.filter(F.col("vec_id") < 8).select(
@@ -401,8 +394,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     )
-    cents = _centroids_cached(spark, sf_dir, emb)
-    return _semdedup_stats(spark, sf_dir, emb, cents)
+    return _semdedup_stats(spark, sf_dir, emb)
 
 
 SEMDEDUP_CELL_TARGET = 256  # target vectors per cell for the k ~ n/cell policy
@@ -426,12 +418,11 @@ def dedup_semantic_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = emb.count()  # one cheap count; the Lloyd fit scans the corpus anyway
     k = max(N_CELLS, _math.ceil(n / SEMDEDUP_CELL_TARGET))
-    cents = _centroids_cached(spark, sf_dir, emb, k=k)
-    return _semdedup_stats(spark, sf_dir, emb, cents, k=k)
+    return _semdedup_stats(spark, sf_dir, emb, k=k)
 
 
 def _semdedup_stats(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, cents, k: int = N_CELLS
+    spark: SparkSession, sf_dir: str, emb: DataFrame, k: int = N_CELLS
 ) -> DataFrame:
     # Norm is precomputed per VECTOR (linear work) so the quadratic in-cell
     # pair filter below evaluates a single array fold (the dot) per pair
@@ -441,7 +432,7 @@ def _semdedup_stats(
     # r11: the assignment relation feeds three consumers (both pair-join
     # sides and the verdict join) — read it from the shared inverted-file
     # cache instead of re-running the argmax fold per consumer.
-    assigned = _assigned_cached(spark, sf_dir, emb, cents, k=k)
+    assigned = _assigned_cached(spark, sf_dir, emb, k=k)
     u = assigned.select(
         F.col("cell").alias("ucell"),
         F.col("vec_id").alias("u_id"),
@@ -537,8 +528,7 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     )
-    cents = _centroids_cached(spark, sf_dir, emb)
-    return _semdedup_prune_verdicts(spark, sf_dir, emb, cents)
+    return _semdedup_prune_verdicts(spark, sf_dir, emb)
 
 
 def dedup_semantic_prune_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,16 +547,15 @@ def dedup_semantic_prune_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = emb.count()
     k = max(N_CELLS, _math.ceil(n / SEMDEDUP_CELL_TARGET))
-    cents = _centroids_cached(spark, sf_dir, emb, k=k)
-    return _semdedup_prune_verdicts(spark, sf_dir, emb, cents, k=k)
+    return _semdedup_prune_verdicts(spark, sf_dir, emb, k=k)
 
 
 def _semdedup_prune_verdicts(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, cents, k: int = N_CELLS
+    spark: SparkSession, sf_dir: str, emb: DataFrame, k: int = N_CELLS
 ) -> DataFrame:
     # r11: assignment, norm AND the centroid-cosine priority come from the
     # shared inverted-file cache (three consumers below).
-    assigned = _assigned_cached(spark, sf_dir, emb, cents, k=k).select(
+    assigned = _assigned_cached(spark, sf_dir, emb, k=k).select(
         "vec_id", "cell", "e", "enorm", "ccos"
     )
     u = assigned.select(
@@ -946,22 +935,12 @@ def pq_codebooks(emb: DataFrame, rounds: int = PQ_ROUNDS) -> list[tuple[int, int
 # Trained codebooks per (session, sf_dir): the fit is deterministic, so the
 # three PQ consumers (emb_pq_stats, sim_ann_pq_adc/_adc_distances,
 # sim_ann_ivfpq) and repeated bench/sweep calls share ONE Lloyd run — the
-# same pattern as _CENTROID_CACHE.
-_PQ_CB_CACHE = FitCache()  # scope-LRU bounded
-
-
+# same pattern as `_centroids_cached`.
 def _pq_codebooks_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> list[tuple[int, int, list[float]]]:
-    ckey = (spark.sparkContext.applicationId, sf_dir)
-    return _PQ_CB_CACHE.get_or_build(ckey, lambda: pq_codebooks(emb))
+    return dataset_cached(spark, sf_dir, "pq_codebooks", lambda: pq_codebooks(emb))
 
 
-_PQ_CODES_CACHE = FitCache()  # keys (appId, sf_dir); scope-LRU bounded
-
-
-def _pq_codes_cached(
-    spark: SparkSession, sf_dir: str, emb: DataFrame,
-    cbs: list[tuple[int, int, list[float]]],
-) -> DataFrame:
+def _pq_codes_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
     """The PQ-ENCODED CORPUS — every vector's per-subspace (best squared
     distance, code) — persisted once per (session, dataset), like the
     codebooks it derives from. r11: the corpus encode (posexplode to
@@ -974,10 +953,12 @@ def _pq_codes_cached(
     expensive). Expressions are byte-for-byte the consumers' own folds,
     so codes/distances are bit-identical whether read from this cache or
     recomputed. Columns: vec_id, m, d (best squared distance, the MSE
-    numerator), code; consumers project what they need."""
+    numerator), code; consumers project what they need. The codebooks are
+    resolved here, from the same cache, so the dataset key covers every
+    input."""
 
     def build() -> DataFrame:
-        cb_all = _pq_all_cb_df(spark, cbs)
+        cb_all = _pq_all_cb_df(spark, _pq_codebooks_cached(spark, sf_dir, emb))
         slices = F.posexplode(
             F.array(*[F.slice("e", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
         ).alias("m", "sv")
@@ -1005,28 +986,27 @@ def _pq_codes_cached(
             .persist()
         )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _PQ_CODES_CACHE.get_or_build(key, build)
+    return dataset_cached(spark, sf_dir, "pq_codes", build)
 
 
-_ADC_LUT_CACHE = FitCache()  # keys (appId, sf_dir); scope-LRU bounded
-
-
-def _adc_lut_cached(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, qid: int,
-    cbs: list[tuple[int, int, list[float]]],
-) -> DataFrame:
+def _adc_lut_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
     """The ADC LOOKUP TABLE — per (subspace, codeword) exact ``||q_m - c||^2``
-    — persisted once per (session, dataset). A real ADC scorer builds the
-    LUT once per query at search time; here the demo query (MAX vec_id) is
-    itself a dataset artifact, so the ≤ PQ_M*PQ_K-row table is index state,
-    same as the codes (`_pq_codes_cached`). r12: every `_adc_distances`
-    call (pq_adc, ivfpq, adc_quality) re-ran the query-row scan + slice
-    explode + codebook broadcast-join per call. Expressions are
-    byte-for-byte the inline build's, so LUT entries are bit-identical."""
+    — persisted once per (session, dataset). Its two inputs, the demo query
+    id (MAX vec_id) and the trained codebooks, are resolved HERE through
+    their own dataset caches, so the ``(dataset, "adc_lut")`` key covers
+    every input by construction. r12: every `_adc_distances` call (pq_adc,
+    ivfpq, adc_quality) re-ran the query-row scan + slice explode +
+    codebook broadcast-join per call. Expressions are byte-for-byte the
+    inline build's, so LUT entries are bit-identical.
+
+    Caveat: the LUT is dataset state only because the demo query is fixed
+    per dataset. At serving scale each query brings its own vector, and the
+    LUT is per-query state built at search time; it must not be cached per
+    dataset there."""
 
     def build() -> DataFrame:
-        cb_all = _pq_all_cb_df(spark, cbs)
+        qid = _qid_cached(spark, sf_dir, emb)
+        cb_all = _pq_all_cb_df(spark, _pq_codebooks_cached(spark, sf_dir, emb))
         slices = F.posexplode(
             F.array(*[F.slice("e", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
         ).alias("m", "sv")
@@ -1049,11 +1029,7 @@ def _adc_lut_cached(
             .persist()
         )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _ADC_LUT_CACHE.get_or_build(key, build)
-
-
-_QID_CACHE = FitCache()  # keys (appId, sf_dir); the demo-query vector id
+    return dataset_cached(spark, sf_dir, "adc_lut", build)
 
 
 def _qid_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> int:
@@ -1061,9 +1037,8 @@ def _qid_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> int:
     uses. A dataset scalar (the `_pagerank_nodes` count precedent): each
     of sim_ann_ivfpq / _adc_distances / sim_adc_quality ran its own
     one-job collect per BUILD, so one ivfpq sample paid it twice."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _QID_CACHE.get_or_build(
-        key, lambda: emb.agg(F.max("vec_id")).collect()[0][0]
+    return dataset_cached(
+        spark, sf_dir, "ann_qid", lambda: emb.agg(F.max("vec_id")).collect()[0][0]
     )
 
 
@@ -1103,8 +1078,8 @@ def emb_pq_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the code layout IVF-PQ search operates on.
 
     Codebooks are per-subspace-TRAINED via ``pq_codebooks`` (Lloyd k-means,
-    deterministic seed, shared through ``_PQ_CB_CACHE`` with the ADC/IVF-PQ
-    consumers). Encoding is ONE pass over the corpus: subvectors posexplode
+    deterministic seed, shared through ``_pq_codebooks_cached`` with the
+    ADC/IVF-PQ consumers). Encoding is ONE pass over the corpus: subvectors posexplode
     to (m, sv) and score against the all-subspace codebook riding as a
     single 1-row broadcast (the round-2 per-subspace loop scanned the table
     PQ_M times — 4 scans for the same math); argmin via array_min over
@@ -1120,10 +1095,9 @@ def emb_pq_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     )
-    cbs = _pq_codebooks_cached(spark, sf_dir, emb)
     # r11: read the persisted PQ index (identical argmin folds, materialized
     # once per session/dataset) instead of re-encoding the corpus
-    allm = _pq_codes_cached(spark, sf_dir, emb, cbs).select(
+    allm = _pq_codes_cached(spark, sf_dir, emb).select(
         F.col("m").alias("subspace"),
         F.col("d").alias("sq"),
         F.col("code"),
@@ -1182,7 +1156,7 @@ def sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output distance rounds 6 dp. Scale: encode is a narrow map; the
     score join is (n x PQ_M) rows against a broadcast 64-entry LUT with a
     map-side-combinable sum. Codebooks are per-subspace-trained
-    (``pq_codebooks``, shared via ``_PQ_CB_CACHE``). The scorer itself is
+    (``pq_codebooks``, shared via ``_pq_codebooks_cached``). The scorer itself is
     ``_adc_distances`` (shared verbatim with IVF-PQ); this query is that
     scorer plus the deterministic top-``_ADC_TOP``."""
     dist = _adc_distances(spark, sf_dir)
@@ -1259,7 +1233,7 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = _centroids_cached(spark, sf_dir, emb)
     cmat = _cents_df(spark, cents)
-    assigned = _assigned_cached(spark, sf_dir, emb, cents).select("vec_id", "cell")
+    assigned = _assigned_cached(spark, sf_dir, emb).select("vec_id", "cell")
     qid = _qid_cached(spark, sf_dir, emb)
     probe = (
         emb.filter(F.col("vec_id") == qid)
@@ -1332,18 +1306,17 @@ def _adc_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     )
     qid = _qid_cached(spark, sf_dir, emb)
-    cbs = _pq_codebooks_cached(spark, sf_dir, emb)
     # r11: the corpus side reads the persisted PQ index (same folds, the
     # query row filtered AFTER the cached encode — identical row set).
     # r12: the LUT side reads the persisted per-dataset lookup table too
     # (`_adc_lut_cached`, same folds) instead of re-scanning the query row
     # and re-joining the codebooks per call.
     codes = (
-        _pq_codes_cached(spark, sf_dir, emb, cbs)
+        _pq_codes_cached(spark, sf_dir, emb)
         .filter(F.col("vec_id") != qid)
         .select("vec_id", "m", "code")
     )
-    lut = _adc_lut_cached(spark, sf_dir, emb, qid, cbs)
+    lut = _adc_lut_cached(spark, sf_dir, emb)
     return (
         codes.join(F.broadcast(lut), ["m", "code"])
         .groupBy("vec_id")
@@ -1890,7 +1863,7 @@ def emb_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     triplet margin, the quantity a curriculum filters on.
 
     Scale shape: cell assignment reuses the cached Lloyd fit
-    (`_CENTROID_CACHE`); candidates join the ``TRIPLET_ANCHORS``-row anchor
+    (`_centroids_cached`); candidates join the ``TRIPLET_ANCHORS``-row anchor
     broadcast (fenced brute-force, the `sim_cosine_topk` pattern), then two
     per-anchor window top-1s. Anchors whose cell has no other member drop
     out (inner join) — deterministic in both engines. Ranking follows the
@@ -1900,8 +1873,7 @@ def emb_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     )
-    cents = _centroids_cached(spark, sf_dir, emb)
-    assigned = _assigned_cached(spark, sf_dir, emb, cents).select(
+    assigned = _assigned_cached(spark, sf_dir, emb).select(
         "vec_id", "e", "cell"
     )
     anchors = assigned.filter(F.col("vec_id") < TRIPLET_ANCHORS).select(
@@ -2004,9 +1976,6 @@ FROM pos p JOIN neg n ON n.anchor_id = p.anchor_id
 _BIN_CAND = 200
 
 
-_BIN_SIG_CACHE = FitCache()  # keys (appId, sf_dir); scope-LRU bounded
-
-
 def _binary_sigs_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
     """The 1-bit sign-sketch index — (vec_id, sig_lo, sig_hi) — persisted
     once per (session, dataset). The pack fold (64 conditional shifts per
@@ -2020,8 +1989,7 @@ def _binary_sigs_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> Dat
             _sig_half(F.col("e"), 32).alias("sig_hi"),
         ).persist()
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _BIN_SIG_CACHE.get_or_build(key, build)
+    return dataset_cached(spark, sf_dir, "binary_sigs", build)
 
 
 def _sig_half(col: Column, offset: int) -> Column:

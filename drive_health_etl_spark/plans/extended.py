@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from drive_health_etl_spark.functions.phone import normalize_phone_udf
 from drive_health_etl_spark.operators.dlq import route_dlq
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.sources.tables import load_table, register_views
 
 # --- F1/F2: phone normalization (the one real UDF) --------------------------
@@ -509,9 +509,6 @@ def _sql_table_bucket(col: str, t: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-_LSH_INDEX_CACHE = FitCache()  # keys (appId, sf_dir); scope-LRU bounded
-
-
 def _lsh_index_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE LSH INDEX — every vector with its single-table bucket, its
     N_TABLES multi-table bucket codes, and its precomputed L2 norm —
@@ -544,8 +541,7 @@ def _lsh_index_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _LSH_INDEX_CACHE.get_or_build(key, build)
+    return dataset_cached(spark, sf_dir, "lsh_index", build)
 
 
 def sim_ann_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:

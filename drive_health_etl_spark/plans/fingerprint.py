@@ -29,6 +29,33 @@ _JOIN_MARKS = (
 )
 
 
+_HEADERS = ("== Final Plan ==", "== Current Plan ==", "== Initial Plan ==")
+
+
+def _kids_prefix(line: str, indent: int) -> str:
+    """The prefix every descendant of tree line ``line`` starts with: the
+    connectors before its marker, then ":  " if it has later siblings
+    (marker ":-") else "   ". A section root has no marker; its children
+    put theirs at its column."""
+    if line.startswith(":- ", indent):
+        return line[:indent] + ":  "
+    if line.startswith("+- ", indent):
+        return line[:indent] + "   "
+    return line[:indent]
+
+
+def _continues(kids: str, line: str, indent: int) -> bool:
+    """Whether ``line`` (marker at ``indent``) continues the tree whose last
+    line has descendant prefix ``kids``: a descendant of that line, or a
+    later sibling of it or of an ancestor — which Spark renders only where
+    the connector at the marker's column is ":"."""
+    if not line.startswith(("+- ", ":- "), indent):
+        return False
+    if indent >= len(kids):
+        return line.startswith(kids)
+    return line[:indent] == kids[:indent] and kids[indent] == ":"
+
+
 def _live_plan(plan: str) -> str:
     """Drop every InMemoryRelation subtree from the plan string. The cached
     build plan embedded under an InMemoryRelation never re-executes, and its
@@ -36,28 +63,46 @@ def _live_plan(plan: str) -> str:
     (Spark's CacheManager keys on plan equality) — counting it made
     fingerprints order-dependent (observed 12 vs 24 shuffles for
     dedup_minhash_pairs depending on sibling-test order). Subtree extent is
-    the structural indentation of the tree rendering."""
+    the structural indentation of the tree rendering.
+
+    r12: a MATERIALIZED cached relation renders its build as
+    "AdaptiveSparkPlan isFinalPlan=true" followed by "== Final Plan ==" /
+    "== Initial Plan ==" sections whose trees restart at the header's
+    depth, dropping the enclosing indent: inside a cached relation built
+    from another cached relation (dedup_prefix_join's prefix_pre over
+    sh_sets) the inner sections DEDENT below the cache boundary. A fresh,
+    unexecuted outer plan is isFinalPlan=false and never renders these
+    headers, so inside a skip each header opens a section whose tree is
+    followed line by line (``_continues``); the section ends at the first
+    line that does not continue it. Live siblings that follow a dedented
+    section resume even when they sit deeper than its header."""
     out: list[str] = []
     skip_indent = -1
+    sections: list[list] = []  # [header indent, header, kids prefix or None]
     for line in plan.splitlines():
         # structural depth = the " "/":" prefix before the "+-"/":-" marker
         # (codegen "*(n)" tags live AFTER the marker, so they don't shift it)
         indent = len(line) - len(line.lstrip(" :"))
         if skip_indent >= 0:
-            if indent > skip_indent:
+            header = next((h for h in _HEADERS if h in line), None)
+            if header is not None:
+                if header == "== Initial Plan ==":
+                    # closes its AQE's first section at this depth, and
+                    # every section still open inside that one
+                    while sections and not (
+                            sections[-1][0] == indent and sections[-1][1] != header):
+                        sections.pop()
+                    if sections:
+                        sections.pop()
+                sections.append([indent, header, None])
                 continue
-            # r12: a MATERIALIZED cached relation renders its build as
-            # "AdaptiveSparkPlan isFinalPlan=true" whose "== Final Plan =="
-            # / "== Initial Plan ==" sections DEDENT below the cache
-            # boundary's indent (first seen when a cached relation was
-            # built from another cached relation: dedup_prefix_join's
-            # prefix_pre over sh_sets leaked 9 dead shuffles into the live
-            # count). A fresh, unexecuted outer plan is isFinalPlan=false
-            # and never renders these headers, so any such header is still
-            # cached-build content: keep skipping, re-anchored at the
-            # header's own (dedented) indent.
-            if "== Final Plan ==" in line or "== Initial Plan ==" in line:
-                skip_indent = min(skip_indent, indent)
+            while sections and sections[-1][2] is not None and not _continues(
+                    sections[-1][2], line, indent):
+                sections.pop()
+            if sections:
+                sections[-1][2] = _kids_prefix(line, indent)
+                continue
+            if indent > skip_indent:
                 continue
             skip_indent = -1
         if "InMemoryRelation" in line:

@@ -357,6 +357,13 @@ def test_window_flagged_thresholds():
     assert flags and "external" in flags[0]
 
 
+def test_window_flagged_counts_iowait():
+    # the docstring's "same thresholds as the whole-run gate": iowait too
+    assert window_flagged({"iowait_share": IDLE_IOWAIT_SHARE_MAX}) == []
+    flags = window_flagged({"iowait_share": IDLE_IOWAIT_SHARE_MAX + 0.01})
+    assert flags and "iowait" in flags[0]
+
+
 def test_sample_query_records_first_sample():
     # decreasing samples (warming caches): min is the last, first is sample 1
     seq = iter([3.0, 1.0, 0.5, 0.5])
@@ -405,6 +412,20 @@ def test_gated_resamples_on_steal_burst_and_ships_clean_pass():
     assert rec["flagged_windows"] and "steal" in rec["flagged_windows"][0][0]
     assert "flagged_and_kept" not in rec
     assert rec["first"] == 5.0  # coldest sample of the attempt, pass 1
+
+
+def test_gated_ships_faster_flagged_pass_marked():
+    # pass 1 flagged but fastest, pass 2 clean but slower: load only
+    # inflates wall time, so the flagged 1.0 is still a valid upper bound
+    # and ships — marked, because the shipped pass was flagged
+    times = iter([1.0, 1.0, 3.0, 3.0])
+    t, rec = sample_query_gated(
+        lambda: next(times), snapshot=_bursty_then_quiet_snapshot(1),
+        loadavg=lambda: (0.0,), max_resamples=2)
+    assert t == 1.0
+    assert rec["flagged_and_kept"] is True
+    assert rec["resamples"] == 1
+    assert len(rec["flagged_windows"]) == 1
 
 
 def test_gated_all_flagged_keeps_min_and_says_so():

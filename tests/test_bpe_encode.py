@@ -9,6 +9,14 @@ from __future__ import annotations
 import hashlib
 
 from drive_health_etl_spark.operators import bpe as B
+from drive_health_etl_spark.operators import fitcache
+
+# the tokenizer family's dataset-cache entries, one name per trained artifact
+_BPE_NAMES = {"bpe_merges", "word_counts", "bpe_subword", "wordpiece", "unigram"}
+
+
+def _reset_bpe_fits() -> None:
+    fitcache.purge(lambda k: k[2] in _BPE_NAMES)
 
 
 def _write_docs(spark, tmp_path, docs: dict[int, str]) -> str:
@@ -29,7 +37,7 @@ def test_bpe_encode_hand_computed(spark, tmp_path):
         3: "z z",
     }
     sf = _write_docs(spark, tmp_path, docs)
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
     merges = B._train_merges(spark, sf)
     assert [(m[1], m[2]) for m in merges][:2] == [("a", "b"), ("a~b", "c")]
 
@@ -64,7 +72,7 @@ def test_bpe_encode_hand_computed(spark, tmp_path):
     assert {r["token"]: r["count"] for r in vrows} == freq
     for r in vrows:
         assert r["is_merged"] == ("~" in r["token"])
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
 
 
 def test_bpe_encode_digest_is_order_sensitive(spark, tmp_path, monkeypatch):
@@ -74,11 +82,11 @@ def test_bpe_encode_digest_is_order_sensitive(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(B, "BPE_ROUNDS", 0)
     docs = {1: "p q r", 2: "r q p"}
     sf = _write_docs(spark, tmp_path, docs)
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
     rows = {r["doc_id"]: r for r in B.text_bpe_encode(spark, sf).collect()}
     assert rows[1]["ids_sum"] == rows[2]["ids_sum"]
     assert rows[1]["ids_sig"] != rows[2]["ids_sig"]
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
 
 
 def test_bpe_encode_no_pairs_and_empty_docs(spark, tmp_path):
@@ -89,7 +97,7 @@ def test_bpe_encode_no_pairs_and_empty_docs(spark, tmp_path):
 
     docs = {1: "solo", 2: "", 3: "duo"}
     sf = _write_docs(spark, tmp_path, docs)
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
     assert B._train_merges(spark, sf) == []
     got = {r["doc_id"]: r for r in B.text_bpe_encode(spark, sf).collect()}
     assert got[2]["n_tokens"] == 0 and got[2]["ids_sum"] == 0
@@ -109,7 +117,7 @@ def test_bpe_encode_no_pairs_and_empty_docs(spark, tmp_path):
             d, g["n_tokens_base"], g["n_tokens"], g["n_merged"],
             g["ids_sig"], g["ids_sum"],
         )
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
 
 
 def _py_bpe(docs: dict[int, str], rounds: int):
@@ -162,7 +170,7 @@ def test_bpe_loop_matches_python_reference_on_random_corpora(spark, tmp_path):
             n_tok = rng.choice([0, 1, rng.randint(2, 30)])
             docs[d] = " ".join(rng.choice(alpha) for _ in range(n_tok))
         sf = _write_docs(spark, tmp_path / f"t{trial}", docs)
-        B._MERGE_CACHE.clear()
+        _reset_bpe_fits()
         want_merges, want_vocab, want_freq, want = _py_bpe(docs, B.BPE_ROUNDS)
         got_merges = [(m[1], m[2]) for m in B._train_merges(spark, sf)]
         assert got_merges == want_merges, f"trial {trial}: merge table diverged"
@@ -175,7 +183,7 @@ def test_bpe_loop_matches_python_reference_on_random_corpora(spark, tmp_path):
         vrows = B.text_bpe_vocab(spark, sf).collect()
         assert {(r["token"], r["id"]) for r in vrows} == set(want_vocab.items())
         assert {r["token"]: r["count"] for r in vrows} == want_freq
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
 
 
 def _py_subword(docs: dict[int, str], rounds: int):
@@ -238,7 +246,7 @@ def test_bpe_subword_matches_python_reference(spark, tmp_path):
     ]
     for trial, docs in enumerate(corpora):
         sf = _write_docs(spark, tmp_path / f"s{trial}", docs)
-        B._MERGE_CACHE.clear()
+        _reset_bpe_fits()
         want_merges, want = _py_subword(docs, B.SUBWORD_ROUNDS)
         got_merges, _sp = B._train_subword(spark, sf)
         assert [tuple(m) for m in got_merges] == want_merges, f"trial {trial}"
@@ -248,7 +256,7 @@ def test_bpe_subword_matches_python_reference(spark, tmp_path):
             for r in B.text_bpe_subword_encode(spark, sf).collect()
         }
         assert got == want, f"trial {trial}: subword encode diverged ({docs})"
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
 
 
 def test_wordpiece_matches_python_reference_and_diverges_from_bpe(spark, tmp_path):
@@ -264,7 +272,7 @@ def test_wordpiece_matches_python_reference_and_diverges_from_bpe(spark, tmp_pat
         3: "aa bb ab ba aa",
     }
     sf = _write_docs(spark, tmp_path / "wp", docs)
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
 
     def py_wordpiece(docs, rounds):
         words: dict[str, int] = {}
@@ -315,7 +323,7 @@ def test_wordpiece_matches_python_reference_and_diverges_from_bpe(spark, tmp_pat
             r["doc_id"], r["n_words"], r["n_chars"], r["n_subwords"],
             r["sub_sig"], r["sub_sum"],
         )
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
 
 
 def test_unigram_hand_computed_and_long_word_splits(spark, tmp_path):
@@ -327,7 +335,7 @@ def test_unigram_hand_computed_and_long_word_splits(spark, tmp_path):
     # single word "ab": seed p uniform over {a, b, ab}; Viterbi picks the
     # single token (1/3 > 1/9); EM converges to p(ab) = 1
     sf = _write_docs(spark, tmp_path / "u1", {1: "ab", 2: "ab"})
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
     rows = B.text_unigram_train(spark, sf).collect()
     assert [(r["token"], r["usage"], r["p"], r["id"]) for r in rows] == [("ab", 2, 1.0, 0)]
     enc = {r["doc_id"]: r for r in B.text_unigram_encode(spark, sf).collect()}
@@ -347,7 +355,7 @@ def test_unigram_hand_computed_and_long_word_splits(spark, tmp_path):
             for d in range(1, rng.randint(2, 5) + 1)
         }
         sf = _write_docs(spark, tmp_path / f"u{trial + 2}", docs)
-        B._MERGE_CACHE.clear()
+        _reset_bpe_fits()
         got = {
             r["doc_id"]: (r["n_words"], r["n_chars"], r["n_subwords"],
                           r["sub_sig"], r["sub_sum"])
@@ -363,7 +371,7 @@ def test_unigram_hand_computed_and_long_word_splits(spark, tmp_path):
             for r in con.execute(B.TEXT_UNIGRAM_ENCODE_SQL).fetchall()
         }
         assert oracle == got, f"trial {trial}: unigram encode diverged ({docs})"
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
 
 
 def test_unigram_oracle_guards_overlong_words(spark, tmp_path):
@@ -374,7 +382,7 @@ def test_unigram_oracle_guards_overlong_words(spark, tmp_path):
 
     long_word = "q" * (B.UNI_WORD_MAX + 1)
     sf = _write_docs(spark, tmp_path, {1: f"ab {long_word}", 2: "ab"})
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()
     rows = B.text_unigram_encode(spark, sf).collect()  # Spark side: fine
     assert {r["doc_id"] for r in rows} == {1, 2}
     con = duckdb.connect()
@@ -383,4 +391,4 @@ def test_unigram_oracle_guards_overlong_words(spark, tmp_path):
     )
     with pytest.raises(Exception, match="exceeds the .*-position DP unroll"):
         con.execute(B.TEXT_UNIGRAM_ENCODE_SQL).fetchall()
-    B._MERGE_CACHE.clear()
+    _reset_bpe_fits()

@@ -65,9 +65,9 @@ def test_lr_oracle_matches_on_degenerate_corpora(spark, tmp_path):
 
     from drive_health_etl_spark.operators.classifier import (
         QUALITY_LR_TRAIN_SQL,
-        _LR_CACHE,
         quality_lr_train,
     )
+    from drive_health_etl_spark.operators import fitcache
     from drive_health_etl_spark.sources.tables import load_table
     from tests.conftest import SF_DIR
 
@@ -88,7 +88,7 @@ def test_lr_oracle_matches_on_degenerate_corpora(spark, tmp_path):
     for label, df in cases.items():
         d = str(tmp_path / label)
         df.coalesce(1).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-        _LR_CACHE.clear()  # force a fresh fit against this corpus
+        fitcache.purge(lambda k: k[2] == "lr_weights")  # fresh fit on this corpus
         got = {r["term"]: r["weight"] for r in quality_lr_train(spark, d).collect()}
         con = duckdb.connect()
         # Spark writes a directory of part files; point DuckDB at the parts
@@ -98,7 +98,7 @@ def test_lr_oracle_matches_on_degenerate_corpora(spark, tmp_path):
         want = dict(con.sql(QUALITY_LR_TRAIN_SQL).fetchall())
         con.close()
         assert got == want == {t: 0.0 for t in got}, (label, got, want)
-    _LR_CACHE.clear()
+    fitcache.purge(lambda k: k[2] == "lr_weights")
 
 
 # --- fastText-style hashed-ngram classifier (NBSVM closed-form) ------------

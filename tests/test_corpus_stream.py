@@ -146,11 +146,8 @@ def test_tokenize_stream_matches_batch_and_replay_idempotent(spark, tmp_path):
     """Tokenize-on-arrival must equal the batch subword encode exactly
     (row-local, batch-invariant), and a REPLAYED batch must not duplicate
     output rows (the idempotent batch=<id> overwrite sink)."""
-    from drive_health_etl_spark.operators.bpe import (
-        _MERGE_CACHE,
-        subword_encoder,
-        text_bpe_subword_encode,
-    )
+    from drive_health_etl_spark.operators import fitcache
+    from drive_health_etl_spark.operators.bpe import subword_encoder, text_bpe_subword_encode
     from drive_health_etl_spark.streaming.corpus_stream import (
         TokenizeStreamConfig,
         run_corpus_tokenize_stream,
@@ -162,7 +159,7 @@ def test_tokenize_stream_matches_batch_and_replay_idempotent(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-    _MERGE_CACHE.clear()
+    fitcache.purge(lambda k: k[2] in ("word_counts", "bpe_subword"))
 
     cfg = TokenizeStreamConfig(
         input_path=f"{sf}/spool",
@@ -194,4 +191,4 @@ def test_tokenize_stream_matches_batch_and_replay_idempotent(spark, tmp_path):
         tuple(r) for r in spark.read.parquet(cfg.output_path).drop("batch").collect()
     )
     assert again == want
-    _MERGE_CACHE.clear()
+    fitcache.purge(lambda k: k[2] in ("word_counts", "bpe_subword"))

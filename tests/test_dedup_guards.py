@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from drive_health_etl_spark.operators import dedup
+from drive_health_etl_spark.operators import dedup, fitcache
 
 
 @pytest.fixture()
@@ -131,7 +131,8 @@ def test_prefix_join_equals_bruteforce_on_synthetic_corpus(spark):
             truth.add((min(ia, ib), max(ia, ib)))
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    D._SUBTREE_CACHE.clear()  # the mock must not see a cached real-corpus fit
+    # the mock must not see a cached fit of an earlier run
+    fitcache.purge(lambda k: k[1] == "synthetic")
     try:
         with mock.patch.object(D, "load_table", lambda _s, _d, _t: df):
             got = {
@@ -139,7 +140,7 @@ def test_prefix_join_equals_bruteforce_on_synthetic_corpus(spark):
                 for r in dedup_prefix_join(spark, "synthetic").collect()
             }
     finally:
-        D._SUBTREE_CACHE.clear()
+        fitcache.purge(lambda k: k[1] == "synthetic")
     assert truth, "fixture must contain engineered near-dup pairs"
     assert got == truth, f"missing={truth - got} extra={got - truth}"
 
@@ -190,14 +191,14 @@ def test_novelty_known_answers(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
     df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    D._SUBTREE_CACHE.clear()
+    fitcache.purge(lambda k: k[1] == str(tmp_path))
     try:
         out = {
             r["doc_id"]: r.asDict()
             for r in D.corpus_novelty(spark, str(tmp_path)).collect()
         }
     finally:
-        D._SUBTREE_CACHE.clear()
+        fitcache.purge(lambda k: k[1] == str(tmp_path))
     assert set(out) == {1, 2, 3}  # doc 4 has no 3-gram shingles
     assert out[1]["novelty"] == 0.0 and out[2]["novelty"] == 0.0
     assert out[3]["novelty"] == 1.0
@@ -463,8 +464,7 @@ def test_suffix_lcs_short_repeat_and_no_repeat(spark, tmp_path):
         [(d, t, "en", "s", len(t)) for d, t in docs2.items()],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    from drive_health_etl_spark.operators import dedup as D
-    D._SUBTREE_CACHE.clear()  # same tmp_path: drop the cached docs relation
+    fitcache.purge(lambda k: k[1] == str(tmp_path))  # same tmp_path, new corpus
     got2 = dedup_suffix_lcs(spark, str(tmp_path)).collect()
     assert [(r["lcs_len"], r["n_repeats"], r["n_docs"]) for r in got2] == [(0, 0, 0)]
 
@@ -547,7 +547,6 @@ def test_suffix_lcs_short_ladder_unpersists_on_success(spark, tmp_path, monkeypa
     deliberate session-scoped fit-cache entry (the docs relation)."""
     from pyspark.sql import DataFrame
 
-    from drive_health_etl_spark.operators import dedup as D
     from drive_health_etl_spark.operators.dedup import dedup_suffix_lcs
 
     persisted: list[int] = []
@@ -569,7 +568,7 @@ def test_suffix_lcs_short_ladder_unpersists_on_success(spark, tmp_path, monkeypa
         {1: "abcXYZ", 2: "qqXYZpp", 3: "zzzz"},   # L* = 3: lo_idx == -1 ladder
         {1: "abXde", 2: "fgXhi"},                  # max_n < 8 one-shot ladder
     ):
-        D._SUBTREE_CACHE.clear()
+        fitcache.purge(lambda k: k[1] == str(tmp_path))
         persisted.clear()
         unpersisted.clear()
         rows = [(d, t, "en", "s", len(t)) for d, t in docs.items()]
@@ -581,4 +580,4 @@ def test_suffix_lcs_short_ladder_unpersists_on_success(spark, tmp_path, monkeypa
         leaked = set(persisted) - set(unpersisted)
         # the only surviving persist is the fit-cached docs relation
         assert len(leaked) <= 1, f"leaked persisted DataFrames: {len(leaked)}"
-    D._SUBTREE_CACHE.clear()
+    fitcache.purge(lambda k: k[1] == str(tmp_path))

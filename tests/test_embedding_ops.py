@@ -84,3 +84,37 @@ def test_semdedup_prune_keeps_farthest_from_centroid(spark, tmp_path):
     # priority sanity: the survivor's centroid cosine is the clique minimum
     clique = [got[v]["cent_cos"] for v in (0, 16, 17, 18)]
     assert got[18]["cent_cos"] == min(clique)
+
+
+def test_adc_lut_cache_matches_uncached_build_for_dataset_query(spark, sf_dir):
+    """The cached ADC lookup table equals a fresh, uncached build for the
+    dataset's own query id (MAX vec_id) and freshly trained codebooks. The
+    LUT resolves both inputs itself, so its per-dataset key cannot hand
+    back a table built for another query. The reference repeats the
+    engine's left-to-right folds, so the match is exact."""
+    import pyspark.sql.functions as F
+
+    from drive_health_etl_spark.operators.similarity import (
+        PQ_SUB,
+        _adc_lut_cached,
+        pq_codebooks,
+    )
+    from drive_health_etl_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    )
+    cached = {(r["m"], r["code"]): r["d"] for r in _adc_lut_cached(spark, sf_dir, emb).collect()}
+
+    def dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    q = emb.orderBy(F.col("vec_id").desc()).first()["e"]
+    want = {}
+    for m, code, cv in pq_codebooks(emb):
+        sv = q[m * PQ_SUB:(m + 1) * PQ_SUB]
+        want[(m, code)] = dot(sv, sv) - 2.0 * dot(sv, cv) + dot(cv, cv)
+    assert cached == want

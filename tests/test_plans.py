@@ -483,8 +483,11 @@ BENCH_PLAN_FINGERPRINTS = {
         # full on BOTH self-join sides: 2x freq shuffle + 2x rank window).
         # The live plan is candidate BHJ + distinct agg + sketch/verify
         # joins over InMemoryTableScans; joins broadcast by cached-relation
-        # stats at test scale and stay equi-keyed at cluster scale.
-        "broadcast_exchange": 4,
+        # stats at test scale and stay equi-keyed at cluster scale. Five
+        # broadcasts for five BHJs: the fifth sits after a nested cached
+        # build whose dedented sections the live-plan filter used to let
+        # swallow it.
+        "broadcast_exchange": 5,
         "BroadcastHashJoin": 5,
     },
     # r12: score relations broadcast into the edge joins below the node
@@ -681,3 +684,73 @@ def test_live_plan_skips_nested_materialized_cache_rendering():
     assert "ResultQueryStage" not in live
     assert "BroadcastExchange" in live
     assert "rangepartitioning" in live
+
+
+def test_live_plan_keeps_live_siblings_after_dedented_cache_sections():
+    """A cached relation built from another cached relation renders the
+    inner build's '== Final Plan ==' / '== Initial Plan ==' sections (and
+    their trees) dedented BELOW the outer cache boundary. The skip must
+    cover exactly those section trees: a live sibling that follows them at
+    an indent between the dedented header and the cache boundary is live
+    (here the broadcast side of the join, indent 27 vs headers at 15/18),
+    while dead build lines at that same depth band are not. The rendering
+    follows Spark's TreeNode/AdaptiveSparkPlanExec tree-string rules."""
+    from drive_health_etl_spark.plans.fingerprint import _live_plan
+
+    plan = "\n".join([
+        "AdaptiveSparkPlan isFinalPlan=false",
+        "+- SortMergeJoin [k], [j], Inner",
+        "   :- Sort [k ASC]",
+        "   :  +- Exchange hashpartitioning(k, 8)",
+        "   :     +- Project [k5]",
+        "   :        +- Project [k4]",
+        "   :           +- Project [k3]",
+        "   :              +- Project [k2]",
+        "   :                 +- Project [k1]",
+        "   :                    +- Project [k0]",
+        "   :                       +- BroadcastHashJoin [k], [z], Inner, BuildRight",
+        "   :                          :- InMemoryTableScan [k]",
+        "   :                          :     +- InMemoryRelation [k], StorageLevel(memory)",
+        "   :                          :           +- AdaptiveSparkPlan isFinalPlan=true",
+        "                                             +- == Final Plan ==",
+        "                                                ResultQueryStage 1",
+        "                                                +- Exchange hashpartitioning(c, 8)",
+        "                                                   +- InMemoryTableScan [s]",
+        "                                                         +- InMemoryRelation [s], StorageLevel(memory)",
+        "                                                               +- AdaptiveSparkPlan isFinalPlan=true",
+        "                  +- == Final Plan ==",
+        "                     ResultQueryStage 0",
+        "                     +- Exchange hashpartitioning(s, 8)",
+        "                        +- Scan parquet s",
+        "                  +- == Initial Plan ==",
+        "                     Exchange hashpartitioning(s, 8)",
+        "                     +- Scan parquet s",
+        "                                             +- == Initial Plan ==",
+        "                                                Exchange hashpartitioning(c, 8)",
+        "                                                +- InMemoryTableScan [s]",
+        "                                                      +- InMemoryRelation [s], StorageLevel(memory)",
+        "                                                            +- AdaptiveSparkPlan isFinalPlan=true",
+        "               +- == Final Plan ==",
+        "                  ResultQueryStage 0",
+        "                  +- Exchange hashpartitioning(s, 8)",
+        "                     +- Scan parquet s",
+        "               +- == Initial Plan ==",
+        "                  Exchange hashpartitioning(s, 8)",
+        "                  +- Scan parquet s",
+        "   :                          +- BroadcastExchange HashedRelationBroadcastMode",
+        "   :                             +- Exchange rangepartitioning(z, 8)",
+        "   :                                +- Scan z",
+        "   +- Sort [j ASC]",
+        "      +- Exchange SinglePartition",
+        "         +- Scan j",
+    ])
+    live = _live_plan(plan)
+    assert "hashpartitioning(c, 8)" not in live  # outer cached build: dead
+    assert "hashpartitioning(s, 8)" not in live  # inner cached build: dead
+    assert "ResultQueryStage" not in live and "== " not in live
+    assert live.count("Exchange hashpartitioning(k, 8)") == 1
+    assert live.count("BroadcastExchange") == 1
+    assert live.count("Exchange rangepartitioning(z, 8)") == 1
+    assert live.count("Scan z") == 1
+    assert live.count("Exchange SinglePartition") == 1
+    assert live.count("InMemoryTableScan") == 1  # the live scan only

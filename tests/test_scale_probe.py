@@ -97,18 +97,23 @@ def test_carried_annotation_roundtrips_through_parse():
     assert rows2["graph_pagerank"].startswith(GOOD_ROW)
 
 
-def test_purge_package_caches_clears_cache_dicts():
+def test_purge_package_caches_clears_cache_dicts(monkeypatch):
     """Recycling must drop per-application cache entries (they pin py4j
-    references of dead SparkContexts) — any module-level *_CACHE dict in
-    the package is the convention."""
-    import drive_health_etl_spark.operators.dedup as D
+    references of dead SparkContexts): the package's one dataset cache is
+    emptied, without unpersisting handles of the dead session. A stand-in
+    cache keeps the suite's live entries out of the purge."""
+    from drive_health_etl_spark.operators import fitcache
     from scale_probe import _purge_package_caches
 
-    D._SUBTREE_CACHE["sentinel"] = "x"
-    D._VOCAB_SIZE_CACHE[("app", "sf")] = 7
+    class DeadHandle:
+        def unpersist(self):
+            raise AssertionError("recycle must not unpersist")
+
+    monkeypatch.setattr(fitcache, "_CACHE", fitcache.FitCache())
+    fitcache._CACHE.get_or_build(("app", "sf", "sentinel"), DeadHandle)
+    fitcache._CACHE.get_or_build(("app", "sf", "vocab_size"), lambda: 7)
     _purge_package_caches()
-    assert D._SUBTREE_CACHE == {}
-    assert D._VOCAB_SIZE_CACHE == {}
+    assert fitcache._CACHE == {}
 
 
 def test_deep_only_names_are_validated():

@@ -441,19 +441,12 @@ def _run(spark, name: str, sf_dir: str) -> float:
 
 
 def _purge_package_caches() -> None:
-    """Drop per-application cache entries across the package so a recycled
-    session doesn't pin py4j references (and therefore JVM objects) of dead
-    SparkContexts — module-level dicts named *_CACHE are the convention."""
-    import sys as _sys
+    """Drop the package's per-dataset cache entries so a recycled session
+    doesn't pin py4j references (and therefore JVM objects) of dead
+    SparkContexts."""
+    from drive_health_etl_spark.operators import fitcache
 
-    for mod_name, mod in list(_sys.modules.items()):
-        if not mod_name.startswith("drive_health_etl_spark"):
-            continue
-        for attr in dir(mod):
-            if attr.endswith("_CACHE"):
-                obj = getattr(mod, attr, None)
-                if isinstance(obj, dict):
-                    obj.clear()
+    fitcache.clear()
 
 
 def _fresh_session(cpus: int):

@@ -15,8 +15,9 @@ enter it at all. Three groups stay ORDERED/serial:
 
 1. warm-up compares that populate the shared fit caches (minhash subtree,
    k-means centroids, PQ codebooks) run BEFORE the pool so pool workers
-   never duplicate a fit — but the five warm-ups build five DISJOINT
-   caches, so they run concurrently with each other on a small pool
+   never duplicate a fit — but the five warm-ups build DISJOINT entries
+   of the one dataset cache (builds run outside its lock), so they run
+   concurrently with each other on a small pool
    (r9: 30.8s serial -> ~max of the five; the serialization that matters
    is warmups-before-pool, not warmup-vs-warmup),
 2. streaming / write-side-effect queries (st_*, lake_*, sdp_*, rollups,
@@ -48,14 +49,14 @@ TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
-# Compares that build the shared per-session fit caches; run first, alone,
-# so the pool never races two identical Lloyd fits.
+# Compares that build the shared per-session fits; run first, alone, so the
+# pool never races two identical Lloyd fits.
 WARMUP = [
-    "dedup_minhash_pairs",  # minhash subtree cache
-    "sim_ann_ivf",  # IVF centroid cache
-    "emb_pq_stats",  # PQ codebook cache
-    "quality_lr_train",  # LR weight cache (else train+eval race duplicate fits)
-    "graph_pagerank",  # weighted-edge cache
+    "dedup_minhash_pairs",  # minhash subtree
+    "sim_ann_ivf",  # IVF centroids
+    "emb_pq_stats",  # PQ codebooks
+    "quality_lr_train",  # LR weights (else train+eval race duplicate fits)
+    "graph_pagerank",  # weighted edges
 ]
 
 # Streaming / write-side-effect prefixes stay serial (own temp dirs and
@@ -71,7 +72,7 @@ STREAM_POOL_WORKERS = 5  # the write-side group: each query owns its temp
 # streams in one session; 3 workers cut the 40s serial tail to ~15s, and
 # r9 raised it to 5 (the group grew to 23 queries / ~70s wall at 3 — the
 # long pole st_stream_stream_join bounds the floor).
-WARMUP_POOL_WORKERS = 5  # the five warm-ups build five DISJOINT fit caches
+WARMUP_POOL_WORKERS = 5  # the five warm-ups build DISJOINT cache entries
 
 
 def _is_serial(name: str) -> bool:

@@ -20,6 +20,8 @@ Stage map (reference file:line -> function here):
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import datetime, timedelta
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -238,8 +240,14 @@ def write_warehouse(df: DataFrame, path: str, mode: str = "append") -> None:
 
 def retention_expire(spark, path: str, ttl_days: int = 365) -> list[str]:
     """Partition-TTL job (``README.md:88``: 1y expiry). Returns partitions
-    that an external cleaner should drop — pure metadata, no data scan."""
-    df = spark.read.parquet(path)
-    cutoff = F.date_sub(F.current_date(), ttl_days)
-    old = df.select("event_date").distinct().filter(F.col("event_date") < cutoff)
-    return [r["event_date"].isoformat() for r in old.collect()]
+    that an external cleaner should drop — pure metadata, no data scan:
+    the partitions come from the file index's ``event_date=`` path
+    segments (a declared schema skips schema inference), so no Spark job
+    runs."""
+    files = spark.read.schema("event_date date").parquet(path).inputFiles()
+    today = datetime.now(ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))).date()
+    cutoff = (today - timedelta(days=ttl_days)).isoformat()
+    days = {
+        seg.split("=", 1)[1] for f in files for seg in f.split("/") if seg.startswith("event_date=")
+    }
+    return sorted(d for d in days if d < cutoff)

@@ -10,6 +10,19 @@ Local testing runs on ``local[N]`` but every config here is chosen for the
 - Arrow enabled for the one pandas_udf boundary (phone normalization).
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle and are cluster-invariant.
+- File splits sized for small inputs, with the per-file open cost kept at
+  Spark's own 1:32 ratio to the split size (``SPLIT_BYTES``). The split
+  size alone would leave the default 4 MB open cost, which makes every
+  small file its own scan task; the streamed warehouse is hundreds of
+  small appended files, so its reads would cost per file, not per byte.
+- Per-call Python call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). When on, every
+  PySpark Column/DataFrame call makes about five extra py4j round trips and
+  a Python stack walk only to enrich error messages; a micro-batch's plan
+  build makes ~1,750 such calls. It is a static conf, so it can only be
+  re-enabled at launch: ``get_spark`` leaves it alone when the launch
+  arguments name it, e.g. ``PYSPARK_SUBMIT_ARGS="--conf
+  spark.python.sql.dataFrameDebugging.enabled=true pyspark-shell"``.
 """
 
 from __future__ import annotations
@@ -20,6 +33,12 @@ import threading
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Input split size (spark.sql.files.maxPartitionBytes). The open cost is
+# derived from it so the two cannot drift apart.
+SPLIT_BYTES = 4 * 1024 * 1024
+# Per-call Python call-site capture (static conf); off, see above.
+CALL_SITE_CONF = "spark.python.sql.dataFrameDebugging.enabled"
 
 _SHIPPED_APP_IDS: set[str] = set()
 
@@ -150,12 +169,21 @@ def get_spark(app_name: str = "drive-health-etl-spark", cpus: int | None = None)
         # default 128 MB split size would put each whole table in ONE input
         # partition, serializing every narrow stage. 4 MB splits restore
         # parallelism locally; on a real cluster inputs are many files and
-        # this knob is irrelevant.
-        .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
+        # this knob is irrelevant. The open cost (what each file counts for
+        # when files are packed into a split) must shrink with it: at its
+        # 4 MB default every small file of the streamed warehouse, the DLQ
+        # or a spool would be a task of its own. Spark's defaults are
+        # 128 MB : 4 MB, so keep that 32:1 ratio.
+        .config("spark.sql.files.maxPartitionBytes", str(SPLIT_BYTES))
+        .config("spark.sql.files.openCostInBytes", str(SPLIT_BYTES // 32))
         # Driver testdata stores TIMESTAMP(NANOS) which Spark's vectorized
         # reader rejects; read as long and convert in the loader (tables.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    # Builder values override launch --conf values, so set call-site
+    # capture only when the launch arguments leave it unset.
+    if CALL_SITE_CONF not in os.environ.get("PYSPARK_SUBMIT_ARGS", ""):
+        builder = builder.config(CALL_SITE_CONF, "false")
     return builder.getOrCreate()

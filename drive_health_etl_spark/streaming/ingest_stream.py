@@ -80,10 +80,16 @@ def dedup_against_warehouse(
       bytes SHUFFLED: zero.
     - **large batch** (availableNow backlog drain): plain shuffle anti-join;
       at that size the shuffle is amortized over the rows.
+
+    The warehouse is read once, with a declared schema of just the two
+    columns used here, so a micro-batch runs no schema-inference job. A
+    Hadoop FileSystem existence check guards the read (warehouses are not
+    always local): only a missing path means "first batch, nothing to
+    dedup against". Any other read error (a corrupt footer, a permission
+    error) fails the batch rather than letting duplicates land.
     """
-    try:
-        spark.read.parquet(warehouse_path)
-    except Exception:
+    path = spark._jvm.org.apache.hadoop.fs.Path(warehouse_path)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return rows  # first batch: warehouse doesn't exist yet
     stats = rows.agg(
         F.min("event_date").alias("lo"),
@@ -93,7 +99,8 @@ def dedup_against_warehouse(
     if stats["lo"] is None:
         return rows  # empty batch
     wh_keys = (
-        spark.read.parquet(warehouse_path)
+        spark.read.schema("idempotency_key string, event_date date")
+        .parquet(warehouse_path)
         .filter(
             (F.col("event_date") >= F.date_sub(F.lit(stats["lo"]), horizon_days))
             & (F.col("event_date") <= F.date_add(F.lit(stats["hi"]), horizon_days))

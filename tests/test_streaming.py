@@ -221,3 +221,44 @@ def test_dedup_against_warehouse_strategies(spark, tmp_path):
 
     # first batch: warehouse absent -> passthrough
     assert dedup_against_warehouse(spark, str(tmp_path / "missing"), batch).count() == 4
+
+
+def test_dedup_against_unreadable_warehouse_raises(spark, tmp_path):
+    """Only a MISSING warehouse means "first batch, nothing to dedup
+    against". A warehouse the dedup cannot read (here a part file that is
+    not parquet, as a corrupt footer would be) must fail the batch:
+    passing the rows through unfiltered would let duplicates land."""
+    from drive_health_etl_spark.streaming.ingest_stream import dedup_against_warehouse
+
+    part = tmp_path / "wh" / "event_date=2026-01-01"
+    part.mkdir(parents=True)
+    (part / "part-00000.parquet").write_bytes(b"not a parquet file")
+    batch = spark.createDataFrame(
+        [("k1", "2026-01-01"), ("new1", "2026-01-02")],
+        "idempotency_key string, event_date string",
+    ).withColumn("event_date", F.to_date("event_date"))
+    with pytest.raises(Exception, match="(?i)parquet"):
+        dedup_against_warehouse(spark, str(tmp_path / "wh"), batch).collect()
+
+
+def test_micro_batch_job_count(spark, paths):
+    """Per-micro-batch job budget of the foreachBatch sink. The measured
+    call is a redelivery of the whole fixture corpus (smoke, duplicates,
+    malformed) against a warehouse the first call wrote, so it runs every
+    branch: ingest, dedup against existing keys, warehouse append and DLQ
+    append. When the dedup inferred the warehouse schema this call ran 14
+    jobs, two of them ``parquet at …`` schema-inference jobs (one in a
+    bare existence probe); the declared two-column read runs neither."""
+    from drive_health_etl_spark.streaming.ingest_stream import _process_batch
+    from tests.conftest import group_jobs
+
+    batch = envelopes.fixture_df(spark, envelopes.fixture_messages())
+    sink = _process_batch(paths)
+    sink(batch, 0)
+    jobs = group_jobs(spark, "micro-batch-job-count", lambda: sink(batch, 1))
+    inference = [j for j in jobs if not j["sql"] and any(n.startswith("parquet at ") for n in j["stages"])]
+    assert inference == [], jobs
+    assert len(jobs) <= 14 - 2, jobs
+    # redelivery: nothing new reached the warehouse
+    keys = [r[0] for r in spark.read.parquet(paths.warehouse_path).select("idempotency_key").collect()]
+    assert len(keys) == len(set(keys)) == 6

@@ -10,6 +10,7 @@ from drive_health_etl_spark.operators.ingest import ingest, retention_expire, wr
 from drive_health_etl_spark.plans.extended import a5_approx_stats
 from drive_health_etl_spark.sources import envelopes
 from drive_health_etl_spark.sources.tables import load_table
+from tests.conftest import group_jobs
 
 
 def test_partitioned_write_and_pruning(spark, sf_dir, tmp_path):
@@ -35,6 +36,12 @@ def test_retention_ttl(spark, sf_dir, tmp_path):
     # events are dated 2024-01; far older than any sane TTL from 'today'
     assert len(retention_expire(spark, out, ttl_days=36500)) == 0
     assert len(retention_expire(spark, out, ttl_days=1)) == 30
+    # metadata only: the partitions come from the file listing, no job runs
+    expired = []
+    jobs = group_jobs(spark, "retention-ttl", lambda: expired.extend(retention_expire(spark, out, ttl_days=1)))
+    assert jobs == []
+    days = spark.read.parquet(out).select("event_date").distinct().collect()
+    assert expired == sorted(r[0].isoformat() for r in days)
 
 
 def test_approx_stats_accuracy(spark, sf_dir):

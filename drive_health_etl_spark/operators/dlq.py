@@ -111,7 +111,7 @@ def run_replay_job(
     (no-loss, ``docs/dlq-replay.md:13``); batch-side the equivalent is: the
     DLQ dir is rewritten LAST, only after warehouse/parking appends land.
     """
-    from drive_health_etl_spark.operators.ingest import ingest
+    from drive_health_etl_spark.operators.ingest import ingest, write_warehouse
 
     dlq = spark.read.parquet(dlq_path)
     routed = route_dlq(dlq, max_attempts=max_attempts)
@@ -139,12 +139,7 @@ def run_replay_job(
     n_recovered = recovered.count()
 
     if n_recovered:
-        (
-            recovered
-            .write.mode("append")
-            .partitionBy("event_date")
-            .parquet(warehouse_path)
-        )
+        write_warehouse(recovered, warehouse_path)
     if n_parked:
         routed.parked.write.mode("append").parquet(parking_path)
 

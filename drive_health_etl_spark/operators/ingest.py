@@ -226,12 +226,15 @@ def write_warehouse(df: DataFrame, path: str, mode: str = "append") -> None:
     Day-partition on event time (-> partition pruning for
     ``DATE(occurred_at) = X`` scans) and sort within partitions by
     (tenant_id, event_type) (-> parquet row-group min/max skipping, the
-    BigQuery clustering analog).
+    BigQuery clustering analog). The sort leads with ``event_date``: the
+    partitioned writer needs its input ordered by the partition column, and
+    sorting by (tenant_id, event_type) alone made it re-sort by date only,
+    which left the files unclustered.
     """
     (
         df.withColumn("event_date", F.to_date("occurred_at"))
         .repartition("event_date")
-        .sortWithinPartitions("tenant_id", "event_type")
+        .sortWithinPartitions("event_date", "tenant_id", "event_type")
         .write.mode(mode)
         .partitionBy("event_date")
         .parquet(path)

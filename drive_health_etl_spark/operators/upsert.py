@@ -28,20 +28,10 @@ import os
 import time
 from contextlib import contextmanager
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from drive_health_etl_spark.session import spark_conf
-
-
-def _is_missing_path(e: AnalysisException) -> bool:
-    cls = ""
-    try:
-        cls = e.getCondition() or ""
-    except Exception:
-        pass
-    return "PATH_NOT_FOUND" in cls or "PATH_NOT_FOUND" in str(e)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -121,26 +111,15 @@ def merge_upsert(
         if is_empty:
             merged = updates
         else:
-            try:
-                target = spark.read.parquet(target_path)
-            except AnalysisException as e:
-                # ONLY a missing target means "first write". Any other
-                # failure (corrupt footer, permission, schema) must
-                # propagate — treating it as first-write would overwrite
-                # touched partitions with update rows alone, silently
-                # dropping every pre-existing unmatched row.
-                if not _is_missing_path(e):
-                    raise
-                merged = updates
-            else:
-                existing = target.filter(F.col(partition_col).isin(touched))
-                keep = existing.join(updates.select(key).distinct(), key, "left_anti")
-                merged = keep.unionByName(updates.select(*keep.columns))
-                # The merged plan reads the very files the overwrite will
-                # replace — materialize it (break lineage) before writing,
-                # else the scan races the delete (FAILED_READ_FILE). Cost:
-                # the touched partitions only.
-                merged = merged.localCheckpoint(eager=True)
+            target = spark.read.parquet(target_path)
+            existing = target.filter(F.col(partition_col).isin(touched))
+            keep = existing.join(updates.select(key).distinct(), key, "left_anti")
+            merged = keep.unionByName(updates.select(*keep.columns))
+            # The merged plan reads the very files the overwrite will
+            # replace — materialize it (break lineage) before writing,
+            # else the scan races the delete (FAILED_READ_FILE). Cost:
+            # the touched partitions only.
+            merged = merged.localCheckpoint(eager=True)
         with spark_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
             (
                 merged.repartition(partition_col)

@@ -132,7 +132,7 @@ ORDER BY tenant_id, event_type
 """
 
 
-from drive_health_etl_spark.session import shuffle_partitions as _shuffle_partitions
+from drive_health_etl_spark.streaming.spool import drain, scratch, spool
 
 
 def st_stateful_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,48 +140,20 @@ def st_stateful_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion: per-user running counters accumulated across TWO micro-batches
     (maxFilesPerTrigger=1), final snapshot per user. The oracle is the plain
     batch aggregate — state accumulation across batches must converge to it."""
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from drive_health_etl_spark.sources.tables import load_table
     from drive_health_etl_spark.streaming.stateful import stateful_user_counters
 
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    src = tempfile.mkdtemp(prefix="dhe_stateful_src_")
-    events.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    events.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(src)
-    )
-    sink = f"stateful_out_{uuid.uuid4().hex[:8]}"
-    # 8 shuffle partitions: stateful-streaming cost at this scale is per-
-    # partition state-store + Python-worker setup, not data volume (32
-    # partitions measured 10-15x slower on a cold session); results are
-    # partitioning-independent.
-    with _shuffle_partitions(spark, 8):
-        q = (
-            stateful_user_counters(stream)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    import shutil
-
-    shutil.rmtree(src, ignore_errors=True)  # snapshots live in the memory sink now
+    with scratch(spark, "dhe_stateful_") as tmp:
+        stream = spool(events, F.col("event_id") % 2, f"{tmp}/src")
+        q = drain(stateful_user_counters(stream), tmp)
     return spark.sql(
         f"""
         SELECT user_id, n_events, ROUND(total_value, 6) AS total_value FROM (
           SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY n_events DESC) AS rn
-          FROM {sink}
+          FROM {q.name}
         ) WHERE rn = 1
         """
     )
@@ -192,38 +164,15 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same user, purchase within 30 min after the click) with both sides as
     watermarked streams. One availableNow batch so no row is beyond the
     watermark when matched; the oracle is the equivalent batch range join."""
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from drive_health_etl_spark.sources.tables import load_table
     from drive_health_etl_spark.streaming.joins import purchase_attribution
 
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "event_type")
-    src = tempfile.mkdtemp(prefix="dhe_ssj_src_")
-    events.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(events.schema).format("parquet").load(src)
-    clicks = stream.filter(F.col("event_type") == "click")
-    purchases = stream.filter(F.col("event_type") == "purchase")
-    sink = f"ssj_out_{uuid.uuid4().hex[:8]}"
-    # 8 shuffle partitions: stateful-streaming cost at this scale is per-
-    # partition state-store + Python-worker setup, not data volume (32
-    # partitions measured 10-15x slower on a cold session); results are
-    # partitioning-independent.
-    with _shuffle_partitions(spark, 8):
-        q = (
-            purchase_attribution(clicks, purchases)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    return spark.sql(f"SELECT click_id, purchase_id, user_id, lag_us FROM {sink}")
+    with scratch(spark, "dhe_ssj_") as tmp:
+        q = drain(purchase_attribution(spool(events, F.lit(0), f"{tmp}/src")), tmp)
+    return spark.sql(f"SELECT click_id, purchase_id, user_id, lag_us FROM {q.name}")
 
 
 def st_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -237,46 +186,35 @@ def st_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     - 1s - 30min. This pins the state-eviction semantics every outer
     stream-stream user depends on (inner results stream out immediately;
     outer nulls wait for the watermark)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from drive_health_etl_spark.sources.tables import load_table
 
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "event_type")
-    src = tempfile.mkdtemp(prefix="dhe_ssl_src_")
-    events.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(events.schema).format("parquet").load(src)
-    clicks = stream.filter(F.col("event_type") == "click").withWatermark("ts", "1 second").alias("c")
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase").withWatermark("ts", "1 second").alias("p")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c.user_id") == F.col("p.user_id"))
-        & (F.col("p.ts") >= F.col("c.ts"))
-        & (F.col("p.ts") <= F.col("c.ts") + F.expr("INTERVAL 30 MINUTES")),
-        "left_outer",
-    ).select(
-        F.col("c.event_id").alias("click_id"),
-        F.col("p.event_id").alias("purchase_id"),
-        F.col("c.user_id").alias("user_id"),
-        (F.unix_micros(F.col("p.ts")) - F.unix_micros(F.col("c.ts"))).alias("lag_us"),
-    )
-    sink = f"ssl_out_{uuid.uuid4().hex[:8]}"
-    with _shuffle_partitions(spark, 8):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    with scratch(spark, "dhe_ssl_") as tmp:
+        stream = spool(events, F.lit(0), f"{tmp}/src")
+        clicks = (
+            stream.filter(F.col("event_type") == "click").withWatermark("ts", "1 second").alias("c")
         )
-        q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    return spark.sql(f"SELECT click_id, purchase_id, user_id, lag_us FROM {sink}")
+        purchases = (
+            stream.filter(F.col("event_type") == "purchase")
+            .withWatermark("ts", "1 second")
+            .alias("p")
+        )
+        joined = clicks.join(
+            purchases,
+            (F.col("c.user_id") == F.col("p.user_id"))
+            & (F.col("p.ts") >= F.col("c.ts"))
+            & (F.col("p.ts") <= F.col("c.ts") + F.expr("INTERVAL 30 MINUTES")),
+            "left_outer",
+        ).select(
+            F.col("c.event_id").alias("click_id"),
+            F.col("p.event_id").alias("purchase_id"),
+            F.col("c.user_id").alias("user_id"),
+            (F.unix_micros(F.col("p.ts")) - F.unix_micros(F.col("c.ts"))).alias("lag_us"),
+        )
+        q = drain(joined, tmp)
+    return spark.sql(f"SELECT click_id, purchase_id, user_id, lag_us FROM {q.name}")
 
 
 ST_STREAM_STREAM_LEFT_SQL = """
@@ -305,32 +243,15 @@ def st_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded state (the 100 TB-stream answer to unbounded dedup state). The
     duplicates ride in one availableNow batch so none can be dropped as
     late; the oracle is plain DISTINCT."""
-    import shutil
-    import tempfile
-    import uuid
+    from pyspark.sql import functions as F
 
     from drive_health_etl_spark.sources.tables import load_table
+    from drive_health_etl_spark.streaming.stateful import dedup_events
 
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    src = tempfile.mkdtemp(prefix="dhe_dedup_src_")
-    events.union(events).coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(events.schema).format("parquet").load(src)
-    sink = f"dedup_out_{uuid.uuid4().hex[:8]}"
-    with _shuffle_partitions(spark, 8):
-        q = (
-            stream.withWatermark("ts", "1 hour")
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    return spark.sql(f"SELECT event_id, user_id, ts, value FROM {sink}")
+    events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
+    with scratch(spark, "dhe_dedup_") as tmp:
+        q = drain(dedup_events(spool(events.union(events), F.lit(0), f"{tmp}/src")), tmp)
+    return spark.sql(f"SELECT event_id, user_id, ts, value FROM {q.name}")
 
 
 ST_STREAM_DEDUP_SQL = """
@@ -349,10 +270,6 @@ def st_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     static side is re-planned per micro-batch by Structured Streaming, which
     is exactly how dim refreshes become visible mid-stream at scale; with
     one availableNow batch the oracle is the plain batch join."""
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from drive_health_etl_spark.sources.tables import load_table
@@ -361,34 +278,17 @@ def st_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts", "event_type", "value"
     )
     profile = events.groupBy("user_id").agg(F.count("*").alias("n_total"))
-
-    src = tempfile.mkdtemp(prefix="dhe_sse_src_")
-    events.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(events.schema).format("parquet").load(src)
-    enriched = stream.join(F.broadcast(profile), "user_id")
-    agg = enriched.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.sum(
-            (F.col("n_total") >= STREAM_STATIC_HEAVY_MIN).cast("long")
-        ).alias("n_heavy"),
-        F.round(
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 6
-        ).alias("sum_value"),
-    )
-    sink = f"sse_out_{uuid.uuid4().hex[:8]}"
-    with _shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    with scratch(spark, "dhe_sse_") as tmp:
+        enriched = spool(events, F.lit(0), f"{tmp}/src").join(F.broadcast(profile), "user_id")
+        agg = enriched.groupBy("event_type").agg(
+            F.count("*").alias("n_events"),
+            F.sum((F.col("n_total") >= STREAM_STATIC_HEAVY_MIN).cast("long")).alias("n_heavy"),
+            F.round(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 6).alias(
+                "sum_value"
+            ),
         )
-        q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    return spark.sql(
-        f"SELECT event_type, n_events, n_heavy, sum_value FROM {sink}"
-    )
+        q = drain(agg, tmp, output_mode="complete")
+    return spark.sql(f"SELECT event_type, n_events, n_heavy, sum_value FROM {q.name}")
 
 
 ST_STREAM_STATIC_SQL = f"""
@@ -427,9 +327,6 @@ def st_lake_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The final table state must equal the single batch MERGE (the change
     sets are key-disjoint, so batch boundaries cannot change the result —
     that invariance is exactly what the oracle pins)."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from drive_health_etl_spark.operators.snapshots import (
@@ -458,19 +355,11 @@ def st_lake_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    table = tempfile.mkdtemp(prefix="dhe_stmerge_tbl_")
-    shutil.rmtree(table, ignore_errors=True)
-    src = tempfile.mkdtemp(prefix="dhe_stmerge_src_")
-    try:
+    with scratch(spark, "dhe_stmerge_") as tmp:
+        table = f"{tmp}/table"
         commit_snapshot(events, table, mode="append")
-        updates.coalesce(1).write.mode("append").parquet(src)
-        dels_ins.coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(updates.schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(src)
-        )
+        # micro-batch 0 = the updates, 1 = the deletes + inserts
+        stream = spool(updates.unionByName(dels_ins), (F.col("op") != "U").cast("int"), f"{tmp}/src")
 
         def _apply(batch, _id):
             if batch.isEmpty():
@@ -478,17 +367,8 @@ def st_lake_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = merge_into(read_snapshot(spark, table), batch, key="event_id")
             commit_snapshot(merged, table, mode="overwrite")
 
-        with _shuffle_partitions(spark, 8):
-            q = (
-                stream.writeStream.foreachBatch(_apply)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(stream, tmp, foreach_batch=_apply)
         return read_snapshot(spark, table).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.rmtree(src, ignore_errors=True)
 
 
 from drive_health_etl_spark.streaming.corpus_stream import (

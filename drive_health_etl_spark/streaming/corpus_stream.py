@@ -171,32 +171,22 @@ def st_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, and return the accepted doc_ids. The oracle replays the same
     greedy two-phase semantics in SQL (in-batch lowest-id-wins per band
     bucket, then cross-batch band anti-join against batch-1 survivors)."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from drive_health_etl_spark.session import shuffle_partitions
     from drive_health_etl_spark.sources.tables import load_table
+    from drive_health_etl_spark.streaming.spool import scratch, spool
 
     docs = load_table(spark, sf_dir, "documents")
     half = docs.count() // 2  # dense 0..n-1 ids; metadata-scale driver value
-    base = tempfile.mkdtemp(prefix=f"dhe_corpus_stream_{uuid.uuid4().hex[:8]}_")
-    src = f"{base}/spool"
-    docs.filter(F.col("doc_id") < half).coalesce(1).write.mode("append").parquet(src)
-    docs.filter(F.col("doc_id") >= half).coalesce(1).write.mode("append").parquet(src)
-    cfg = CorpusStreamConfig(
-        input_path=src,
-        corpus_path=f"{base}/corpus",
-        store_path=f"{base}/store",
-        checkpoint_path=f"{base}/ckpt",
-    )
-    with shuffle_partitions(spark, 8):
-        q = run_corpus_dedup_stream(spark, cfg)
-        q.awaitTermination()
-    out = spark.read.parquet(cfg.corpus_path).select("doc_id", "source")
-    out = out.localCheckpoint(eager=True)  # survive the rmtree below
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    with scratch(spark, "dhe_corpus_stream_") as base:
+        spool(docs, (F.col("doc_id") >= half).cast("int"), f"{base}/spool")
+        cfg = CorpusStreamConfig(
+            input_path=f"{base}/spool",
+            corpus_path=f"{base}/corpus",
+            store_path=f"{base}/store",
+            checkpoint_path=f"{base}/ckpt",
+        )
+        run_corpus_dedup_stream(spark, cfg).awaitTermination()
+        # survive the scratch dir's removal
+        return spark.read.parquet(cfg.corpus_path).select("doc_id", "source").localCheckpoint()
 
 
 def _st_corpus_dedup_sql() -> str:
@@ -303,32 +293,22 @@ def st_corpus_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local and batch-invariant, so the oracle is EXACTLY the batch
     subword-encode SQL — a streaming query with a full value-hash oracle,
     not a rows-only proxy."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from drive_health_etl_spark.session import shuffle_partitions
     from drive_health_etl_spark.sources.tables import load_table
+    from drive_health_etl_spark.streaming.spool import scratch, spool
 
     docs = load_table(spark, sf_dir, "documents")
     half = docs.count() // 2
-    base = tempfile.mkdtemp(prefix=f"dhe_tok_stream_{uuid.uuid4().hex[:8]}_")
-    src = f"{base}/spool"
-    docs.filter(F.col("doc_id") < half).coalesce(1).write.mode("append").parquet(src)
-    docs.filter(F.col("doc_id") >= half).coalesce(1).write.mode("append").parquet(src)
-    cfg = TokenizeStreamConfig(
-        input_path=src,
-        output_path=f"{base}/encoded",
-        checkpoint_path=f"{base}/ckpt",
-        fit_sf_dir=sf_dir,
-    )
-    with shuffle_partitions(spark, 8):
-        q = run_corpus_tokenize_stream(spark, cfg)
-        q.awaitTermination()
-    out = (
-        spark.read.parquet(cfg.output_path)
-        .drop("batch")  # partition-discovery column from the idempotent sink
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    with scratch(spark, "dhe_tok_stream_") as base:
+        spool(docs, (F.col("doc_id") >= half).cast("int"), f"{base}/spool")
+        cfg = TokenizeStreamConfig(
+            input_path=f"{base}/spool",
+            output_path=f"{base}/encoded",
+            checkpoint_path=f"{base}/ckpt",
+            fit_sf_dir=sf_dir,
+        )
+        run_corpus_tokenize_stream(spark, cfg).awaitTermination()
+        return (
+            spark.read.parquet(cfg.output_path)
+            .drop("batch")  # partition-discovery column from the idempotent sink
+            .localCheckpoint()
+        )

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from drive_health_etl_spark.operators.ingest import ingest
+from drive_health_etl_spark.operators.ingest import ingest, write_warehouse
 from drive_health_etl_spark.schemas import RAW_MESSAGE_SCHEMA
 
 
@@ -132,13 +132,7 @@ def _process_batch(cfg: StreamIngestConfig):
             rows = dedup_against_warehouse(
                 spark, cfg.warehouse_path, rows_base, horizon_days=cfg.dedup_horizon_days
             )
-            (
-                rows.repartition("event_date")
-                .sortWithinPartitions("tenant_id", "event_type")
-                .write.mode("append")
-                .partitionBy("event_date")
-                .parquet(cfg.warehouse_path)
-            )
+            write_warehouse(rows, cfg.warehouse_path)
             if res.dlq.limit(1).count() > 0:
                 res.dlq.withColumn("epoch_id", F.lit(epoch_id)).write.mode("append").parquet(
                     cfg.dlq_path

@@ -23,10 +23,13 @@ def enrich_with_dim(stream: DataFrame, dim: DataFrame, key: str = "user_id") -> 
     return stream.join(F.broadcast(dim), key, "left")
 
 
-def purchase_attribution(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
-    """clicks/purchases: streaming DataFrames with (event_id, user_id, ts).
+def purchase_attribution(events: DataFrame) -> DataFrame:
+    """events: a streaming DataFrame with (event_id, user_id, ts,
+    event_type); its click and purchase rows are the two join sides.
     Returns (click_id, purchase_id, user_id, lag_us) for purchases within
     30 min after the click."""
+    clicks = events.filter(F.col("event_type") == "click")
+    purchases = events.filter(F.col("event_type") == "purchase")
     c = (
         clicks.withWatermark("ts", "1 hour")
         .select(

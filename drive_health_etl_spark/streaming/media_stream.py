@@ -19,9 +19,6 @@ means), so the value-hash gate is solid.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-import uuid
 from collections.abc import Iterator
 
 import numpy as np
@@ -29,7 +26,31 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.session import shuffle_partitions
+from drive_health_etl_spark.streaming.spool import drain, scratch, spool
+
+
+def gif_geometry(media: DataFrame) -> DataFrame:
+    """Decode every (doc_id, content) GIF blob with the real LZW codec and
+    aggregate (width, height) -> (n_images, total_gray)."""
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from drive_health_etl_spark.operators.gif_codec import decode_gif
+
+        for pdf in batches:
+            out = {"width": [], "height": [], "gray_sum": []}
+            for blob in pdf["content"]:
+                idx, pal = decode_gif(bytes(blob))  # REAL LZW decode, in-stream
+                h, w = idx.shape
+                out["width"].append(int(w))
+                out["height"].append(int(h))
+                out["gray_sum"].append(int(pal[idx][:, :, 0].astype(np.int64).sum()))
+            yield pd.DataFrame(out)
+
+    decoded = media.mapInPandas(op, schema="width int, height int, gray_sum long")
+    return decoded.groupBy("width", "height").agg(
+        F.count("*").alias("n_images"),
+        F.sum("gray_sum").alias("total_gray"),
+    )
 
 
 def st_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,51 +59,11 @@ def st_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, and aggregate (width, height) -> (n_images, total_gray)."""
     from drive_health_etl_spark.operators.multimodal import attach_gif_images
 
-    media = attach_gif_images(spark, sf_dir)
-
-    src = tempfile.mkdtemp(prefix="dhe_media_src_")
-    media.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    media.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema("doc_id long, content binary")
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(src)
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drive_health_etl_spark.operators.gif_codec import decode_gif
-
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "gray_sum": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                idx, pal = decode_gif(bytes(blob))  # REAL LZW decode, in-stream
-                h, w = idx.shape
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                out["gray_sum"].append(int(pal[idx][:, :, 0].astype(np.int64).sum()))
-            yield pd.DataFrame(out)
-
-    decoded = stream.mapInPandas(op, schema="doc_id long, width int, height int, gray_sum long")
-    agg = decoded.groupBy("width", "height").agg(
-        F.count("*").alias("n_images"),
-        F.sum("gray_sum").alias("total_gray"),
-    )
-
-    sink = f"media_out_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    return spark.sql(f"SELECT width, height, n_images, total_gray FROM {sink}")
+    media = attach_gif_images(spark, sf_dir).select("doc_id", "content")
+    with scratch(spark, "dhe_media_") as tmp:
+        stream = spool(media, F.col("doc_id") % 2, f"{tmp}/src")
+        q = drain(gif_geometry(stream), tmp, output_mode="complete")
+    return spark.sql(f"SELECT width, height, n_images, total_gray FROM {q.name}")
 
 
 ST_MEDIA_DECODE_SQL = """

@@ -20,10 +20,7 @@ ordering; LLR at each boundary is two integer-by-literal products (the
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -34,10 +31,27 @@ from drive_health_etl_spark.plans.stats_suite import (
     _SPRT_LOWER,
     _SPRT_UPPER,
 )
-from drive_health_etl_spark.session import shuffle_partitions
 from drive_health_etl_spark.sources.tables import load_table
+from drive_health_etl_spark.streaming.spool import drain, scratch, spool
 
 _SPRT_BATCHES = 3
+
+
+def sprt_fold(trace: list[tuple[int, int, int]]) -> Callable[[DataFrame, int], None]:
+    """``foreachBatch`` callback: fold each micro-batch of ``x`` (0/1
+    conversions) into the running (n, k) counters and append
+    (batch, cum_n, cum_k) to ``trace``."""
+    state = {"n": 0, "k": 0}  # the ENTIRE SPRT state: two integers
+
+    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+        agg = batch_df.groupBy().agg(
+            F.count("*").alias("n"), F.coalesce(F.sum("x"), F.lit(0)).alias("k")
+        ).collect()[0]
+        state["n"] += int(agg["n"])
+        state["k"] += int(agg["k"])
+        trace.append((int(batch_id) + 1, state["n"], state["k"]))
+
+    return on_batch
 
 
 def st_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,73 +70,15 @@ def st_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boundaries. Nothing here ships to the 100-TB path — the monitor's
     # state is two integers and the per-batch agg is map-side combinable.
     w = Window.orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    # r12 (guide §2.4, remove repeated passes outright): the spool is ONE
-    # dynamic-partitioned write — a single job computes the scan + global
-    # sort + NTILE once and the lone task (the sort output is one
-    # partition; coalesce(1) pins it) writes every batch's file in one
-    # pass. r11 persisted the NTILE output and filtered it per batch
-    # (_SPRT_BATCHES jobs + a storage copy); both are gone. `pb` is the
-    # directory key (partitionBy consumes it); `b` stays a data column so
-    # the spooled schema is unchanged.
+    # The spool is ONE partitioned write (streaming/spool.py): a single job
+    # computes the scan + global sort + NTILE once and writes every
+    # batch's file in one pass. `b` stays a data column.
     batched = e.select("x", F.ntile(_SPRT_BATCHES).over(w).alias("b"))
-
-    # One explicitly-named file per batch with strictly increasing mtimes:
-    # Spark's file source orders new files by modification time, and an
-    # mtime tie between two spool files would reorder micro-batches vs the
-    # NTILE oracle. Staging + rename + utime makes the order unambiguous.
-    src = tempfile.mkdtemp(prefix="dhe_sprt_src_")
-    ckpt = tempfile.mkdtemp(prefix="dhe_sprt_ckpt_")
-    try:
-        t0 = int(os.stat(src).st_mtime)
-        stage = os.path.join(src, "_stage_all")
-        (
-            batched.select("x", "b", F.col("b").alias("pb"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("pb")
-            .parquet(stage)
-        )
-        for b in range(1, _SPRT_BATCHES + 1):  # one file per batch, in order
-            parts = glob.glob(os.path.join(stage, f"pb={b}", "part-*.parquet"))
-            if not parts:
-                # An empty micro-batch (no treatment-arm events landed in this
-                # tercile) writes no part file; skip it — the monitor's cum
-                # counters are unchanged by an empty batch anyway.
-                continue
-            dst = os.path.join(src, f"batch_{b:03d}.parquet")
-            shutil.move(parts[0], dst)
-            os.utime(dst, (t0 + b, t0 + b))
-        shutil.rmtree(stage, ignore_errors=True)
-
-        stream = (
-            spark.readStream.schema("x int, b int")
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(src)
-        )
-
-        rows: list[tuple[int, int, int]] = []
-        state = {"n": 0, "k": 0}  # the ENTIRE SPRT state: two integers
-
-        def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-            agg = batch_df.groupBy().agg(
-                F.count("*").alias("n"), F.coalesce(F.sum("x"), F.lit(0)).alias("k")
-            ).collect()[0]
-            state["n"] += int(agg["n"])
-            state["k"] += int(agg["k"])
-            rows.append((int(batch_id) + 1, state["n"], state["k"]))
-
-        with shuffle_partitions(spark, 8):
-            q = (
-                stream.writeStream.foreachBatch(on_batch)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # An empty micro-batch (no treatment-arm events landed in a tercile)
+    # writes no file; the cum counters are unchanged by it anyway.
+    rows: list[tuple[int, int, int]] = []
+    with scratch(spark, "dhe_sprt_") as tmp:
+        drain(spool(batched, F.col("b"), f"{tmp}/src"), tmp, foreach_batch=sprt_fold(rows))
 
     out = spark.createDataFrame(rows, "batch int, cum_n long, cum_k long")
     llr = (

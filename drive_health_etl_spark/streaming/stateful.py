@@ -59,6 +59,14 @@ def stateful_user_counters(events_stream: DataFrame) -> DataFrame:
     )
 
 
+def dedup_events(events_stream: DataFrame) -> DataFrame:
+    """Emit each ``event_id`` once: the state store keeps seen ids until the
+    1-hour event-time watermark passes them (``dropDuplicatesWithinWatermark``)."""
+    return events_stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
+        ["event_id"]
+    )
+
+
 # --- transformWithState variant (Spark 4.x successor API) -------------------
 # Same per-user counters through the typed-state processor surface: named
 # state variables (ValueState here; List/MapState and timers are the API's

@@ -14,10 +14,13 @@ different axes, so this probe measures both:
   (``StreamingQuery.recentProgress[].stateOperators[].numRowsTotal``), not
   inferred.
 
-Probes cover five st_* families: applyInPandasWithState running counters,
-watermarked stream-stream join, dropDuplicatesWithinWatermark,
-foreachBatch SPRT monitor (state = two integers at ANY scale), and the
-MinHash-LSH corpus dedup-on-arrival (state = parquet band-key store).
+Each probe spools and drains through ``streaming/spool.py`` and runs the
+operator its st_* query runs: applyInPandasWithState running counters,
+watermarked stream-stream join, dropDuplicatesWithinWatermark, foreachBatch
+SPRT monitor (state = two integers at ANY scale), in-stream GIF decode, the
+MinHash-LSH corpus dedup-on-arrival (state = parquet band-key store), the
+tokenize-on-arrival stream and the ingest chain. Wall is the drain's summed
+``triggerExecution`` from Spark's progress reports.
 
 Writes/refreshes the "## Streaming scale" section of SCALING.md between
 STREAM-SCALE markers (tools/scale_probe.py preserves the section).
@@ -28,11 +31,7 @@ Run: python tools/stream_scale_probe.py
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import tempfile
-import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -41,8 +40,23 @@ from pyspark.sql import functions as F
 
 from bench import external_shares, load_snapshot  # noqa: E402 (repo root)
 from scale_probe import probe_load_cell  # noqa: E402 (tools dir)
-from drive_health_etl_spark.session import get_spark, shuffle_partitions
+from drive_health_etl_spark.operators.bpe import _train_subword
+from drive_health_etl_spark.operators.multimodal import attach_gif_images
+from drive_health_etl_spark.session import get_spark
+from drive_health_etl_spark.sources.envelopes import messages_from_events
 from drive_health_etl_spark.sources.tables import load_table
+from drive_health_etl_spark.streaming.corpus_stream import (
+    CorpusStreamConfig,
+    TokenizeStreamConfig,
+    run_corpus_dedup_stream,
+    run_corpus_tokenize_stream,
+)
+from drive_health_etl_spark.streaming.ingest_stream import StreamIngestConfig, start_stream_ingest
+from drive_health_etl_spark.streaming.joins import purchase_attribution
+from drive_health_etl_spark.streaming.media_stream import gif_geometry
+from drive_health_etl_spark.streaming.spool import drain, scratch, spool
+from drive_health_etl_spark.streaming.sprt_stream import sprt_fold
+from drive_health_etl_spark.streaming.stateful import dedup_events, stateful_user_counters
 
 
 def _measured(fn, spark, sf_dir, batches):
@@ -93,47 +107,31 @@ DEEP_VOLUME = (
 )
 
 
-def _spool(df, n_files: int, cols) -> str:
-    """Write df as n_files mtime-ordered parquet files (one micro-batch
-    each, split by key hash — no global sort; batch composition does not
-    matter to any probe here, only count and volume)."""
-    src = tempfile.mkdtemp(prefix=f"dhe_sprobe_{uuid.uuid4().hex[:6]}_")
-    key = cols[0]
-    t0 = int(os.stat(src).st_mtime)
-    for b in range(n_files):
-        stage = os.path.join(src, f"_stage_{b}")
-        df.filter(F.abs(F.hash(F.col(key))) % n_files == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        import glob as _glob
-
-        parts = _glob.glob(os.path.join(stage, "part-*.parquet"))
-        if parts:
-            dst = os.path.join(src, f"batch_{b:03d}.parquet")
-            shutil.move(parts[0], dst)
-            os.utime(dst, (t0 + b, t0 + b))
-        shutil.rmtree(stage, ignore_errors=True)
-    return src
+def _batches(key: str, n: int):
+    """Batch index per row: hash-split over n micro-batches (no global
+    sort; batch composition does not matter to any probe here, only count
+    and volume)."""
+    return F.pmod(F.hash(F.col(key)), F.lit(n))
 
 
-def _drain(stream_df, ckpt: str, sink_fmt: str = "noop", foreach_batch=None):
-    """Run an availableNow drain; return (wall_s, max state rows observed)."""
-    w = stream_df.writeStream
-    if foreach_batch is not None:
-        w = w.foreachBatch(foreach_batch)
-    else:
-        w = w.format(sink_fmt)
-        if sink_fmt == "memory":
-            w = w.queryName(f"sink_{uuid.uuid4().hex[:8]}").outputMode("append")
-    t0 = time.perf_counter()
-    q = w.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
-    q.awaitTermination()
-    wall = time.perf_counter() - t0
-    state_rows = 0
-    for p in q.recentProgress:
-        ops = p.get("stateOperators") or []
-        state_rows = max(state_rows, sum(int(o.get("numRowsTotal", 0)) for o in ops))
-    return wall, state_rows
+def _progress(q) -> tuple[float, int]:
+    """(wall_s, max state rows) from Spark's own progress reports: the
+    summed trigger times, and the largest state-store row count of any
+    trigger."""
+    wall = sum(p["durationMs"]["triggerExecution"] for p in q.recentProgress) / 1000
+    state = max(
+        (sum(int(o["numRowsTotal"]) for o in p["stateOperators"]) for p in q.recentProgress),
+        default=0,
+    )
+    return wall, state
+
+
+def _drained(spark, df, key: str, n_batches: int, op, **drain_kw) -> tuple[float, int]:
+    """Spool df over n_batches micro-batches, drain op(stream), and report
+    its progress."""
+    with scratch(spark, "dhe_sprobe_") as tmp:
+        stream = spool(df, _batches(key, n_batches), f"{tmp}/src")
+        return _progress(drain(op(stream), tmp, **drain_kw))
 
 
 def _events(spark, sf_dir: str):
@@ -142,69 +140,30 @@ def _events(spark, sf_dir: str):
     )
 
 
+def _docs(spark, sf_dir: str):
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source", "n_chars"
+    )
+
+
 # --- probe definitions -------------------------------------------------------
-# each returns (wall_s, state_rows) for (sf_dir, n_batches)
+# each returns (wall_s, state_rows) for (sf_dir, n_batches), running the
+# operator its st_* query runs
 
 
 def probe_stateful_counters(spark, sf_dir: str, n_batches: int):
-    from drive_health_etl_spark.streaming.stateful import stateful_user_counters
-
-    src = _spool(_events(spark, sf_dir).drop("event_type"), n_batches, ["event_id"])
-    ckpt = tempfile.mkdtemp(prefix="dhe_sprobe_ckpt_")
-    try:
-        stream = (
-            spark.readStream.schema("event_id long, user_id long, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(src)
-        )
-        with shuffle_partitions(spark, 8):
-            return _drain(stateful_user_counters(stream), ckpt, "memory")
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    ev = _events(spark, sf_dir).drop("event_type")
+    return _drained(spark, ev, "event_id", n_batches, stateful_user_counters)
 
 
 def probe_stream_stream_join(spark, sf_dir: str, n_batches: int):
-    from drive_health_etl_spark.streaming.joins import purchase_attribution
-
-    src = _spool(_events(spark, sf_dir).drop("value"), n_batches, ["user_id"])
-    ckpt = tempfile.mkdtemp(prefix="dhe_sprobe_ckpt_")
-    try:
-        stream = (
-            spark.readStream.schema("event_id long, user_id long, ts timestamp, event_type string")
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(src)
-        )
-        clicks = stream.filter(F.col("event_type") == "click")
-        purchases = stream.filter(F.col("event_type") == "purchase")
-        with shuffle_partitions(spark, 8):
-            return _drain(purchase_attribution(clicks, purchases), ckpt, "memory")
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    ev = _events(spark, sf_dir).drop("value")
+    return _drained(spark, ev, "user_id", n_batches, purchase_attribution)
 
 
 def probe_stream_dedup(spark, sf_dir: str, n_batches: int):
     ev = _events(spark, sf_dir).drop("event_type")
-    src = _spool(ev.union(ev), n_batches, ["event_id"])
-    ckpt = tempfile.mkdtemp(prefix="dhe_sprobe_ckpt_")
-    try:
-        stream = (
-            spark.readStream.schema("event_id long, user_id long, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(src)
-        )
-        deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
-            ["event_id"]
-        )
-        with shuffle_partitions(spark, 8):
-            return _drain(deduped, ckpt, "memory")
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return _drained(spark, ev.union(ev), "event_id", n_batches, dedup_events)
 
 
 def probe_sprt_monitor(spark, sf_dir: str, n_batches: int):
@@ -213,62 +172,37 @@ def probe_sprt_monitor(spark, sf_dir: str, n_batches: int):
         .filter(F.col("user_id") % 2 == 1)
         .select((F.col("event_type") == "purchase").cast("int").alias("x"), "event_id")
     )
-    src = _spool(ev, n_batches, ["event_id"])
-    ckpt = tempfile.mkdtemp(prefix="dhe_sprobe_ckpt_")
-    state = {"n": 0, "k": 0}
+    wall, _ = _drained(
+        spark, ev, "event_id", n_batches, lambda s: s, foreach_batch=sprt_fold([])
+    )
+    return wall, 2  # the ENTIRE monitor state: two integers, any scale
 
-    def on_batch(batch_df, batch_id):
-        row = batch_df.groupBy().agg(
-            F.count("*").alias("n"), F.coalesce(F.sum("x"), F.lit(0)).alias("k")
-        ).collect()[0]
-        state["n"] += int(row["n"])
-        state["k"] += int(row["k"])
 
-    try:
-        stream = (
-            spark.readStream.schema("x int, event_id long")
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(src)
-        )
-        with shuffle_partitions(spark, 8):
-            wall, _ = _drain(stream, ckpt, foreach_batch=on_batch)
-        return wall, 2  # the ENTIRE monitor state: two integers, any scale
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+def probe_media_decode(spark, sf_dir: str, n_batches: int):
+    """Decode-on-arrival: real LZW GIF decode inside mapInPandas per
+    micro-batch, streaming groupBy on geometry. State = aggregation rows
+    (distinct (w, h) geometries — bounded by the fixture rule, not data)."""
+    media = attach_gif_images(spark, sf_dir).select("doc_id", "content")
+    media.count()  # warm the per-(session, sf) encoded-fixture cache so the
+    # probe times the decode-on-arrival stream, not fixture encoding
+    return _drained(spark, media, "doc_id", n_batches, gif_geometry, output_mode="complete")
 
 
 def probe_corpus_dedup(spark, sf_dir: str, n_batches: int):
-    from drive_health_etl_spark.streaming.corpus_stream import (
-        CorpusStreamConfig,
-        run_corpus_dedup_stream,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    base = tempfile.mkdtemp(prefix=f"dhe_sprobe_corpus_{uuid.uuid4().hex[:6]}_")
-    src = _spool(docs, n_batches, ["doc_id"])
-    cfg = CorpusStreamConfig(
-        input_path=src,
-        corpus_path=f"{base}/corpus",
-        store_path=f"{base}/store",
-        checkpoint_path=f"{base}/ckpt",
-    )
-    try:
-        t0 = time.perf_counter()
-        with shuffle_partitions(spark, 8):
-            q = run_corpus_dedup_stream(spark, cfg)
-            q.awaitTermination()
-        wall = time.perf_counter() - t0
+    with scratch(spark, "dhe_sprobe_") as tmp:
+        spool(_docs(spark, sf_dir), _batches("doc_id", n_batches), f"{tmp}/src")
+        cfg = CorpusStreamConfig(
+            input_path=f"{tmp}/src",
+            corpus_path=f"{tmp}/corpus",
+            store_path=f"{tmp}/store",
+            checkpoint_path=f"{tmp}/ckpt",
+        )
+        q = run_corpus_dedup_stream(spark, cfg)
+        q.awaitTermination()
         # state = the persisted band-key store (parquet rows), the thing
         # that grows with corpus size
         state = spark.read.parquet(cfg.store_path).count() if os.path.isdir(cfg.store_path) else 0
-        return wall, state
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(base, ignore_errors=True)
+        return _progress(q)[0], state
 
 
 def probe_ingest_stream(spark, sf_dir: str, n_batches: int):
@@ -276,131 +210,39 @@ def probe_ingest_stream(spark, sf_dir: str, n_batches: int):
     exactly-once dedup -> partitioned warehouse) as a stream of n_batches
     micro-batches. State = distinct idempotency keys in the warehouse (the
     partition-pruned build side of the cross-batch anti-join)."""
-    from drive_health_etl_spark.sources.envelopes import messages_from_events
-    from drive_health_etl_spark.streaming.ingest_stream import (
-        StreamIngestConfig,
-        start_stream_ingest,
-    )
-
-    msgs = messages_from_events(spark, sf_dir)
-    src = _spool(msgs, n_batches, ["message_id"])
-    base = tempfile.mkdtemp(prefix="dhe_sprobe_ing_")
-    cfg = StreamIngestConfig(
-        input_path=src,
-        warehouse_path=f"{base}/wh",
-        dlq_path=f"{base}/dlq",
-        checkpoint_path=f"{base}/ckpt",
-        max_files_per_trigger=1,
-    )
-    try:
-        t0 = time.perf_counter()
-        with shuffle_partitions(spark, 8):
-            q = start_stream_ingest(spark, cfg, available_now=True)
-            q.awaitTermination()
-        wall = time.perf_counter() - t0
+    with scratch(spark, "dhe_sprobe_") as tmp:
+        spool(messages_from_events(spark, sf_dir), _batches("message_id", n_batches), f"{tmp}/src")
+        cfg = StreamIngestConfig(
+            input_path=f"{tmp}/src",
+            warehouse_path=f"{tmp}/wh",
+            dlq_path=f"{tmp}/dlq",
+            checkpoint_path=f"{tmp}/ckpt",
+            max_files_per_trigger=1,
+        )
+        q = start_stream_ingest(spark, cfg, available_now=True)
+        q.awaitTermination()
         state = (
             spark.read.parquet(cfg.warehouse_path).select("idempotency_key").distinct().count()
             if os.path.isdir(cfg.warehouse_path)
             else 0
         )
-        return wall, state
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def probe_media_decode(spark, sf_dir: str, n_batches: int):
-    """Decode-on-arrival: real LZW GIF decode inside mapInPandas per
-    micro-batch, streaming groupBy on geometry. State = aggregation rows
-    (distinct (w, h) geometries — bounded by the fixture rule, not data)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from drive_health_etl_spark.operators.multimodal import attach_gif_images
-
-    media = attach_gif_images(spark, sf_dir).select("doc_id", "content")
-    media.count()  # warm the per-(session, sf) encoded-fixture cache so the
-    # probe times the decode-on-arrival stream, not fixture encoding
-    src = _spool(media, n_batches, ["doc_id"])
-    ckpt = tempfile.mkdtemp(prefix="dhe_sprobe_ckpt_")
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drive_health_etl_spark.operators.gif_codec import decode_gif
-
-        for pdf in batches:
-            out = {"width": [], "height": [], "gray_sum": []}
-            for blob in pdf["content"]:
-                idx, pal = decode_gif(bytes(blob))
-                h, w = idx.shape
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                out["gray_sum"].append(int(pal[idx][:, :, 0].astype(np.int64).sum()))
-            yield pd.DataFrame(out)
-
-    try:
-        stream = (
-            spark.readStream.schema("doc_id long, content binary")
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(src)
-        )
-        decoded = stream.mapInPandas(op, schema="width int, height int, gray_sum long")
-        agg = decoded.groupBy("width", "height").agg(
-            F.count("*").alias("n_images"), F.sum("gray_sum").alias("total_gray")
-        )
-        w = agg.writeStream.format("memory").queryName(
-            f"probe_media_{uuid.uuid4().hex[:8]}"
-        ).outputMode("complete")
-        t0 = time.perf_counter()
-        with shuffle_partitions(spark, 8):
-            q = w.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
-            q.awaitTermination()
-        wall = time.perf_counter() - t0
-        state = 0
-        for p in q.recentProgress:
-            ops = p.get("stateOperators") or []
-            state = max(state, sum(int(o.get("numRowsTotal", 0)) for o in ops))
-        return wall, state
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
+        return _progress(q)[0], state
 
 
 def probe_corpus_tokenize(spark, sf_dir: str, n_batches: int):
-    from drive_health_etl_spark.streaming.corpus_stream import (
-        TokenizeStreamConfig,
-        run_corpus_tokenize_stream,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    base = tempfile.mkdtemp(prefix=f"dhe_sprobe_tok_{uuid.uuid4().hex[:6]}_")
-    src = _spool(docs, n_batches, ["doc_id"])
-    cfg = TokenizeStreamConfig(
-        input_path=src,
-        output_path=f"{base}/encoded",
-        checkpoint_path=f"{base}/ckpt",
-        fit_sf_dir=sf_dir,
-    )
-    try:
-        t0 = time.perf_counter()
-        with shuffle_partitions(spark, 8):
-            q = run_corpus_tokenize_stream(spark, cfg)
-            q.awaitTermination()
-        wall = time.perf_counter() - t0
-        # stateless by design: "state" reported is the fit vocabulary size
-        # (the only cross-batch artifact, bounded by the tokenizer budget)
-        from drive_health_etl_spark.operators.bpe import _train_subword
-
-        state = len(_train_subword(spark, sf_dir)[1])
-        return wall, state
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(base, ignore_errors=True)
+    with scratch(spark, "dhe_sprobe_") as tmp:
+        spool(_docs(spark, sf_dir), _batches("doc_id", n_batches), f"{tmp}/src")
+        cfg = TokenizeStreamConfig(
+            input_path=f"{tmp}/src",
+            output_path=f"{tmp}/encoded",
+            checkpoint_path=f"{tmp}/ckpt",
+            fit_sf_dir=sf_dir,
+        )
+        q = run_corpus_tokenize_stream(spark, cfg)
+        q.awaitTermination()
+    # stateless by design: "state" reported is the fit vocabulary size
+    # (the only cross-batch artifact, bounded by the tokenizer budget)
+    return _progress(q)[0], len(_train_subword(spark, sf_dir)[1])
 
 
 PROBES = {

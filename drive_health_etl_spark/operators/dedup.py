@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.operators.text import TOKENS_SQL, tokens_col
+from drive_health_etl_spark.session import broadcast_if_small
 from drive_health_etl_spark.sources.tables import load_table
 
 N_HASHES = 8
@@ -1330,9 +1331,6 @@ FROM toks t LEFT JOIN keptagg k USING (doc_id)
 """
 
 
-_VOCAB_BROADCAST_MAX = 2_000_000  # distinct shingles above which the df map
-# is too big to force-broadcast (~64 MB at ~32 B/shingle) — AQE decides
-
 _PREFIX_T = 0.7  # Jaccard threshold: prefix filtering pays off at HIGH
 # thresholds (prefix length = n - ceil(t*n) + 1 ~ (1-t)*n). Measured on this
 # corpus (template-heavy docs, so even rare shingles are shared): t=0.2 ->
@@ -1369,17 +1367,15 @@ def _prefix_pre(spark: SparkSession, sf_dir: str) -> DataFrame:
         # single-partition sort of the whole vocabulary: a scale killer the
         # tuple key avoids.
         w = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("shingle").asc())
-        # The df map is vocab-sized: broadcast is a win while the vocabulary
-        # fits an executor (~64 MB at the 2M-shingle threshold), but at
-        # 100 TB with an open vocabulary a FORCED broadcast would blow past
-        # broadcast limits — so the hint is conditional on a measured
-        # distinct-shingle count (one cheap agg over the already-persisted
-        # sets, cached per (app, dataset)); above the threshold the
-        # equi-join stays keyed and AQE picks the strategy.
+        # The df map is vocab-sized: broadcast while it fits the session
+        # threshold, sized by a measured distinct-shingle count (one cheap
+        # agg over the already-persisted sets, cached per (app, dataset)).
+        # Without the hint the planner broadcasts the far larger shingle
+        # explode instead (measured: build side flips, +4 stages at sf0.1);
+        # with an open vocabulary at 100 TB the equi-join stays keyed.
         n_vocab = dataset_cached(spark, sf_dir, "vocab_size", freq.count)
-        freq_j = F.broadcast(freq) if n_vocab <= _VOCAB_BROADCAST_MAX else freq
         return (
-            ex.join(freq_j, "shingle")
+            ex.join(broadcast_if_small(freq, n_vocab), "shingle")
             .withColumn("pos", F.row_number().over(w))
             .filter(
                 F.col("pos")
@@ -2015,9 +2011,6 @@ FROM tot CROSS JOIN uniq
 
 # --- longest cross-document repeated substring (suffix ranks, unbounded k) ---
 
-# Broadcast the slim docs relation into per-probe text lookups below this
-# row count; a 100 TB corpus falls back to shuffle joins on doc_id.
-_LCS_BCAST_DOCS = 2_000_000
 # Seed rung cap: rung-r fingerprints hash r chars per position, so the seed
 # job's work is O(corpus_chars * 2 * cap) — capped so a single pathological
 # multi-MB document cannot make the seed quadratic in its own length. Above
@@ -2095,10 +2088,12 @@ def dedup_suffix_lcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint rows per position, one hash agg); every later job touches
     only the frontier — positions inside cross-document duplicated runs —
     which the rung seed has already collapsed to the near-dup cluster
-    positions. The text side broadcasts below {_LCS_BCAST_DOCS} docs and
-    shuffle-joins above. Nothing is quadratic: candidate positions bound
+    positions. The text side broadcasts while the docs relation fits the
+    session's broadcast threshold (``broadcast_if_small``) and
+    shuffle-joins above it. Nothing is quadratic: candidate positions bound
     the work, never document pairs, and rung fingerprints hash at most
-    2 * {_LCS_RUNG_CAP} chars per position regardless of document length."""
+    2 * ``_LCS_RUNG_CAP`` chars per position regardless of document
+    length."""
     docs = dataset_cached(
         spark, sf_dir, "lcs_docs",
         lambda: load_table(spark, sf_dir, "documents")
@@ -2118,7 +2113,9 @@ def dedup_suffix_lcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if n_docs < 2 or max_n == 0:
         return empty
-    d_txt = F.broadcast(docs) if n_docs <= _LCS_BCAST_DOCS else docs
+    # Without the hint the planner broadcasts the checkpointed frontier in
+    # 8 of the probe joins instead (measured: +8 stages at sf0.1).
+    d_txt = broadcast_if_small(docs, n_docs)
 
     if max_n < 8:
         # Whole corpus is below the rung grid: one-shot content ladder over
@@ -2480,9 +2477,6 @@ _EDJ_Q_BIG = 16  # width above _EDJ_BIG_DOCS: keeps chunk contents discriminativ
 _EDJ_BIG_DOCS = 20_000  # corpus-size threshold for the wider gram
 _EDJ_K = 8  # edit-distance threshold (absolute, in single-char edits)
 _EDJ_PREFIX = _EDJ_Q * _EDJ_K + 1  # oracle's prefix-filter length (q*k+1)
-_EDJ_BCAST_DOCS = 500_000  # broadcast the (K+1)-chunks/doc signature below
-# this corpus size (~100 MB of slim rows); larger corpora fall back to a
-# plain int64 equi-join — one shuffle, no driver pressure.
 
 
 def dedup_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2540,10 +2534,11 @@ def dedup_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: chunks and grams fold to 64-bit xxhash64 INSIDE the scan
     (the r7 substring-ladder trick — slim int64 join keys, no string
-    shuffles). The signature relation is K+1 rows per doc; at this corpus
-    size it broadcasts (one scan-side hash join, ZERO shuffle for
-    candidate generation), and above _EDJ_BCAST_DOCS docs it degrades to a
-    plain equi-join on the gram hash — still one shuffle of slim longs.
+    shuffles). The signature relation is K+1 rows per doc and persisted,
+    so the planner sizes it: at this corpus size it broadcasts (one
+    scan-side hash join, ZERO shuffle for candidate generation), and past
+    the broadcast threshold it degrades to a plain equi-join on the gram
+    hash — still one shuffle of slim longs.
     Gram df stats are one map-side-combinable count aggregate; the rarest-
     chunk selection is a per-doc slice(array_sort(collect_list)) over
     <= n/Q structs — a hash aggregate, never a partition-wide sort. The
@@ -2623,11 +2618,8 @@ def dedup_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sig_flat = dataset_cached(spark, sf_dir, "edj_sig", build_sig, q)
     # Candidate join: every doc's gram relation probes the signature. The
-    # signature is K+1 slim rows per doc — broadcastable until the corpus
-    # is huge, after which a plain equi-join on the int64 hash (one
-    # shuffle) takes over.
-    if n_docs <= _EDJ_BCAST_DOCS:
-        sig_flat = F.broadcast(sig_flat)
+    # persisted signature carries measured size stats, so the planner
+    # broadcasts it on its own while it fits the threshold.
     bg = docs.select(
         F.col("doc_id").alias("doc_b"),
         F.col("n").alias("lb"),

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from drive_health_etl_spark.operators.fitcache import dataset_cached
-from drive_health_etl_spark.session import shuffle_partitions
+from drive_health_etl_spark.session import broadcast_if_small, shuffle_partitions
 from drive_health_etl_spark.sources.tables import load_table
 
 PR_DAMPING = 0.85
@@ -115,24 +115,9 @@ def _pagerank_nodes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     return dataset_cached(spark, sf_dir, "pr_nodes", build)
 
 
-# Broadcast the node-sized iteration relations (ranks in, contributions out)
-# below this node count — (long, double) rows, so 2M nodes is ~32 MB framed,
-# matching the session's broadcast sizing. The localCheckpointed node/rank
-# relations scan as ExistingRDD with UNKNOWN size stats, so the planner
-# never broadcasts them on its own and every iteration SMJ-shuffled the
-# FULL edge relation by src (r12 measured: 20 Exchange / 12 SortMergeJoin /
-# 0 BroadcastHashJoin for the 3-round chain). Below the threshold each
-# round is one broadcast-hash edge join (edges never shuffle) plus one
-# map-side-combined aggregate; above it (a 100 TB graph with billions of
-# nodes) the shuffle joins return unchanged. The count is already hoisted
-# and cached (`_pagerank_nodes`), so the decision costs nothing.
-_PR_BCAST_NODES = 2_000_000
-
-
 def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ed = _weighted_edges(spark, sf_dir)
     nodes, n = _pagerank_nodes(spark, sf_dir)
-    bcast = n <= _PR_BCAST_NODES
     # 1.0 - 0.85 in binary floating point is 0.15000000000000002 — compute the
     # teleport term ONCE in Python and embed the exact double in both engines
     # (a SQL-side `1.0 - 0.85` would go through DuckDB DECIMAL arithmetic and
@@ -149,10 +134,17 @@ def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     inv_n = 1.0 / n if n else 0.0
     base_n = base / n if n else 0.0
     ranks = nodes.select("node", F.lit(inv_n).alias("r"))
+    # The node-sized iteration relations (ranks in, contributions out) are
+    # localCheckpointed, so they scan with UNKNOWN size stats and the
+    # planner never broadcasts them: every iteration SMJ-shuffled the FULL
+    # edge relation by src (measured: 20 Exchange / 12 SortMergeJoin for
+    # the 3-round chain). Sized by the cached node count, each round below
+    # the broadcast threshold is one broadcast-hash edge join plus one
+    # map-side-combined aggregate; above it the shuffle joins return.
     for _ in range(PR_ITERS):
         rsel = ranks.select(F.col("node").alias("src"), "r")
         contrib = (
-            ed.join(F.broadcast(rsel) if bcast else rsel, "src")
+            ed.join(broadcast_if_small(rsel, n), "src")
             .groupBy("dst")
             .agg(
                 F.sum((F.col("r") * F.col("w")).cast("decimal(28,18)"))
@@ -167,7 +159,7 @@ def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
         csel = contrib.select(F.col("dst").alias("node"), "inflow")
         ranks = (
             nodes
-            .join(F.broadcast(csel) if bcast else csel, "node", "left")
+            .join(broadcast_if_small(csel, n), "node", "left")
             .select(
                 "node",
                 (
@@ -483,18 +475,14 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _support_edges(spark, sf_dir)  # checkpointed (src, dst) both ways
     surv = edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
     prev_n = surv.count()
-    # r12: survivor sets are node-sized and only SHRINK round over round,
-    # but they scan as ExistingRDD with unknown size stats, so the planner
+    # Survivor sets are node-sized and only SHRINK round over round, but
+    # they scan as ExistingRDD with unknown size stats, so the planner
     # sort-merge-shuffled the full edge relation twice per peeling round.
-    # Below the shared node-count broadcast threshold (the PageRank rule —
-    # the initial survivor count bounds every later round) each semi join
-    # broadcasts the survivor side and the edge relation never re-shuffles;
-    # above it the shuffle joins return unchanged.
-    bcast = prev_n <= _PR_BCAST_NODES
-
+    # Sized by the initial survivor count (it bounds every later round),
+    # each semi join broadcasts the survivor side below the threshold.
     def semi(df, col):
         side = surv.select(F.col("node").alias(col))
-        return df.join(F.broadcast(side) if bcast else side, col, "left_semi")
+        return df.join(broadcast_if_small(side, prev_n), col, "left_semi")
 
     # r11: only three survivor counts feed the readout (initial for
     # n_peeled, last two for converged/n_core_nodes) — the early-round
@@ -600,12 +588,12 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # co-purchase edge list — cache it per (session, sf_dir) instead of
     # re-running the orders ⋈ lineitem distinct per call (guide §2.4).
     edges = dataset_cached(spark, sf_dir, "hits_edges", build_edges)
-    # r12: the per-half-iteration score relations are side-sized (one row
-    # per part / per cust) but join against a lineage-free edge relation
-    # with no size stats, so the planner sort-merge-shuffled the full edge
-    # list each half-iteration. Below the shared node-count threshold the
-    # score side broadcasts and edges never re-shuffle (the PageRank rule);
-    # the side counts are dataset artifacts, cached next to the edges.
+    # The per-half-iteration score relations are side-sized (one row per
+    # part / per cust) but join against a lineage-free edge relation with
+    # no size stats, so the planner sort-merge-shuffled the full edge list
+    # each half-iteration. Sized by the side counts (dataset artifacts,
+    # cached next to the edges), the score side broadcasts below the
+    # threshold and edges never re-shuffle.
     n_part, n_cust = dataset_cached(
         spark, sf_dir, "hits_sides",
         lambda: tuple(
@@ -614,11 +602,9 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).first()
         ),
     )
-    bcast = max(n_part, n_cust) <= _PR_BCAST_NODES
-    bb = F.broadcast if bcast else (lambda df: df)
     a1 = edges.groupBy("part").agg(F.count("*").alias("a"))  # Σ h0 = in-degree
     h1 = (
-        edges.join(bb(a1), "part")
+        edges.join(broadcast_if_small(a1, n_part), "part")
         .groupBy("cust")
         .agg(F.sum("a").alias("h"))
     )
@@ -626,13 +612,13 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with localCheckpoint or the whole a1->h1->a2 chain re-executes per
     # branch (measured: 26 shuffles -> ~half with the pin).
     a2 = (
-        edges.join(bb(h1), "cust")
+        edges.join(broadcast_if_small(h1, n_cust), "cust")
         .groupBy("part")
         .agg(F.sum("h").alias("a"))
         .localCheckpoint()
     )
     h2 = (
-        edges.join(bb(a2), "part")
+        edges.join(broadcast_if_small(a2, n_part), "part")
         .groupBy("cust")
         .agg(F.sum("a").alias("h"))
     )

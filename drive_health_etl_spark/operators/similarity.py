@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from drive_health_etl_spark.operators.fitcache import dataset_cached
+from drive_health_etl_spark.session import broadcast_if_small
 from drive_health_etl_spark.sources.tables import load_table
 
 N_QUERIES = 8
@@ -1005,7 +1006,7 @@ def _adc_lut_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFra
     dataset there."""
 
     def build() -> DataFrame:
-        qid = _qid_cached(spark, sf_dir, emb)
+        qid = _qid_cached(spark, sf_dir, emb)[0]
         cb_all = _pq_all_cb_df(spark, _pq_codebooks_cached(spark, sf_dir, emb))
         slices = F.posexplode(
             F.array(*[F.slice("e", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
@@ -1032,13 +1033,15 @@ def _adc_lut_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFra
     return dataset_cached(spark, sf_dir, "adc_lut", build)
 
 
-def _qid_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> int:
-    """MAX(vec_id) — the deterministic demo-query row every ANN search
-    uses. A dataset scalar (the `_pagerank_nodes` count precedent): each
-    of sim_ann_ivfpq / _adc_distances / sim_adc_quality ran its own
-    one-job collect per BUILD, so one ivfpq sample paid it twice."""
+def _qid_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> tuple[int | None, int]:
+    """(MAX(vec_id), COUNT(*)): the deterministic demo-query row every ANN
+    search uses, and the corpus size that bounds its candidate sets (None
+    and 0 on an empty corpus). Dataset scalars in one job (the
+    `_pagerank_nodes` count precedent): each of sim_ann_ivfpq /
+    _adc_distances / sim_adc_quality ran its own one-job collect per
+    BUILD, so one ivfpq sample paid it twice."""
     return dataset_cached(
-        spark, sf_dir, "ann_qid", lambda: emb.agg(F.max("vec_id")).collect()[0][0]
+        spark, sf_dir, "ann_qid", lambda: tuple(emb.agg(F.max("vec_id"), F.count("*")).first())
     )
 
 
@@ -1208,10 +1211,6 @@ FROM dist ORDER BY approx_dist ASC, vec_id ASC LIMIT {_ADC_TOP}
 
 _IVFPQ_PROBE = 2  # cells probed per query
 _IVFPQ_TOP = 10
-# Broadcast the probed-cell candidate fence below this corpus size — slim
-# (vec_id, cell) rows, ~32 MB framed at 2M, matching the session broadcast
-# sizing; a 100 TB corpus falls back to the vec_id equi-join.
-_IVFPQ_BCAST_VECS = 2_000_000
 
 
 def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1234,7 +1233,7 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _centroids_cached(spark, sf_dir, emb)
     cmat = _cents_df(spark, cents)
     assigned = _assigned_cached(spark, sf_dir, emb).select("vec_id", "cell")
-    qid = _qid_cached(spark, sf_dir, emb)
+    qid, n_vecs = _qid_cached(spark, sf_dir, emb)
     probe = (
         emb.filter(F.col("vec_id") == qid)
         .join(F.broadcast(cmat))
@@ -1274,16 +1273,13 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table is partitioned BY cell so the fence prunes before the scorer —
     # same result, demonstrated here result-first)
     adc = _adc_distances(spark, sf_dir)
-    # r12: the probed-cell fence is at most (probe/cells) of the corpus but
-    # scans stat-less cached relations, so the planner sort-merge-joined it
-    # against the ADC scores. Below the corpus-size threshold (gated on the
-    # cached MAX vec_id — an overestimate of the count, so the fallback is
-    # conservative) the fence broadcasts; above it the equi-join stands.
-    if qid + 1 <= _IVFPQ_BCAST_VECS:
-        cand_ids = F.broadcast(cand_ids)
+    # The probed-cell fence is at most (probe/cells) of the corpus, but the
+    # planner estimates it as a join over stat-less cached relations and
+    # sort-merge-joined it against the ADC scores. Sized by the corpus
+    # count, the fence broadcasts below the threshold.
     w = Window.orderBy(F.col("approx_dist").asc(), F.col("vec_id").asc())
     return (
-        adc.join(cand_ids, "vec_id")
+        adc.join(broadcast_if_small(cand_ids, n_vecs), "vec_id")
         .orderBy(F.col("approx_dist").asc(), F.col("vec_id").asc())
         .limit(_IVFPQ_TOP)
         .withColumn("rank", F.row_number().over(w))
@@ -1305,7 +1301,7 @@ def _adc_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     )
-    qid = _qid_cached(spark, sf_dir, emb)
+    qid = _qid_cached(spark, sf_dir, emb)[0]
     # r11: the corpus side reads the persisted PQ index (same folds, the
     # query row filtered AFTER the cached encode — identical row set).
     # r12: the LUT side reads the persisted per-dataset lookup table too
@@ -1404,7 +1400,7 @@ def sim_adc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     )
-    qid = _qid_cached(spark, sf_dir, emb)
+    qid = _qid_cached(spark, sf_dir, emb)[0]
     q = emb.filter(F.col("vec_id") == qid).select(F.col("e").alias("qe"))
     d2 = (
         _dot(F.col("qe"), F.col("qe"))

@@ -23,6 +23,9 @@ Local testing runs on ``local[N]`` but every config here is chosen for the
   re-enabled at launch: ``get_spark`` leaves it alone when the launch
   arguments name it, e.g. ``PYSPARK_SUBMIT_ARGS="--conf
   spark.python.sql.dataFrameDebugging.enabled=true pyspark-shell"``.
+- One broadcast rule (``broadcast_if_small``) against the planner's own
+  ``autoBroadcastJoinThreshold``; a launch ``--conf`` of ``-1`` turns
+  every broadcast branch off at once.
 """
 
 from __future__ import annotations
@@ -30,7 +33,8 @@ from __future__ import annotations
 import os
 import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -71,6 +75,18 @@ def ship_package(spark: SparkSession) -> None:
                     zf.write(full, rel)
     spark.sparkContext.addPyFile(zip_path)
     _SHIPPED_APP_IDS.add(app_id)
+
+
+def broadcast_if_small(df: DataFrame, rows: int) -> DataFrame:
+    """``F.broadcast(df)`` when ``rows`` rows of ``df`` fit the session's
+    parsed ``spark.sql.autoBroadcastJoinThreshold`` (-1: never), else ``df``.
+    For join sides the planner cannot size: localCheckpointed state, or a
+    relation it estimates at a parent's size. The row width is Spark's own
+    ``EstimationUtils.getSizePerRow`` rule, so callers pass only a count."""
+    threshold = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if rows * (8 + df._jdf.schema().defaultSize()) <= threshold:
+        return F.broadcast(df)
+    return df
 
 
 class spark_conf:
@@ -160,10 +176,6 @@ def get_spark(app_name: str = "drive-health-etl-spark", cpus: int | None = None)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Broadcast threshold: dims (region/nation/customer/supplier/part at
-        # test SF) stay broadcastable; at 100 TB the fact side never broadcasts
-        # and explicit broadcast() hints on true dims still apply.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
         # Testdata tables are single parquet files (a few MB-30 MB); the
         # default 128 MB split size would put each whole table in ONE input
@@ -182,8 +194,15 @@ def get_spark(app_name: str = "drive-health-etl-spark", cpus: int | None = None)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    # Builder values override launch --conf values, so set call-site
-    # capture only when the launch arguments leave it unset.
-    if CALL_SITE_CONF not in os.environ.get("PYSPARK_SUBMIT_ARGS", ""):
-        builder = builder.config(CALL_SITE_CONF, "false")
+    # Builder values override launch --conf values, so these are set only
+    # when the launch arguments leave them unset: call-site capture, and the
+    # broadcast threshold (-1 forces every shuffle branch). At 32 MB the
+    # test-SF dims broadcast; at 100 TB the fact side never does.
+    launch_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    for key, value in (
+        (CALL_SITE_CONF, "false"),
+        ("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024)),
+    ):
+        if key not in launch_args:
+            builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -31,6 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from drive_health_etl_spark.operators.ingest import ingest, write_warehouse
 from drive_health_etl_spark.schemas import RAW_MESSAGE_SCHEMA
+from drive_health_etl_spark.session import broadcast_if_small
 
 
 @dataclass
@@ -50,36 +51,28 @@ class StreamIngestConfig:
     source_format: str = "parquet"
 
 
-# Above this many incoming rows the per-batch dedup falls back to the
-# shuffle anti-join: broadcasting the batch's keys (~60 B/key) past this
-# stops being free. A micro-batch this large is an availableNow backlog
-# drain, where the shuffle is amortized anyway.
-BROADCAST_DEDUP_MAX_KEYS = 500_000
-
-
 def dedup_against_warehouse(
     spark: SparkSession,
     warehouse_path: str,
     rows: DataFrame,
     horizon_days: int = 7,
-    broadcast_max_keys: int = BROADCAST_DEDUP_MAX_KEYS,
 ) -> DataFrame:
     """Cross-run exactly-once guard (BigQuery insertId semantics,
     ``src/bq.js:49``): drop incoming rows whose idempotency_key already
     exists in the warehouse's overlapping event-date partitions. Shared by
     the streaming sink and the DLQ replay job.
 
-    Strategy by batch size (round-8: st_ingest_stream paid ~35x per-row vs
-    batch at sf1, dominated by per-batch shuffles of warehouse keys):
-
-    - **small batch** (the steady-state micro-batch): broadcast the batch's
-      keys, left_semi against the pruned warehouse key scan (the scan is
-      column- and partition-pruned and never shuffles), then broadcast the
-      resulting duplicate set — at most batch-sized — back for the
-      left_anti. Warehouse bytes touched: one key-column scan; warehouse
-      bytes SHUFFLED: zero.
-    - **large batch** (availableNow backlog drain): plain shuffle anti-join;
-      at that size the shuffle is amortized over the rows.
+    The duplicates are found with a left_semi of the pruned warehouse key
+    scan against the batch's keys, then dropped with a left_anti of the
+    batch against that duplicate set. Both build sides are batch-bounded,
+    but the planner estimates the duplicate set at warehouse size, so both
+    go through ``broadcast_if_small`` sized by the batch's row count. For
+    the steady-state micro-batch both joins broadcast: warehouse bytes
+    touched, one key-column scan; warehouse bytes SHUFFLED, zero (round-8:
+    st_ingest_stream paid ~35x per-row vs batch at sf1, dominated by
+    per-batch shuffles of warehouse keys). A batch past the broadcast
+    threshold (an availableNow backlog drain) shuffles both joins, where
+    the shuffle is amortized over the rows.
 
     The warehouse is read once, with a declared schema of just the two
     columns used here, so a micro-batch runs no schema-inference job. A
@@ -107,12 +100,9 @@ def dedup_against_warehouse(
         )
         .select("idempotency_key")
     )
-    if stats["n"] <= broadcast_max_keys:
-        dup = wh_keys.join(
-            F.broadcast(rows.select("idempotency_key")), "idempotency_key", "left_semi"
-        )
-        return rows.join(F.broadcast(dup), "idempotency_key", "left_anti")
-    return rows.join(wh_keys, "idempotency_key", "left_anti")
+    keys = broadcast_if_small(rows.select("idempotency_key"), stats["n"])
+    dup = wh_keys.join(keys, "idempotency_key", "left_semi")
+    return rows.join(broadcast_if_small(dup, stats["n"]), "idempotency_key", "left_anti")
 
 
 def _process_batch(cfg: StreamIngestConfig):

@@ -63,13 +63,15 @@ def test_star_contraction_multi_component(spark):
 
 
 def test_pagerank_chain_broadcasts_below_node_threshold(spark, sf_dir):
-    """r12: below _PR_BCAST_NODES the 3-round rank chain must run as
-    broadcast-hash joins (the edge relation is never shuffled per round)
-    with no sort-merge join; above the threshold the shuffle joins return.
+    """r12: below the session's broadcast threshold the 3-round rank chain
+    must run as broadcast-hash joins (the edge relation is never shuffled
+    per round) with no sort-merge join; with the threshold at -1 (the
+    forced-shuffle branch) the shuffle joins return.
     The localCheckpointed node/rank relations have no size stats, so
     without the explicit conditional hint the planner SMJ-shuffled the
     full edge list every iteration (measured 20 Exchange / 12 SMJ)."""
     from drive_health_etl_spark.operators import graph as G
+    from drive_health_etl_spark.session import spark_conf
 
     def chain_plan():
         df = G._pagerank_ranks(spark, sf_dir)
@@ -80,10 +82,6 @@ def test_pagerank_chain_broadcasts_below_node_threshold(spark, sf_dir):
     plan = chain_plan()
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 2 * G.PR_ITERS
-    old = G._PR_BCAST_NODES
-    G._PR_BCAST_NODES = -1  # force the 100 TB path
-    try:
-        big = chain_plan()
-    finally:
-        G._PR_BCAST_NODES = old
+    with spark_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        big = chain_plan()  # the 100 TB path
     assert "SortMergeJoin" in big

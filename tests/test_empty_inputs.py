@@ -149,6 +149,8 @@ EMPTY_SAFE = [
     "stat_srm_check",
     "dedup_suffix_lcs",
     "dedup_exactsubstr_clean",
+    "sim_ann_ivfpq",
+    "graph_hits",
 ]
 
 

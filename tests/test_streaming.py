@@ -185,8 +185,10 @@ def test_stream_static_enrichment_matches_batch(spark, sf_dir, tmp_path):
 def test_dedup_against_warehouse_strategies(spark, tmp_path):
     """Round-8 per-batch dedup (VERDICT r7 item 5): a steady-state
     micro-batch must dedup against the warehouse WITHOUT shuffling
-    warehouse keys (double-broadcast plan), the backlog path falls back to
-    the shuffle anti-join, and both drop exactly the already-written keys."""
+    warehouse keys (double-broadcast plan), a batch past the broadcast
+    threshold falls back to shuffle joins, and both drop exactly the
+    already-written keys."""
+    from drive_health_etl_spark.session import spark_conf
     from drive_health_etl_spark.streaming.ingest_stream import dedup_against_warehouse
 
     wh = str(tmp_path / "wh")
@@ -211,13 +213,13 @@ def test_dedup_against_warehouse_strategies(spark, tmp_path):
     kept = {r["idempotency_key"] for r in small.collect()}
     assert kept == {"new1", "new2"}
 
-    # large-batch fallback: single anti-join, planner free to pick the
-    # strategy (it auto-broadcasts the tiny build side at test scale) —
-    # the contract here is values, and that the double-broadcast plan is gone
-    big = dedup_against_warehouse(spark, wh, batch, broadcast_max_keys=2)
-    plan_big = big._jdf.queryExecution().executedPlan().toString()
-    assert plan_big.count("BroadcastHashJoin") <= 1
-    assert {r["idempotency_key"] for r in big.collect()} == {"new1", "new2"}
+    # large-batch fallback, forced by a -1 threshold: the contract here is
+    # values, and that the double-broadcast plan is gone
+    with spark_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        big = dedup_against_warehouse(spark, wh, batch)
+        plan_big = big._jdf.queryExecution().executedPlan().toString()
+        assert plan_big.count("BroadcastHashJoin") <= 1
+        assert {r["idempotency_key"] for r in big.collect()} == {"new1", "new2"}
 
     # first batch: warehouse absent -> passthrough
     assert dedup_against_warehouse(spark, str(tmp_path / "missing"), batch).count() == 4

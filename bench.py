@@ -15,6 +15,7 @@ collect/serialization cost) so timings measure the engine, not the driver.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -193,11 +194,11 @@ HEADLINE = [
 ]
 
 
-def run_one(spark, name: str, sf_dir: str) -> float:
-    fn = REGISTRY[name][0]
+def time_noop(fn, spark, sf_dir: str) -> float:
+    """Wall time of building `fn(spark, sf_dir)` and running it through the
+    noop sink: the one timing call of bench.py and the tools."""
     t0 = time.perf_counter()
-    df = fn(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
 
 
@@ -207,7 +208,7 @@ def run_one(spark, name: str, sf_dir: str) -> float:
 # load; the file must self-annotate so box noise can never again masquerade
 # as an engine regression). loadavg DURING the run is polluted by the bench's
 # own Spark tasks, so the idle verdict uses two signals that are not:
-#   - pre-run 1-min loadavg (sampled before the SparkSession exists), and
+#   - pre-run 1-min loadavg (sampled before the timing pass starts), and
 #   - external CPU share over the run: system-wide busy jiffies minus the
 #     bench's own process tree (python + the local[*] JVM), as a fraction of
 #     total machine capacity.
@@ -351,58 +352,55 @@ def external_shares(pre: dict[str, float], post: dict[str, float]) -> dict[str, 
     }
 
 
-def idle_verdict(
-    load_pre_1m: float, shares: dict[str, float], load1_counts: bool = True
-) -> tuple[bool, list[str]]:
-    """(box_was_idle, reasons-it-wasn't). Pure so the flag rule is testable.
+@contextlib.contextmanager
+def load_window(snapshot=load_snapshot):
+    """Bracket the body with one machine-load window. The yielded dict holds
+    `external_shares` over the body once it exits, or stays empty when
+    /proc/stat cannot be read (an empty window flags nothing)."""
+    shares: dict[str, float] = {}
+    pre = snapshot()
+    yield shares
+    post = snapshot()
+    if pre is not None and post is not None:
+        shares.update(external_shares(pre, post))
 
-    `load1_counts=False` drops the loadavg criterion: on RETRY attempts the
-    1-min loadavg is polluted by the bench's own just-finished Spark tasks
-    (32 busy cores decay out of load1 over minutes), so only the two
-    self-excluding signals — external CPU share and iowait over the attempt
-    window — can honestly judge idleness there."""
+
+def window_flagged(shares: dict | None) -> list[str]:
+    """Reasons a load window is untrustworthy: the one place the share
+    thresholds are applied (per-query windows, the whole run, the idle
+    wait's polls and the probes' table cells)."""
+    if not shares:
+        return []
     reasons = []
-    if load1_counts and load_pre_1m > IDLE_LOAD1_MAX:
-        reasons.append(f"pre-run load1 {load_pre_1m:.2f} > {IDLE_LOAD1_MAX}")
-    if shares["external_cpu_share"] > IDLE_EXT_SHARE_MAX:
-        reasons.append(
-            f"external CPU share {shares['external_cpu_share']:.1%} > {IDLE_EXT_SHARE_MAX:.0%}"
-        )
-    if shares["iowait_share"] > IDLE_IOWAIT_SHARE_MAX:
-        reasons.append(f"iowait share {shares['iowait_share']:.1%} > {IDLE_IOWAIT_SHARE_MAX:.0%}")
     if shares.get("steal_share", 0.0) > IDLE_STEAL_SHARE_MAX:
-        reasons.append(
-            f"hypervisor steal share {shares['steal_share']:.1%} > {IDLE_STEAL_SHARE_MAX:.0%}"
-        )
+        reasons.append(f"steal {shares['steal_share']:.1%}")
+    if shares.get("external_cpu_share", 0.0) > IDLE_EXT_SHARE_MAX:
+        reasons.append(f"external {shares['external_cpu_share']:.1%}")
+    if shares.get("iowait_share", 0.0) > IDLE_IOWAIT_SHARE_MAX:
+        reasons.append(f"iowait {shares['iowait_share']:.1%}")
+    return reasons
+
+
+def idle_verdict(load_pre_1m: float, shares: dict[str, float]) -> tuple[bool, list[str]]:
+    """(box_was_idle, reasons-it-wasn't) for the whole timing pass: the
+    pre-run 1-min loadavg (sampled before the pass's own tasks could raise
+    it) plus the pass window's shares."""
+    reasons = []
+    if load_pre_1m > IDLE_LOAD1_MAX:
+        reasons.append(f"pre-run load1 {load_pre_1m:.2f} > {IDLE_LOAD1_MAX}")
+    reasons += window_flagged(shares)
     return (not reasons, reasons)
 
 
-# Idle-gated refresh (round-9: VERDICT r8 item 1 — the r8 file shipped with
-# box_idle=false and a -17% ingest figure that idle re-timing disproved; the
-# annotation was advisory, now it is policy): when an attempt's window was
-# not idle, the whole timing pass retries (bounded, with backoff) and the
-# first idle attempt is committed verbatim. If NO attempt is idle, the file
-# carries per-query MINIMA across attempts (a floor under external load is
-# still an upper bound on engine cost) plus the full attempt history, so the
-# judge can see exactly what was tried.
-MAX_BENCH_ATTEMPTS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "5")))
-ATTEMPT_BACKOFF_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_BACKOFF", "30"))
-
-# Opportunistic idle-window mode (round-10: VERDICT r9 item 4 — r9's final
-# file went box_idle=false by honest exhaustion, 3/3 attempts on a busy box
-# with a capped linear backoff that gives up within minutes). Instead of
-# starting each attempt blind, poll the external-CPU/iowait shares over
-# short windows and START the attempt only once a window reads idle, up to
-# a shared time budget across the whole retry loop. The budget bounds the
-# worst case (a box that never quiets still produces min-merged attempts);
-# a box that quiets within the budget ships box_idle=true.
-IDLE_WAIT_BUDGET_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_WAIT", "600"))
-IDLE_POLL_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_POLL", "15"))
+# Start gate (round 10): before the timing pass, poll the load shares over
+# short windows and start only once a window reads idle, up to a time budget.
+# A box that never quiets still gets timed, and its file says so.
+IDLE_WAIT_BUDGET_SEC = 600.0
+IDLE_POLL_SEC = 15.0
 
 
 def wait_for_idle_window(
     budget_sec: float,
-    load1_counts: bool = True,
     poll_sec: float = IDLE_POLL_SEC,
     snapshot=load_snapshot,
     loadavg=None,
@@ -412,39 +410,28 @@ def wait_for_idle_window(
     """Poll until one poll_sec window satisfies the idle thresholds, or the
     budget runs out. Returns {"went_idle", "waited_sec", "polls"} for the
     artifact's idle_waits record. Pure-injectable (snapshot/loadavg/sleep/
-    clock) so the polling rule is pytest-covered without real sleeps.
-
-    load1 participates only when `load1_counts` (first attempt): on retries
-    the 1-min loadavg is polluted by our own just-finished Spark tasks, the
-    same rule as idle_verdict."""
+    clock) so the polling rule is pytest-covered without real sleeps."""
     loadavg = loadavg or os.getloadavg
     sleep = sleep or time.sleep
     clock = clock or time.monotonic
     t0 = clock()
     polls: list[dict] = []
     while True:
-        pre = snapshot()
-        sleep(poll_sec)
-        post = snapshot()
+        with load_window(snapshot) as shares:
+            sleep(poll_sec)
         waited = clock() - t0
-        if pre is None or post is None:
+        if not shares:
             # no /proc/stat: the load gate is vacuous on this platform, so
             # don't burn the budget polling a signal that cannot exist
             return {"went_idle": True, "waited_sec": round(waited, 1),
                     "polls": polls, "note": "no load signal on this platform"}
-        shares = external_shares(pre, post)
         load1 = loadavg()[0]
-        ok = (
-            shares["external_cpu_share"] <= IDLE_EXT_SHARE_MAX
-            and shares["iowait_share"] <= IDLE_IOWAIT_SHARE_MAX
-            and shares.get("steal_share", 0.0) <= IDLE_STEAL_SHARE_MAX
-            and (not load1_counts or load1 <= IDLE_LOAD1_MAX)
-        )
+        ok = load1 <= IDLE_LOAD1_MAX and not window_flagged(shares)
         polls.append(
             {
                 "external_cpu_share": shares["external_cpu_share"],
                 "iowait_share": shares["iowait_share"],
-                "steal_share": shares.get("steal_share", 0.0),
+                "steal_share": shares["steal_share"],
                 "load1": round(load1, 2),
                 "idle": ok,
             }
@@ -462,24 +449,7 @@ def wait_for_idle_window(
 # contradiction). A query whose own sample window shows a steal, external or
 # iowait burst is re-sampled (bounded); the fastest pass ships, marked
 # flagged_and_kept when that pass was flagged.
-PER_QUERY_RESAMPLE_MAX = max(
-    0, int(os.environ.get("SPARK_GRAFT_BENCH_QUERY_RESAMPLES", "2"))
-)
-
-
-def window_flagged(shares: dict | None) -> list[str]:
-    """Reasons a per-query sample window is untrustworthy (same thresholds
-    as the whole-run gate, applied to the query's own window)."""
-    if not shares:
-        return []
-    reasons = []
-    if shares.get("steal_share", 0.0) > IDLE_STEAL_SHARE_MAX:
-        reasons.append(f"steal {shares['steal_share']:.1%}")
-    if shares.get("external_cpu_share", 0.0) > IDLE_EXT_SHARE_MAX:
-        reasons.append(f"external {shares['external_cpu_share']:.1%}")
-    if shares.get("iowait_share", 0.0) > IDLE_IOWAIT_SHARE_MAX:
-        reasons.append(f"iowait {shares['iowait_share']:.1%}")
-    return reasons
+PER_QUERY_RESAMPLE_MAX = 2
 
 
 def sample_query(run, snapshot=load_snapshot, loadavg=None) -> tuple[float, dict]:
@@ -499,36 +469,33 @@ def sample_query(run, snapshot=load_snapshot, loadavg=None) -> tuple[float, dict
     min (VERDICT r11 item 3), plus the window's external/steal shares: a
     query whose window shows a big share was timed on a loaded box."""
     loadavg = loadavg or os.getloadavg
-    q_snap = snapshot()
-    samples = [run(), run()]
-    while len(samples) < 10:
-        lo1, lo2 = sorted(samples)[:2]
-        if lo2 <= 1.1 * lo1:
-            break
-        samples.append(run())
+    with load_window(snapshot) as shares:
+        samples = [run(), run()]
+        while len(samples) < 10:
+            lo1, lo2 = sorted(samples)[:2]
+            if lo2 <= 1.1 * lo1:
+                break
+            samples.append(run())
     lo1, lo2 = sorted(samples)[:2]
     # measurement-quality record: spread = how well the reported min was
     # reproduced (lo2/lo1); residual cross-RUN drift beyond this is VM
     # background load, not engine behavior
     rec = {"n": len(samples), "spread": round(lo2 / lo1, 3) if lo1 else 1.0,
            "first": round(samples[0], 3)}
-    q_post = snapshot()
-    if q_snap is not None and q_post is not None:
-        rec.update(external_shares(q_snap, q_post))
+    if shares:
+        rec.update(shares)
         rec["load1"] = round(loadavg()[0], 2)
     return round(min(samples), 3), rec
 
 
 def sample_query_gated(
-    run, snapshot=load_snapshot, loadavg=None, max_resamples=None
+    run, snapshot=load_snapshot, loadavg=None, max_resamples=PER_QUERY_RESAMPLE_MAX
 ) -> tuple[float, dict]:
     """Re-sample a query whose window shows a steal/external/iowait burst,
     stopping at the first CLEAN pass. Ship the fastest pass: load only
     inflates wall time, so a flagged minimum is still an upper bound on
     engine cost. When the shipped pass is flagged it is marked
     flagged_and_kept=true so the artifact is self-identifying."""
-    if max_resamples is None:
-        max_resamples = PER_QUERY_RESAMPLE_MAX
     passes: list[tuple[float, dict, list[str]]] = []
     for _ in range(1 + max_resamples):
         t, rec = sample_query(run, snapshot, loadavg)
@@ -544,43 +511,35 @@ def sample_query_gated(
         rec = dict(rec)
         rec["resamples"] = len(passes) - 1
         rec["flagged_windows"] = [p[2] for p in passes if p[2]]
-    # `first` is the coldest sample of the attempt: take it from pass 1
+    # `first` is the coldest sample of the query: take it from pass 1
     rec["first"] = passes[0][1]["first"]
     return t, rec
 
 
-def timing_attempt(spark, first: bool) -> dict:
-    """One full timing pass over HEADLINE (plus the extra ingest sample),
+def timing_pass(spark) -> dict:
+    """The timing pass over HEADLINE (plus the extra ingest sample),
     bracketed by its own load window. Returns {"timings", "sampling",
-    "load"} — "load" carries this attempt's box_idle verdict."""
+    "load"} — "load" carries the pass's box_idle verdict."""
     load_pre = os.getloadavg()
-    snap_pre = load_snapshot()
-
     timings: dict[str, float] = {}
     sampling: dict[str, dict] = {}
-    for name in HEADLINE:
-        timings[name], sampling[name] = sample_query_gated(
-            lambda name=name: run_one(spark, name, SF_DIR)
+    with load_window() as shares:
+        for name in HEADLINE:
+            fn = REGISTRY[name][0]
+            timings[name], sampling[name] = sample_query_gated(
+                lambda fn=fn: time_noop(fn, spark, SF_DIR)
+            )
+        # ingest_rows_per_sec is the headline comparable to the baseline's
+        # msgs/min target — take one extra sample (min of 3 total): VM
+        # background load has been observed to double a single run
+        timings["pipeline_ingest_e2e"] = round(
+            min(timings["pipeline_ingest_e2e"],
+                time_noop(REGISTRY["pipeline_ingest_e2e"][0], spark, SF_DIR)),
+            3,
         )
-
-    # ingest_rows_per_sec is the headline comparable to the baseline's
-    # msgs/min target — take one extra sample (min of 3 total): VM background
-    # load has been observed to double a single run
-    timings["pipeline_ingest_e2e"] = round(
-        min(timings["pipeline_ingest_e2e"], run_one(spark, "pipeline_ingest_e2e", SF_DIR)), 3
-    )
-
-    # Attempt-window load verdict (loadavg only counts on the FIRST attempt
-    # — see idle_verdict)
-    snap_post = load_snapshot()
-    if snap_pre is not None and snap_post is not None:
-        shares = external_shares(snap_pre, snap_post)
-    else:
-        shares = {"external_cpu_share": 0.0, "iowait_share": 0.0}
-    box_idle, load_reasons = idle_verdict(load_pre[0], shares, load1_counts=first)
+    box_idle, load_reasons = idle_verdict(load_pre[0], shares)
     load_detail = {
         "pre_run_loadavg": [round(x, 2) for x in load_pre],
-        "pre_run_load1_authoritative": first,
         "post_run_load1": round(os.getloadavg()[0], 2),
         **shares,
         "box_idle": box_idle,
@@ -594,52 +553,6 @@ def timing_attempt(spark, first: bool) -> dict:
     return {"timings": timings, "sampling": sampling, "load": load_detail}
 
 
-def merge_attempts(attempts: list[dict]) -> dict:
-    """Pure retry-merge rule (pytest-covered). The retry loop stops at the
-    first idle attempt, so: if any attempt was idle, that attempt is the
-    artifact verbatim; otherwise the artifact is the per-query MINIMUM
-    across attempts (external load only inflates wall time, so the min is
-    the tightest honest upper bound on engine cost) with box_idle=false and
-    merged_min_of_attempts=true. Either way `attempt_history` records every
-    attempt's verdict so nothing is hidden."""
-    history = [
-        {
-            "attempt": i + 1,
-            "total": round(sum(a["timings"].values()), 3),
-            "box_idle": a["load"]["box_idle"],
-            "non_idle_reasons": a["load"]["non_idle_reasons"],
-            "external_cpu_share": a["load"]["external_cpu_share"],
-            "pre_run_load1": a["load"]["pre_run_loadavg"][0],
-        }
-        for i, a in enumerate(attempts)
-    ]
-    idle = [a for a in attempts if a["load"]["box_idle"]]
-    if idle:
-        base = idle[0]
-        merged = {
-            "timings": dict(base["timings"]),
-            "sampling": dict(base["sampling"]),
-            "load": dict(base["load"]),
-        }
-        merged["load"]["merged_min_of_attempts"] = False
-    else:
-        timings, sampling = {}, {}
-        for name in attempts[0]["timings"]:
-            src = min(range(len(attempts)), key=lambda i: attempts[i]["timings"][name])
-            timings[name] = attempts[src]["timings"][name]
-            sampling[name] = {**attempts[src]["sampling"].get(name, {}), "from_attempt": src + 1}
-        merged = {
-            "timings": timings,
-            "sampling": sampling,
-            "load": dict(attempts[-1]["load"]),
-        }
-        merged["load"]["box_idle"] = False
-        merged["load"]["merged_min_of_attempts"] = len(attempts) > 1
-    merged["load"]["attempt_history"] = history
-    merged["load"]["attempts"] = len(attempts)
-    return merged
-
-
 def main() -> None:
     spark = get_spark("dhe-bench", cpus=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
@@ -648,42 +561,16 @@ def main() -> None:
     # Warm the JVM/parquet footers AND the ingest chain's generated code once
     # so timings measure steady state (first ingest run pays ~10s of codegen
     # + C2 compilation that a long-running cluster never re-pays).
-    run_one(spark, "a1_group_count", SF_DIR)
-    run_one(spark, "a5_agg_suite", SF_DIR)
-    run_one(spark, "pipeline_ingest_e2e", SF_DIR)
+    for name in ("a1_group_count", "a5_agg_suite", "pipeline_ingest_e2e"):
+        time_noop(REGISTRY[name][0], spark, SF_DIR)
 
-    # Idle-gated refresh: before each timing pass, opportunistically WAIT
-    # (shared budget) for an idle poll window; then run the pass. Commit the
-    # first idle attempt, else per-query minima with full attempt history.
-    attempts: list[dict] = []
-    idle_waits: list[dict] = []
-    wait_budget = IDLE_WAIT_BUDGET_SEC
-    for i in range(MAX_BENCH_ATTEMPTS):
-        if wait_budget >= IDLE_POLL_SEC:
-            w = wait_for_idle_window(wait_budget, load1_counts=(i == 0))
-            wait_budget -= max(w["waited_sec"], IDLE_POLL_SEC)
-            idle_waits.append({"attempt": i + 1, **w})
-            if not w["went_idle"]:
-                print(
-                    f"# idle-wait budget exhausted before attempt {i + 1} "
-                    f"(box never quieted) — proceeding under load",
-                    file=sys.stderr,
-                )
-        attempts.append(timing_attempt(spark, first=(i == 0)))
-        if attempts[-1]["load"]["box_idle"]:
-            break
-        if i + 1 < MAX_BENCH_ATTEMPTS and wait_budget < IDLE_POLL_SEC:
-            # budget gone: fall back to the blind linear backoff
-            print(
-                f"# attempt {i + 1} not idle "
-                f"({'; '.join(attempts[-1]['load']['non_idle_reasons'])}) — "
-                f"backing off {ATTEMPT_BACKOFF_SEC * (i + 1):.0f}s and retrying",
-                file=sys.stderr,
-            )
-            time.sleep(ATTEMPT_BACKOFF_SEC * (i + 1))
-    merged = merge_attempts(attempts)
-    timings, sampling, load_detail = merged["timings"], merged["sampling"], merged["load"]
-    load_detail["idle_waits"] = idle_waits
+    idle_wait = wait_for_idle_window(IDLE_WAIT_BUDGET_SEC)
+    if not idle_wait["went_idle"]:
+        print("# idle-wait budget exhausted (box never quieted) — proceeding under load",
+              file=sys.stderr)
+    timed = timing_pass(spark)
+    timings, sampling, load_detail = timed["timings"], timed["sampling"], timed["load"]
+    load_detail["idle_waits"] = [idle_wait]
     box_idle, load_reasons = load_detail["box_idle"], load_detail["non_idle_reasons"]
     total = round(sum(timings.values()), 3)
 
@@ -698,8 +585,8 @@ def main() -> None:
     # ANN quality: recall@3 of each approximate index vs the brute-force
     # ground truth (per-query overlap of neighbor sets, averaged). A fast
     # ANN that misses the true neighbors is not "done" — recall is the
-    # second axis of the benchmark. Correctness, not timing: one pass
-    # regardless of attempts.
+    # second axis of the benchmark. Correctness, not timing: one untimed
+    # pass.
     truth = {
         (r["query_id"], r["neighbor_id"])
         for r in REGISTRY["sim_cosine_topk"][0](spark, SF_DIR)

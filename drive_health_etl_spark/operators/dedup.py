@@ -2524,7 +2524,7 @@ def dedup_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n²)), applied directly — with chunk candidates the Gravano count
     filter no longer pays for its gram-array shuffle.
 
-    Q grows with the corpus (12 -> 16 above {20k} docs, the classic gram
+    Q grows with the corpus (12 -> 16 above 20,000 docs, the classic gram
     width knob): the WORD vocabulary is closed, so wider grams keep chunk
     contents discriminative as the corpus grows. Chunk/gram hashing is
     exactness-safe by construction: a hash collision can only ADD a

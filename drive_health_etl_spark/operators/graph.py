@@ -675,17 +675,17 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adamic-Adar link prediction (Adamic & Adar, Social Networks 2003)
     over the customer-part bipartite graph: for each customer pair, score
     = sum over commonly-purchased parts of 1/ln(deg(part)) — rare shared
-    interests weigh more than popular ones — and report the top-{20}
+    interests weigh more than popular ones — and report the top-20
     predicted links. The classic common-neighbor predictor behind
     people-you-may-know / co-purchase recommendations.
 
-    Hub guard: parts with more than {64} distinct buyers are excluded
+    Hub guard: parts with more than 64 distinct buyers are excluded
     BEFORE pair expansion — the standard Adamic-Adar scale device (a hub's
     per-pair weight 1/ln(deg) is the smallest in the graph while its pair
     count grows deg^2, so hubs cost quadratically and change rankings
     negligibly; the exclusion is part of the operator's declared
     semantics, applied identically in the oracle). With the cap, the
-    self-join on part keys expands at most C({64},2) pairs per part — a
+    self-join on part keys expands at most C(64,2) pairs per part — a
     per-key constant, never all-pairs.
 
     Float discipline: deg is an exact distinct count; 1/ln(deg) is an

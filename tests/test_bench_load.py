@@ -7,6 +7,7 @@ the artifact self-annotate: /proc/stat parsing, external-CPU attribution
 No Spark needed.
 """
 
+import itertools
 import os
 import subprocess
 import sys
@@ -126,75 +127,6 @@ def test_tree_cpu_grows_when_we_burn_cpu():
     assert s["external_cpu_share"] < 0.9  # our own burn never reads as ~all-external
 
 
-# --- idle-gated refresh merge rule (VERDICT r8 item 1) ----------------------
-
-from bench import merge_attempts, IDLE_LOAD1_MAX as _L1  # noqa: E402
-
-
-def _fake_attempt(timings, idle, reasons=None, ext=0.0, load1=0.2, first=True):
-    return {
-        "timings": dict(timings),
-        "sampling": {k: {"n": 2, "spread": 1.0} for k in timings},
-        "load": {
-            "pre_run_loadavg": [load1, load1, load1],
-            "pre_run_load1_authoritative": first,
-            "post_run_load1": load1,
-            "external_cpu_share": ext,
-            "iowait_share": 0.0,
-            "box_idle": idle,
-            "non_idle_reasons": reasons or [],
-            "thresholds": {},
-        },
-    }
-
-
-def test_merge_single_idle_attempt_is_verbatim():
-    a = _fake_attempt({"q1": 1.0, "q2": 2.0}, idle=True)
-    m = merge_attempts([a])
-    assert m["timings"] == {"q1": 1.0, "q2": 2.0}
-    assert m["load"]["box_idle"] is True
-    assert m["load"]["merged_min_of_attempts"] is False
-    assert m["load"]["attempts"] == 1
-    assert len(m["load"]["attempt_history"]) == 1
-
-
-def test_merge_uses_first_idle_attempt_verbatim():
-    # loop appends a non-idle attempt, then an idle one, and stops
-    a1 = _fake_attempt({"q1": 3.0, "q2": 1.5}, idle=False, reasons=["pre-run load1 3.8 > 1.0"])
-    a2 = _fake_attempt({"q1": 1.8, "q2": 2.0}, idle=True, first=False)
-    m = merge_attempts([a1, a2])
-    # verbatim from the idle attempt — even where the loaded attempt was
-    # accidentally faster on one query (q2): verbatim beats cherry-picking
-    assert m["timings"] == {"q1": 1.8, "q2": 2.0}
-    assert m["load"]["box_idle"] is True
-    assert m["load"]["merged_min_of_attempts"] is False
-    hist = m["load"]["attempt_history"]
-    assert [h["box_idle"] for h in hist] == [False, True]
-    assert hist[0]["non_idle_reasons"] == ["pre-run load1 3.8 > 1.0"]
-
-
-def test_merge_never_idle_takes_per_query_minima_with_history():
-    a1 = _fake_attempt({"q1": 3.0, "q2": 1.5}, idle=False, reasons=["r1"], ext=0.2)
-    a2 = _fake_attempt({"q1": 1.8, "q2": 2.0}, idle=False, reasons=["r2"], ext=0.1, first=False)
-    m = merge_attempts([a1, a2])
-    assert m["timings"] == {"q1": 1.8, "q2": 1.5}
-    assert m["load"]["box_idle"] is False
-    assert m["load"]["merged_min_of_attempts"] is True
-    assert m["sampling"]["q1"]["from_attempt"] == 2
-    assert m["sampling"]["q2"]["from_attempt"] == 1
-    assert [h["attempt"] for h in m["load"]["attempt_history"]] == [1, 2]
-    assert m["load"]["attempts"] == 2
-
-
-def test_retry_verdict_ignores_self_polluted_loadavg():
-    # retry attempts: our own just-finished tasks inflate load1 — the
-    # verdict must rest on the self-excluding shares only
-    ok = {"external_cpu_share": 0.0, "iowait_share": 0.0}
-    assert idle_verdict(_L1 + 30.0, ok, load1_counts=False) == (True, [])
-    idle, why = idle_verdict(0.0, {"external_cpu_share": 0.5, "iowait_share": 0.0}, load1_counts=False)
-    assert not idle and "external" in why[0]
-
-
 def test_tree_counts_reaped_children():
     """A short-lived child that burns CPU and exits inside the window must
     still be attributed to the tree (via the parent's cutime/cstime), not
@@ -249,7 +181,7 @@ def _fake_env(ext_shares, load1s):
 
 def test_idle_wait_returns_on_first_quiet_window():
     snap, la, sl, ck = _fake_env([0.5, 0.3, 0.01], [0.2, 0.2, 0.2])
-    w = wait_for_idle_window(600.0, load1_counts=True, poll_sec=15.0,
+    w = wait_for_idle_window(600.0, poll_sec=15.0,
                              snapshot=snap, loadavg=la, sleep=sl, clock=ck)
     assert w["went_idle"] is True
     assert len(w["polls"]) == 3
@@ -259,24 +191,20 @@ def test_idle_wait_returns_on_first_quiet_window():
 
 def test_idle_wait_budget_exhaustion_reports_not_idle():
     snap, la, sl, ck = _fake_env([0.5] * 10, [0.2] * 10)
-    w = wait_for_idle_window(40.0, load1_counts=True, poll_sec=15.0,
+    w = wait_for_idle_window(40.0, poll_sec=15.0,
                              snapshot=snap, loadavg=la, sleep=sl, clock=ck)
     assert w["went_idle"] is False
     assert w["waited_sec"] <= 40.0
     assert all(p["idle"] is False for p in w["polls"])
 
 
-def test_idle_wait_load1_only_counts_on_first_attempt():
-    # shares quiet but loadavg high (our own decaying tasks): a retry
-    # attempt must accept the window, the first attempt must not
+def test_idle_wait_rejects_high_load1():
+    # shares quiet but loadavg high: the window is not idle
     snap, la, sl, ck = _fake_env([0.01, 0.01], [25.0, 25.0])
-    w = wait_for_idle_window(20.0, load1_counts=False, poll_sec=15.0,
-                             snapshot=snap, loadavg=la, sleep=sl, clock=ck)
-    assert w["went_idle"] is True and w["waited_sec"] == 15.0
-    snap, la, sl, ck = _fake_env([0.01, 0.01], [25.0, 25.0])
-    w = wait_for_idle_window(20.0, load1_counts=True, poll_sec=15.0,
+    w = wait_for_idle_window(20.0, poll_sec=15.0,
                              snapshot=snap, loadavg=la, sleep=sl, clock=ck)
     assert w["went_idle"] is False
+    assert w["polls"][0]["load1"] == 25.0 and w["polls"][0]["idle"] is False
 
 
 def test_idle_wait_vacuous_without_proc_stat():
@@ -288,7 +216,7 @@ def test_idle_wait_vacuous_without_proc_stat():
 
 def test_idle_wait_poll_record_is_bounded():
     snap, la, sl, ck = _fake_env([0.5] * 100, [0.2] * 100)
-    w = wait_for_idle_window(100 * 15.0 - 1, load1_counts=True, poll_sec=15.0,
+    w = wait_for_idle_window(100 * 15.0 - 1, poll_sec=15.0,
                              snapshot=snap, loadavg=la, sleep=sl, clock=ck)
     assert len(w["polls"]) <= 40
 
@@ -437,3 +365,88 @@ def test_gated_all_flagged_keeps_min_and_says_so():
     assert rec["flagged_and_kept"] is True
     assert rec["resamples"] == 2
     assert len(rec["flagged_windows"]) == 3
+
+
+# --- one measurement core: time_noop, load_window, one threshold rule ------
+
+from bench import load_window, time_noop  # noqa: E402
+
+
+class _NoopWriter:
+    """Stands in for a DataFrame: records the noop-sink write chain."""
+
+    def __init__(self, calls):
+        self.calls = calls
+
+    @property
+    def write(self):
+        self.calls.append("write")
+        return self
+
+    def format(self, fmt):
+        self.calls.append(("format", fmt))
+        return self
+
+    def mode(self, mode):
+        self.calls.append(("mode", mode))
+        return self
+
+    def save(self):
+        self.calls.append("save")
+
+
+def test_time_noop_builds_then_writes_noop_sink():
+    calls = []
+
+    def build(spark, sf_dir):
+        calls.append(("build", spark, sf_dir))
+        return _NoopWriter(calls)
+
+    wall = time_noop(build, "SPARK", "/sf")
+    assert calls == [("build", "SPARK", "/sf"), "write", ("format", "noop"),
+                     ("mode", "overwrite"), "save"]
+    assert wall >= 0.0
+
+
+def test_time_noop_wall_includes_the_build():
+    def slow_build(spark, sf_dir):
+        time.sleep(0.05)
+        return _NoopWriter([])
+
+    assert time_noop(slow_build, None, "") >= 0.05
+
+
+def test_load_window_gives_shares_of_injected_snapshots():
+    pre = {"busy": 100.0, "iowait": 0.0, "total": 1000.0, "tree": 50.0,
+           "kthread": 0.0, "steal": 0.0}
+    post = {"busy": 400.0, "iowait": 20.0, "total": 2000.0, "tree": 300.0,
+            "kthread": 0.0, "steal": 10.0}
+    snaps = iter([pre, post])
+    with load_window(lambda: next(snaps)) as shares:
+        assert shares == {}  # filled only when the body exits
+    assert shares == external_shares(pre, post)
+
+
+def test_load_window_without_signal_stays_empty():
+    with load_window(lambda: None) as shares:
+        pass
+    assert shares == {}
+    assert window_flagged(shares) == []
+
+
+_GRID = [0.0, IDLE_EXT_SHARE_MAX, IDLE_EXT_SHARE_MAX + 0.001, 0.5]
+
+
+def test_one_threshold_rule_for_cells_verdicts_and_windows():
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools"))
+    from scale_probe import probe_load_cell
+
+    for ext, io, steal in itertools.product(_GRID, repeat=3):
+        s = {"external_cpu_share": ext, "iowait_share": io,
+             "kernel_cpu_share": 0.0, "steal_share": steal}
+        flags = window_flagged(s)
+        assert (probe_load_cell(s) == "idle") == (flags == []), s
+        assert idle_verdict(0.0, s) == (flags == [], flags)
+        idle, why = idle_verdict(IDLE_LOAD1_MAX + 0.01, s)
+        assert not idle and why[1:] == flags

@@ -103,7 +103,6 @@ def test_purge_package_caches_clears_cache_dicts(monkeypatch):
     emptied, without unpersisting handles of the dead session. A stand-in
     cache keeps the suite's live entries out of the purge."""
     from drive_health_etl_spark.operators import fitcache
-    from scale_probe import _purge_package_caches
 
     class DeadHandle:
         def unpersist(self):
@@ -112,7 +111,7 @@ def test_purge_package_caches_clears_cache_dicts(monkeypatch):
     monkeypatch.setattr(fitcache, "_CACHE", fitcache.FitCache())
     fitcache._CACHE.get_or_build(("app", "sf", "sentinel"), DeadHandle)
     fitcache._CACHE.get_or_build(("app", "sf", "vocab_size"), lambda: 7)
-    _purge_package_caches()
+    fitcache.clear()
     assert fitcache._CACHE == {}
 
 

@@ -11,9 +11,10 @@ files cannot settle it. This tool removes every between-run variable:
 - ONE Spark session (one JVM, one box window) runs BOTH code versions;
 - the two checkouts' ``drive_health_etl_spark`` packages are swapped in
   and out of ``sys.modules`` with per-variant snapshots, so each
-  variant's module-level fit caches survive across pairs (both variants
-  are measured WARM, the bench's steady state — a delete-and-reimport
-  swap would re-fit every pair and measure cold cost instead);
+  variant's one dataset cache (``fitcache._CACHE``) survives across pairs
+  (both variants are measured WARM, the bench's steady state — a
+  delete-and-reimport swap would re-fit every pair and measure cold cost
+  instead);
 - runs are interleaved in alternating order (A,B / B,A / A,B ...) so a
   monotone host drift cancels out of the pairwise deltas instead of
   biasing one variant;
@@ -28,8 +29,11 @@ that differs per variant runs in the driver while building the plan.
 Writes ABCHECK.json (bench.py folds it into BENCH_DETAIL.json's
 ``cross_round_ab`` so the methodology travels with the bench artifact).
 
-Run: python tools/ab_probe.py [--ref <commit>] [--pairs N]
-Requires: a worktree of <ref> (created automatically under /tmp).
+Run: python tools/ab_probe.py --ref <commit> [--pairs N]
+Requires: a worktree of <ref> (created automatically under /tmp), and
+``drive_health_etl_spark/session.py`` identical at <ref> and HEAD — both
+variants run in one session built by HEAD's ``get_spark``, so the tool
+exits when that file differs.
 """
 
 from __future__ import annotations
@@ -40,19 +44,14 @@ import os
 import statistics
 import subprocess
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from bench import (  # noqa: E402
-    external_shares,
-    load_snapshot,
-    wait_for_idle_window,
-)
+from bench import load_window, time_noop, wait_for_idle_window  # noqa: E402
 
 PKG = "drive_health_etl_spark"
-DEFAULT_REF = "3597dbd"  # round-9 HEAD
+SESSION_PY = f"{PKG}/session.py"
 N_PAIRS = 5
 
 # top r9->r10 risers (judge's diff of BENCH_DETAIL r9 vs r10)
@@ -97,13 +96,6 @@ def activate(v: Variant, all_variants: list[Variant]):
     return v.registry
 
 
-def run_one(spark, registry, name: str, sf_dir: str) -> float:
-    fn = registry[name][0]
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
 def ensure_worktree(ref: str) -> str:
     path = f"/tmp/ab_{ref}"
     if not os.path.isdir(os.path.join(path, PKG)):
@@ -116,7 +108,7 @@ def ensure_worktree(ref: str) -> str:
 
 def main() -> None:
     argv = sys.argv[1:]
-    ref, pairs = DEFAULT_REF, N_PAIRS
+    ref, pairs = None, N_PAIRS
     global RISERS, CONTROLS, QUERIES
     while argv:
         a = argv.pop(0)
@@ -131,6 +123,14 @@ def main() -> None:
         else:
             sys.exit(f"unknown arg {a}")
     QUERIES = RISERS + CONTROLS
+    if ref is None:
+        sys.exit("usage: ab_probe.py --ref <commit> [--pairs N] "
+                 "[--risers q,...] [--controls q,...]")
+    if subprocess.run(["git", "-C", ROOT, "diff", "--quiet", ref, "HEAD", "--", SESSION_PY]
+                      ).returncode != 0:
+        sys.exit(f"{SESSION_PY} differs between {ref} and HEAD (or {ref} is not a "
+                 "commit): both variants would run under HEAD's get_spark confs, "
+                 "so the A/B would not be neutral")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     old_path = ensure_worktree(ref)
@@ -138,13 +138,11 @@ def main() -> None:
     v_new = Variant("HEAD", ROOT)
     variants = [v_old, v_new]
 
-    idle = wait_for_idle_window(
-        float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_WAIT", "300"))
-    )
+    idle = wait_for_idle_window(300.0)
     print(f"[ab] idle wait: {idle['went_idle']} after {idle['waited_sec']}s")
 
-    # session from the CURRENT repo's helper; session.py is identical at
-    # both refs (verified: empty diff), so neither variant is favored
+    # session from the CURRENT repo's helper; the session.py check above
+    # makes it the helper of both refs, so neither variant is favored
     from drive_health_etl_spark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -156,28 +154,23 @@ def main() -> None:
     for v in variants:
         reg = activate(v, variants)
         for q in QUERIES:
-            run_one(spark, reg, q, sf_dir)
+            time_noop(reg[q][0], spark, sf_dir)
     print("[ab] warm-up done")
 
-    snap0 = load_snapshot()
     results: dict[str, dict[str, list[float]]] = {
         q: {v.name: [] for v in variants} for q in QUERIES
     }
-    for i in range(pairs):
-        order = variants if i % 2 == 0 else variants[::-1]
-        for v in order:
-            reg = activate(v, variants)
-            for q in QUERIES:
-                results[q][v.name].append(run_one(spark, reg, q, sf_dir))
-        a, b = variants
-        print(f"[ab] pair {i + 1}/{pairs}: " + ", ".join(
-            f"{q} {results[q][a.name][-1]:.2f}/{results[q][b.name][-1]:.2f}"
-            for q in QUERIES))
-    snap1 = load_snapshot()
-    shares = (
-        external_shares(snap0, snap1)
-        if snap0 is not None and snap1 is not None else None
-    )
+    with load_window() as shares:
+        for i in range(pairs):
+            order = variants if i % 2 == 0 else variants[::-1]
+            for v in order:
+                reg = activate(v, variants)
+                for q in QUERIES:
+                    results[q][v.name].append(time_noop(reg[q][0], spark, sf_dir))
+            a, b = variants
+            print(f"[ab] pair {i + 1}/{pairs}: " + ", ".join(
+                f"{q} {results[q][a.name][-1]:.2f}/{results[q][b.name][-1]:.2f}"
+                for q in QUERIES))
 
     per_query = {}
     for q in QUERIES:
@@ -211,9 +204,7 @@ def main() -> None:
         "sf_dir": sf_dir,
         "pairs": pairs,
         "idle_wait": {k: idle[k] for k in ("went_idle", "waited_sec")},
-        "external_cpu_share_over_run": (
-            round(shares["external_cpu_share"], 4) if shares else None
-        ),
+        "external_cpu_share_over_run": shares.get("external_cpu_share"),
         "queries": per_query,
     }
     n_signal = sum(

@@ -20,6 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_noop  # noqa: E402
 from drive_health_etl_spark.plans.registry import REGISTRY  # noqa: E402
 from drive_health_etl_spark.session import get_spark  # noqa: E402
 
@@ -52,7 +53,7 @@ def main() -> None:
         fn = REGISTRY[name][0]
         spark.sparkContext.setJobDescription(f"profile: {name}")
         # warm fit caches / codegen with one untimed full run
-        fn(spark, args.sf).write.format("noop").mode("overwrite").save()
+        time_noop(fn, spark, args.sf)
         t0 = time.perf_counter()
         df = fn(spark, args.sf)
         t_build = time.perf_counter() - t0
@@ -62,11 +63,7 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             execs.append(time.perf_counter() - t0)
         # a fresh build each sample is what bench.py times; report that too
-        full = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            full.append(time.perf_counter() - t0)
+        full = [time_noop(fn, spark, args.sf) for _ in range(2)]
         if args.tag:
             with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(spark.sparkContext._jvm.PythonSQLUtils.explainString(

@@ -32,16 +32,10 @@ import math
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import (  # noqa: E402  (repo root)
-    IDLE_EXT_SHARE_MAX,
-    IDLE_IOWAIT_SHARE_MAX,
-    external_shares,
-    load_snapshot,
-)
+from bench import load_window, time_noop, window_flagged  # noqa: E402  (repo root)
 
 SFS = [("0.001", "/root/testdata/sf0.001"), ("0.01", "/root/testdata/sf0.01"), ("0.1", "/root/testdata/sf0.1")]
 
@@ -352,23 +346,19 @@ def probe_load_cell(shares: dict[str, float] | None) -> str:
     (round-9: VERDICT r8 item 2 — the r8 substring-ladder row read 17.47s
     vs 12.85s measured mid-window and the file couldn't say which number
     was the engine; every row now self-annotates like bench rows do).
-    Loadavg is polluted by the probe's own Spark tasks, so the verdict uses
-    only the self-excluding signals: external CPU share and iowait over the
-    probe's own window (thresholds shared with bench.py)."""
-    if shares is None:
+    Loadavg is polluted by the probe's own Spark tasks, so the verdict is
+    bench.window_flagged over the probe's own window: "idle" exactly when
+    it flags nothing, "-" when the window has no load signal."""
+    if not shares:
         return "-"
-    ext, io = shares["external_cpu_share"], shares["iowait_share"]
-    steal = shares.get("steal_share", 0.0)
-    from bench import IDLE_STEAL_SHARE_MAX
-
-    if (ext <= IDLE_EXT_SHARE_MAX and io <= IDLE_IOWAIT_SHARE_MAX
-            and steal <= IDLE_STEAL_SHARE_MAX):
+    flags = window_flagged(shares)
+    if not flags:
         return "idle"
-    cell = f"ext {ext:.0%}, io {io:.0%}"
-    if steal > IDLE_STEAL_SHARE_MAX:
+    cell = f"ext {shares['external_cpu_share']:.0%}, io {shares['iowait_share']:.0%}"
+    if any(f.startswith("steal") for f in flags):
         # hypervisor contention: the box itself ran slow — a different
         # invalidation than a competing local process
-        cell += f", steal {steal:.0%}"
+        cell += f", steal {shares['steal_share']:.0%}"
     return cell
 
 
@@ -428,31 +418,19 @@ COLD_WALLS: dict[tuple[str, str], float] = {}  # (name, sf_dir) -> first-call wa
 
 
 def _run(spark, name: str, sf_dir: str) -> float:
+    """One cold call (recorded in COLD_WALLS), then the min of 2 warm calls."""
     fn = _probe_fn(name)
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-    COLD_WALLS[(name, sf_dir)] = time.perf_counter() - t0
-    best = math.inf
-    for _ in range(2):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
-def _purge_package_caches() -> None:
-    """Drop the package's per-dataset cache entries so a recycled session
-    doesn't pin py4j references (and therefore JVM objects) of dead
-    SparkContexts."""
-    from drive_health_etl_spark.operators import fitcache
-
-    fitcache.clear()
+    COLD_WALLS[(name, sf_dir)] = time_noop(fn, spark, sf_dir)
+    return min(time_noop(fn, spark, sf_dir) for _ in range(2))
 
 
 def _fresh_session(cpus: int):
+    from drive_health_etl_spark.operators import fitcache
     from drive_health_etl_spark.session import get_spark
 
-    _purge_package_caches()
+    # drop the dataset cache so a recycled session doesn't pin py4j
+    # references (and therefore JVM objects) of dead SparkContexts
+    fitcache.clear()
     try:
         spark = get_spark("scale-probe", cpus=cpus)
         spark.sparkContext.setLogLevel("ERROR")
@@ -580,21 +558,15 @@ def main() -> None:
                         pass
                     spark = _fresh_session(cpus)
                 spark = _ensure_session(spark, cpus)
-                snap_pre = load_snapshot()
                 try:
-                    ts = {label: _run(spark, name, d) for label, d in SFS}
+                    with load_window() as shares:
+                        ts = {label: _run(spark, name, d) for label, d in SFS}
                 except Exception:
                     if _healthy(spark):
                         raise  # genuine query failure: fail loud, nothing written
                     spark = _ensure_session(spark, cpus)  # SessionDead if hopeless
-                    snap_pre = load_snapshot()
-                    ts = {label: _run(spark, name, d) for label, d in SFS}
-                snap_post = load_snapshot()
-                shares = (
-                    external_shares(snap_pre, snap_post)
-                    if snap_pre is not None and snap_post is not None
-                    else None
-                )
+                    with load_window() as shares:
+                        ts = {label: _run(spark, name, d) for label, d in SFS}
                 load_cell = probe_load_cell(shares)
                 # slope over the top decade: data grows 10x sf0.01 -> sf0.1
                 slope = math.log10(ts["0.1"] / ts["0.01"]) if ts["0.01"] > 0 else float("nan")
@@ -686,39 +658,32 @@ def main() -> None:
                     probes_since_recycle = 0
                 spark = _ensure_session(spark, cpus)
                 fresh_row, err = None, None
-                snap_pre = load_snapshot()
                 try:
-                    if name in base:
-                        t001, t01 = base[name]
-                    else:
-                        t001 = _run(spark, name, SFS[1][1])
-                        t01 = _run(spark, name, SFS[2][1])
-                    t1 = _run(spark, name, SF1_DIR)
+                    with load_window() as shares:
+                        if name in base:
+                            t001, t01 = base[name]
+                        else:
+                            t001 = _run(spark, name, SFS[1][1])
+                            t01 = _run(spark, name, SFS[2][1])
+                        t1 = _run(spark, name, SF1_DIR)
                 except Exception as e:
                     # One retry on a recycled session IF the session died —
                     # a genuine query failure on a healthy session is final.
                     if not _healthy(spark):
                         spark = _ensure_session(spark, cpus)  # raises SessionDead if hopeless
                         probes_since_recycle = 0
-                        snap_pre = load_snapshot()
                         try:
-                            if name not in base:
-                                t001 = _run(spark, name, SFS[1][1])
-                                t01 = _run(spark, name, SFS[2][1])
-                            t1 = _run(spark, name, SF1_DIR)
-                            err = None
+                            with load_window() as shares:
+                                if name not in base:
+                                    t001 = _run(spark, name, SFS[1][1])
+                                    t01 = _run(spark, name, SFS[2][1])
+                                t1 = _run(spark, name, SF1_DIR)
                         except Exception as e2:
                             err = str(e2)
                     else:
                         err = str(e)
                 probes_since_recycle += 1
                 if err is None:
-                    snap_post = load_snapshot()
-                    shares = (
-                        external_shares(snap_pre, snap_post)
-                        if snap_pre is not None and snap_post is not None
-                        else None
-                    )
                     load_cell = probe_load_cell(shares)
                     if name == "dedup_prefix_join":
                         pj_warm_sf1 = t1

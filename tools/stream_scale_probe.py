@@ -38,7 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from bench import external_shares, load_snapshot  # noqa: E402 (repo root)
+from bench import load_window, wait_for_idle_window  # noqa: E402 (repo root)
 from scale_probe import probe_load_cell  # noqa: E402 (tools dir)
 from drive_health_etl_spark.operators.bpe import _train_subword
 from drive_health_etl_spark.operators.multimodal import attach_gif_images
@@ -61,21 +61,19 @@ from drive_health_etl_spark.streaming.stateful import dedup_events, stateful_use
 
 def _measured(fn, spark, sf_dir, batches):
     """Run one probe cell bracketed by its own machine-load window; returns
-    (wall, state, shares_or_None) — the same self-annotation discipline as
-    scale_probe rows (round-10: the first r10 stream regen shipped a table
-    whose every row was 2-4x inflated by a contended window, and nothing in
-    the table said so)."""
-    pre = load_snapshot()
-    wall, state = fn(spark, sf_dir, batches)
-    post = load_snapshot()
-    shares = external_shares(pre, post) if pre is not None and post is not None else None
+    (wall, state, shares), shares empty without a load signal — the same
+    self-annotation discipline as scale_probe rows (round-10: the first r10
+    stream regen shipped a table whose every row was 2-4x inflated by a
+    contended window, and nothing in the table said so)."""
+    with load_window() as shares:
+        wall, state = fn(spark, sf_dir, batches)
     return wall, state, shares
 
 
-def _row_load_cell(cells: list[dict | None]) -> str:
+def _row_load_cell(cells: list[dict]) -> str:
     """One load cell per table ROW: the row's WORST window (max external
     share), so a single contended cell flags the whole row."""
-    real = [s for s in cells if s is not None]
+    real = [s for s in cells if s]
     if not real:
         return "-"
     worst = max(real, key=lambda s: (s["external_cpu_share"] + s["iowait_share"]
@@ -299,11 +297,7 @@ def main() -> None:
     # is rows that never need the flag — start the sweep only once a
     # window reads idle (bounded wait; a never-quiet box still probes and
     # the flags tell the story).
-    from bench import wait_for_idle_window
-
-    idle = wait_for_idle_window(
-        float(os.environ.get("SPARK_GRAFT_BENCH_IDLE_WAIT", "300"))
-    )
+    idle = wait_for_idle_window(300.0)
     print(f"[stream-probe] idle wait: went_idle={idle['went_idle']} "
           f"after {idle['waited_sec']}s")
     spark = get_spark("stream-scale-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))

@@ -13,7 +13,7 @@ arithmetic in int64 range in both engines.
 
 MinHash runs over 3-gram token shingles, not unigrams: this corpus has a
 tiny vocabulary, so unigram token sets collide pathologically (one LSH
-bucket held 63%% of all docs -> ~10M candidate pairs at sf0.1); the shingle
+bucket held 63% of all docs -> ~10M candidate pairs at sf0.1); the shingle
 space is |V|^3 and only genuinely similar documents share bands (826 pairs).
 """
 

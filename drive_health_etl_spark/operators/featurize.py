@@ -89,7 +89,7 @@ FROM per_doc p JOIN top t ON p.doc_id = t.doc_id
 
 
 def feat_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF term weighting: the top-{TFIDF_TOP_K} highest-scoring terms
+    """TF-IDF term weighting: the top-``TFIDF_TOP_K`` highest-scoring terms
     per document, score = tf * ln(N / df) (score desc, term asc tiebreak).
     The interpretable featurizer twin of the hashing trick — and the
     keyword-extraction query every search/curation pipeline runs.

@@ -1,16 +1,17 @@
 """Multimodal-column operators (north-star extension).
 
 Design: media is an opaque ``binary`` column + a typed metadata struct
-(modality, byte length, declared dims/duration). Decode / feature-extract /
-resize / frame-sample run as Arrow-batched ``mapInPandas`` so each Python
-worker touches a whole batch of blobs at once — the only viable shape at
-100 TB (per-row UDFs would serialize per blob).
+(modality, byte length, declared dims/duration). Every per-row codec runs
+through ``_map_rows``, the module's one Arrow-batched ``mapInPandas``, so
+each Python worker touches a whole batch of blobs at once — the only
+viable shape at 100 TB (per-row UDFs would serialize per blob).
 
 Codec status: NetPBM images (P6/P5, ``_decode_netpbm``), 8-bit gray/RGB
-non-interlaced PNG (``_decode_png`` — stdlib zlib inflate + the five RFC
-2083 scanline filters, CRC-verified chunks, with ``encode_png`` as its
-round-trip twin), and RIFF/WAVE 8-bit PCM audio (``decode_audio``) decode
-FOR REAL via pure-python/numpy parsers, and baseline JFIF JPEG decodes via
+PNG, sequential or Adam7-interlaced (``_decode_png`` — stdlib zlib inflate
++ the five RFC 2083 scanline filters, CRC-verified chunks, with
+``encode_png`` as its round-trip twin), and RIFF/WAVE 8-bit PCM audio
+(``decode_audio``) decode FOR REAL via pure-python/numpy parsers, and
+baseline JFIF JPEG decodes via
 the full DCT/Huffman pipeline in ``jpeg_codec.py`` — `multimodal_decode_stats`
 / `multimodal_png_stats` / `multimodal_jpeg_stats` / `multimodal_audio_stats`
 oracle-check the decoded raster/sample statistics end to end (JPEG's oracle
@@ -20,30 +21,116 @@ conditional-replenishment LP01 mode (``avi_codec.encode_avi_lossless_p`` —
 DIB keyframe + per-block skip flags + mod-256 deltas, lossless, exact
 oracle via `multimodal_mjpeg_p_stats`); mp3 subband/IMDCT and
 MOTION-COMPENSATED video (H.264-class motion search) still raise
-``NotImplementedError`` (those need ffmpeg, not in this container); the
-deterministic fake remains for format-agnostic plumbing tests.
+``NotImplementedError`` (those need ffmpeg, not in this container).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.sources.tables import load_table
 
-MEDIA_SCHEMA = (
-    "doc_id long, modality string, content binary, byte_len long, "
-    "width int, height int"
+
+def _map_rows(df: DataFrame, cols: list[str], fn: Callable[..., tuple], schema: str) -> DataFrame:
+    """The media path's one Arrow-batched row map: per batch, ``fn(*row)``
+    over ``cols`` returns one tuple in ``schema`` order. An empty batch
+    still yields the schema's columns."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [fn(*row) for row in zip(*(pdf[c] for c in cols))]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(op, schema=schema)
+
+
+def _cohort(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """The documents with ``doc_id % 3 == k``, spread round-robin over
+    every core. The repartition matters: the documents parquet is a single
+    row group, so without it every Python-codec batch would run on ONE
+    core."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 == k)
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+
+
+def _text_bytes(n: int | str, shift: int = 0) -> Column:
+    """The doc's text (plus one space), skipping ``shift`` characters,
+    rpad-repeated to ``n`` bytes: the one payload rule behind every media
+    fixture (image raster, 256-sample audio, per-frame video)."""
+    src = "text || ' '" if shift == 0 else f"substr(text || ' ', {shift + 1})"
+    return F.expr(f"encode(rpad({src}, {n}, text || ' '), 'utf-8')")
+
+
+def _image_raster(docs: DataFrame, channels: int) -> DataFrame:
+    """(doc_id, w, h, raw): each doc's w x h raster, ``channels`` bytes per
+    pixel (3 for RGB, 1 for GIF's index raster); w in [4,19], h in [4,15]."""
+    n = f"CAST((doc_id % 16 + 4) * (doc_id % 12 + 4) * {channels} AS INT)"
+    return docs.select(
+        "doc_id",
+        (F.col("doc_id") % 16 + 4).cast("int").alias("w"),
+        (F.col("doc_id") % 12 + 4).cast("int").alias("h"),
+        _text_bytes(n).alias("raw"),
+    )
+
+
+def _u8(raw: bytes, *shape: int) -> np.ndarray:
+    """A binary cell as a uint8 array of ``shape`` (flat when none)."""
+    return np.frombuffer(bytes(raw), dtype=np.uint8).reshape(shape or (-1,))
+
+
+def _encoded(
+    spark: SparkSession, sf_dir: str, name: str, src: DataFrame, cols: list[str],
+    fn: Callable[..., tuple], schema: str, *params: object,
+) -> DataFrame:
+    """Encode-once media fixture: ``_map_rows(src, cols, fn, schema)``,
+    persisted and dataset-cached under ``name`` plus every codec parameter.
+
+    The pure-Python ENCODE pass is test scaffolding (fixture generation),
+    not the operator under measurement — encode once per (session, sf_dir,
+    codec params) and persist the blobs in executor memory so every later
+    query (and every bench repeat) measures only its own decode work.
+    Bounded: the fixture corpus is |documents|/3 thumbnail blobs of <=
+    ~1.5 KB each (a few MB per SF); at production scale media arrives
+    already encoded and this generation step does not exist."""
+    return dataset_cached(
+        spark, sf_dir, name, lambda: _map_rows(src, cols, fn, schema).persist(), *params
+    )
+
+
+def _rgb_means(doc_id: int, img: np.ndarray) -> tuple:
+    """(doc_id, width, height, mean_r, mean_g, mean_b) of an RGB raster,
+    means exact to 6 places — the lossless image queries' row."""
+    h, w, _ = img.shape
+    px = img.astype("float64")
+    return (
+        int(doc_id), int(w), int(h),
+        *(round(float(px[:, :, c].mean()), 6) for c in range(3)),
+    )
+
+
+_RGB_MEANS_SCHEMA = (
+    "doc_id long, width int, height int, mean_r double, mean_g double, mean_b double"
 )
 
-FEATURE_SCHEMA = (
-    "doc_id long, modality string, byte_len long, n_frames int, feature array<double>"
-)
+
+def _decoded_rgb_means(media: DataFrame) -> DataFrame:
+    """Decode every (doc_id, content) image blob FOR REAL and emit its
+    `_rgb_means` row."""
+    return _map_rows(
+        media, ["doc_id", "content"],
+        lambda doc_id, blob: _rgb_means(doc_id, decode_image(bytes(blob))),
+        _RGB_MEANS_SCHEMA,
+    )
 
 
 def attach_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,19 +152,16 @@ def attach_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def decode_image(blob: bytes, *, fake: bool = False) -> np.ndarray:
+def decode_image(blob: bytes) -> np.ndarray:
     """Decode an image blob.
 
     REAL paths, all PIL/cv2-free: NetPBM binary (P6 RGB -> (h, w, 3), P5
-    gray -> (h, w)); 8-bit gray/RGB non-interlaced PNG (stdlib zlib +
-    RFC 2083 filters); baseline JFIF JPEG (full DCT/Huffman pipeline,
-    ``jpeg_codec.py``). Remaining formats (mp3/video/webp/...) raise
+    gray -> (h, w)); 8-bit gray/RGB PNG, sequential or Adam7 (stdlib zlib +
+    RFC 2083 filters); QOI (``qoi_codec.py``); baseline and progressive
+    JFIF JPEG (full DCT/Huffman pipeline, ``jpeg_codec.py`` and
+    ``jpeg_progressive.py``). Remaining formats (mp3/video/webp/...) raise
     NotImplementedError: silently faking them would be worse than
-    refusing. ``fake=True`` keeps the deterministic pseudo-image for
-    arbitrary blobs so format-agnostic plumbing stays testable."""
-    if fake:
-        arr = np.frombuffer(blob[:64].ljust(64, b"\0"), dtype=np.uint8)
-        return np.tile(arr, (8, 1))  # (8, 64) deterministic "image"
+    refusing."""
     magic = blob[:2]
     if magic in (b"P6", b"P5"):
         return _decode_netpbm(blob)
@@ -104,11 +188,10 @@ def decode_image(blob: bytes, *, fake: bool = False) -> np.ndarray:
         f"no pure-python codec for magic {magic!r} (mp3 subband/IMDCT and "
         "MOTION-COMPENSATED video — H.264-class motion search/reference "
         "lists — need ffmpeg, not in this container); NetPBM, 8-bit "
-        "gray/RGB PNG, and baseline JFIF JPEG decode natively here — MJPEG "
-        "AVI video via avi_codec.decode_avi_mjpeg, inter-frame "
+        "gray/RGB PNG, QOI, and baseline/progressive JFIF JPEG decode natively "
+        "here — MJPEG AVI video via avi_codec.decode_avi_mjpeg, inter-frame "
         "conditional-replenishment video via avi_codec.decode_avi_lossless_p, "
-        "IMA ADPCM audio via adpcm_codec.decode_wav_ima — or pass fake=True "
-        "for the deterministic test double"
+        "IMA ADPCM audio via adpcm_codec.decode_wav_ima"
     )
 
 
@@ -140,9 +223,8 @@ def _decode_netpbm(blob: bytes) -> np.ndarray:
 #
 # PNG is DEFLATE (zlib, in the container's stdlib) around per-scanline byte
 # filters — no PIL needed for the 8-bit gray (color type 0) / RGB (type 2)
-# non-interlaced subset, which is what camera pipelines and dataset dumps
-# overwhelmingly emit. JPEG/mp3 stay honestly refused (DCT/Huffman codecs
-# genuinely need PIL/ffmpeg).
+# subset, sequential or Adam7, which is what camera pipelines and dataset
+# dumps overwhelmingly emit. (JPEG has its own codec in ``jpeg_codec.py``.)
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -185,8 +267,8 @@ def _decode_png(blob: bytes) -> np.ndarray:
     """REAL PNG decode: walk the chunk stream (CRC-verified), zlib-inflate
     the concatenated IDAT payload, undo the per-scanline filters. Supports
     bit depth 8, color types 0 (gray -> (h, w)) and 2 (RGB -> (h, w, 3)),
-    non-interlaced — the standard subset stdlib zlib can reach; palette/
-    alpha/16-bit/Adam7 raise rather than mis-decode."""
+    sequential or Adam7-interlaced — the standard subset stdlib zlib can
+    reach; palette/alpha/16-bit raise rather than mis-decode."""
     import struct
     import zlib
 
@@ -349,35 +431,6 @@ def encode_png(img: np.ndarray, interlace: bool = False) -> bytes:
     return _PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
 
 
-def extract_features(media: DataFrame, frame_stride: int = 64, fake_decode: bool = True) -> DataFrame:
-    """Frame-sample + feature-extract via mapInPandas: per Arrow batch, decode
-    each blob (stubbed), sample every ``frame_stride`` bytes as 'frames', emit
-    an 8-dim feature vector (byte-histogram moments). Batch-shaped Python —
-    the pattern scales: one Python roundtrip per ~10k rows, not per row."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, n_frames = [], []
-            for blob in pdf["content"]:
-                img = decode_image(bytes(blob), fake=fake_decode)
-                frames = img.reshape(-1)[::frame_stride]
-                n_frames.append(int(len(frames)))
-                hist = np.bincount(frames % 8, minlength=8).astype("float64")
-                total = hist.sum() or 1.0
-                feats.append((hist / total).tolist())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": pdf["modality"],
-                    "byte_len": pdf["byte_len"],
-                    "n_frames": n_frames,
-                    "feature": feats,
-                }
-            )
-
-    return media.mapInPandas(op, schema=FEATURE_SCHEMA)
-
-
 def multimodal_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checkable slice of the media pipeline: modality routing, byte
     lengths, simulated frame counts — everything up to the decode boundary."""
@@ -437,47 +490,19 @@ def attach_ppm_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL image table: every 3rd document becomes a binary P6 PPM blob
     (header + raw RGB raster filled from the doc's text bytes, rpad-repeated
     to w*h*3). The blobs are genuine images — `decode_image` parses them
-    with the numpy NetPBM codec, no fake path involved."""
+    with the numpy NetPBM codec."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
-    # w in [4,19], h in [4,15]; raster <= 855 ASCII bytes drawn from text
-    return docs.select(
-        "doc_id",
-        F.expr(
-            "encode('P6\\n' || CAST(doc_id % 16 + 4 AS STRING) || ' ' "
-            "|| CAST(doc_id % 12 + 4 AS STRING) || '\\n255\\n' "
-            "|| rpad(text || ' ', CAST((doc_id % 16 + 4) * (doc_id % 12 + 4) * 3 AS INT), text || ' '), "
-            "'utf-8')"
-        ).alias("content"),
-    )
+    header = F.encode(F.format_string("P6\n%d %d\n255\n", "w", "h"), "utf-8")
+    return _image_raster(docs, 3).select("doc_id", F.concat(header, "raw").alias("content"))
 
 
 def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode every PPM blob FOR REAL (numpy NetPBM codec) inside
-    mapInPandas and emit per-image dimensions and exact per-channel means.
-    The oracle recomputes the same stats from the raster construction rule
-    in SQL — so a decoder bug (wrong offset, wrong reshape, swapped
-    channels) breaks the hash match. Arrow-batched: one Python roundtrip
-    per batch of blobs, the only viable shape at 100 TB."""
-    media = attach_ppm_images(spark, sf_dir)
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "mean_r": [], "mean_g": [], "mean_b": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                img = decode_image(bytes(blob))  # REAL decode, no fake
-                h, w, _ = img.shape
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                px = img.astype("float64")
-                out["mean_r"].append(round(float(px[:, :, 0].mean()), 6))
-                out["mean_g"].append(round(float(px[:, :, 1].mean()), 6))
-                out["mean_b"].append(round(float(px[:, :, 2].mean()), 6))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        op, schema="doc_id long, width int, height int, mean_r double, mean_g double, mean_b double"
-    )
+    """Decode every PPM blob FOR REAL (numpy NetPBM codec) and emit
+    per-image dimensions and exact per-channel means. The oracle recomputes
+    the same stats from the raster construction rule in SQL — so a decoder
+    bug (wrong offset, wrong reshape, swapped channels) breaks the hash
+    match."""
+    return _decoded_rgb_means(attach_ppm_images(spark, sf_dir))
 
 
 MULTIMODAL_DECODE_SQL = """
@@ -501,52 +526,17 @@ FROM px GROUP BY doc_id
 """
 
 
-# Encoded-fixture cache: the pure-Python ENCODE pass is test scaffolding
-# (fixture generation), not the operator under measurement — encode once per
-# (session, sf_dir, codec params) and persist the blobs in executor memory so
-# every later query (and every bench repeat) measures only its own decode
-# work. Bounded: the fixture corpus is |documents|/3 thumbnail blobs of <=
-# ~1.5 KB each (a few MB per SF); at production scale media arrives already
-# encoded and this generation step does not exist. Each fixture is
-# dataset-cached under its codec name plus every codec parameter.
-
-
 def attach_png_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL compressed-image table: the same deterministic raster rule as
     `attach_ppm_images` (text bytes rpad-repeated to w*h*3), but encoded as
     genuine zlib-compressed PNGs (`encode_png`, filter type cycling 0-4 per
-    scanline) inside mapInPandas. The blobs pass any standards-compliant
-    PNG reader — this is real compressed media, not a container trick.
-
-    The explicit repartition matters: the documents parquet is a single
-    row group, so without it every Python-codec batch would run on ONE
-    core — the encode/decode work must spread across the executors."""
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 0)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    raster = base.select(
-        "doc_id",
-        (F.col("doc_id") % 16 + 4).cast("int").alias("w"),
-        (F.col("doc_id") % 12 + 4).cast("int").alias("h"),
-        F.expr(
-            "encode(rpad(text || ' ', CAST((doc_id % 16 + 4) * (doc_id % 12 + 4) * 3 AS INT), "
-            "text || ' '), 'utf-8')"
-        ).alias("raw"),
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for w, h, raw in zip(pdf["w"], pdf["h"], pdf["raw"]):
-                img = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(int(h), int(w), 3)
-                blobs.append(encode_png(img))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
-
-    return dataset_cached(
-        spark, sf_dir, "png",
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary").persist(),
+    scanline). The blobs pass any standards-compliant PNG reader — this is
+    real compressed media, not a container trick."""
+    return _encoded(
+        spark, sf_dir, "png", _image_raster(_cohort(spark, sf_dir, 0), 3),
+        ["doc_id", "w", "h", "raw"],
+        lambda doc_id, w, h, raw: (doc_id, encode_png(_u8(raw, h, w, 3))),
+        "doc_id long, content binary",
     )
 
 
@@ -557,26 +547,7 @@ def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     raster construction rule — so a bug anywhere in the DEFLATE plumbing,
     any of the 5 filter transforms, or the chunk walk breaks the hash
     match. Covers the compressed-media decode path end to end."""
-    media = attach_png_images(spark, sf_dir)
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "mean_r": [], "mean_g": [], "mean_b": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                img = decode_image(bytes(blob))  # REAL zlib/filter decode
-                h, w, _ = img.shape
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                px = img.astype("float64")
-                out["mean_r"].append(round(float(px[:, :, 0].mean()), 6))
-                out["mean_g"].append(round(float(px[:, :, 1].mean()), 6))
-                out["mean_b"].append(round(float(px[:, :, 2].mean()), 6))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        op, schema="doc_id long, width int, height int, mean_r double, mean_g double, mean_b double"
-    )
+    return _decoded_rgb_means(attach_png_images(spark, sf_dir))
 
 
 # Same raster rule as the PPM oracle: the PNG round-trip must reproduce it.
@@ -594,39 +565,12 @@ def multimodal_qoi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and breaks the hash."""
     from drive_health_etl_spark.operators.qoi_codec import encode_qoi
 
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 0)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    raster = base.select(
-        "doc_id",
-        (F.col("doc_id") % 16 + 4).cast("int").alias("w"),
-        (F.col("doc_id") % 12 + 4).cast("int").alias("h"),
-        F.expr(
-            "encode(rpad(text || ' ', CAST((doc_id % 16 + 4) * (doc_id % 12 + 4) * 3 AS INT), "
-            "text || ' '), 'utf-8')"
-        ).alias("raw"),
-    )
+    def row(doc_id, w, h, raw):
+        return _rgb_means(doc_id, decode_image(encode_qoi(_u8(raw, h, w, 3))))  # REAL round trip
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "mean_r": [], "mean_g": [], "mean_b": []}
-            for doc_id, w, h, raw in zip(pdf["doc_id"], pdf["w"], pdf["h"], pdf["raw"]):
-                img = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(int(h), int(w), 3)
-                dec = decode_image(encode_qoi(img))  # REAL round trip
-                hh, ww, _ = dec.shape
-                px = dec.astype("float64")
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(int(ww))
-                out["height"].append(int(hh))
-                out["mean_r"].append(round(float(px[:, :, 0].mean()), 6))
-                out["mean_g"].append(round(float(px[:, :, 1].mean()), 6))
-                out["mean_b"].append(round(float(px[:, :, 2].mean()), 6))
-            yield pd.DataFrame(out)
-
-    return raster.mapInPandas(
-        op, schema="doc_id long, width int, height int, mean_r double, mean_g double, mean_b double"
+    return _map_rows(
+        _image_raster(_cohort(spark, sf_dir, 0), 3), ["doc_id", "w", "h", "raw"], row,
+        _RGB_MEANS_SCHEMA,
     )
 
 
@@ -639,52 +583,13 @@ def multimodal_png_adam7_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded through the full deinterlacer. Same EXACT oracle as the
     sequential path — a pass-grid, scatter, or per-pass filter-state bug
     changes pixels and breaks the hash."""
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 0)
-        .repartition(spark.sparkContext.defaultParallelism)
+    media = _encoded(
+        spark, sf_dir, "png_adam7", _image_raster(_cohort(spark, sf_dir, 0), 3),
+        ["doc_id", "w", "h", "raw"],
+        lambda doc_id, w, h, raw: (doc_id, encode_png(_u8(raw, h, w, 3), interlace=True)),
+        "doc_id long, content binary",
     )
-    raster = base.select(
-        "doc_id",
-        (F.col("doc_id") % 16 + 4).cast("int").alias("w"),
-        (F.col("doc_id") % 12 + 4).cast("int").alias("h"),
-        F.expr(
-            "encode(rpad(text || ' ', CAST((doc_id % 16 + 4) * (doc_id % 12 + 4) * 3 AS INT), "
-            "text || ' '), 'utf-8')"
-        ).alias("raw"),
-    )
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for w, h, raw in zip(pdf["w"], pdf["h"], pdf["raw"]):
-                img = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(int(h), int(w), 3)
-                blobs.append(encode_png(img, interlace=True))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
-
-    media = dataset_cached(
-        spark, sf_dir, "png_adam7",
-        lambda: raster.mapInPandas(enc, schema="doc_id long, content binary").persist(),
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "mean_r": [], "mean_g": [], "mean_b": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                img = decode_image(bytes(blob))  # REAL Adam7 deinterlace + inflate
-                h, w, _ = img.shape
-                px = img.astype("float64")
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                out["mean_r"].append(round(float(px[:, :, 0].mean()), 6))
-                out["mean_g"].append(round(float(px[:, :, 1].mean()), 6))
-                out["mean_b"].append(round(float(px[:, :, 2].mean()), 6))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        op, schema="doc_id long, width int, height int, mean_r double, mean_g double, mean_b double"
-    )
+    return _decoded_rgb_means(media)
 
 
 # JPEG is LOSSY, so channel means are not SQL-derivable; the oracle pins the
@@ -706,43 +611,21 @@ def attach_jpeg_images(
 ) -> DataFrame:
     """A REAL lossy-compressed image table: the deterministic PPM raster rule
     encoded as genuine baseline JFIF JPEGs (`encode_jpeg`: 8x8 DCT,
-    frequency-ramp quantization, canonical Huffman, embedded tables) inside
-    mapInPandas — 4:4:4 by default, or 4:2:0 with restart intervals for the
-    real-world wire layout. Any standards-compliant JPEG reader accepts
-    these blobs. Repartitioned so the Python codec runs on every core, not
-    the single parquet row-group partition."""
+    frequency-ramp quantization, canonical Huffman, embedded tables) — 4:4:4
+    by default, or 4:2:0 with restart intervals for the real-world wire
+    layout. Any standards-compliant JPEG reader accepts these blobs."""
     from drive_health_etl_spark.operators.jpeg_codec import encode_jpeg
 
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 0)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    raster = base.select(
-        "doc_id",
-        (F.col("doc_id") % 16 + 4).cast("int").alias("w"),
-        (F.col("doc_id") % 12 + 4).cast("int").alias("h"),
-        F.expr(
-            "encode(rpad(text || ' ', CAST((doc_id % 16 + 4) * (doc_id % 12 + 4) * 3 AS INT), "
-            "text || ' '), 'utf-8')"
-        ).alias("raw"),
-    )
+    def row(doc_id, w, h, raw):
+        blob = encode_jpeg(
+            _u8(raw, h, w, 3), subsampling=subsampling, restart_interval=restart_interval
+        )
+        return doc_id, blob, raw
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for w, h, raw in zip(pdf["w"], pdf["h"], pdf["raw"]):
-                img = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(int(h), int(w), 3)
-                blobs.append(
-                    encode_jpeg(img, subsampling=subsampling, restart_interval=restart_interval)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs, "raw": pdf["raw"]})
-
-    return dataset_cached(
-        spark, sf_dir, "jpeg",
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary, raw binary").persist(),
-        subsampling,
-        restart_interval,
+    return _encoded(
+        spark, sf_dir, "jpeg", _image_raster(_cohort(spark, sf_dir, 0), 3),
+        ["doc_id", "w", "h", "raw"], row, "doc_id long, content binary, raw binary",
+        subsampling, restart_interval,
     )
 
 
@@ -758,22 +641,15 @@ def multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _jpeg_roundtrip_stats(media: DataFrame, bound: float) -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "mse_ok": []}
-            for doc_id, blob, raw in zip(pdf["doc_id"], pdf["content"], pdf["raw"]):
-                img = decode_image(bytes(blob))  # REAL baseline-JFIF decode
-                h, w, _ = img.shape
-                orig = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(h, w, 3)
-                mse = float(((img.astype(np.float64) - orig) ** 2).mean())
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                out["mse_ok"].append(mse < bound)
-            yield pd.DataFrame(out)
+    def row(doc_id, blob, raw):
+        img = decode_image(bytes(blob))  # REAL baseline-JFIF decode
+        h, w, _ = img.shape
+        mse = float(((img.astype(np.float64) - _u8(raw, h, w, 3)) ** 2).mean())
+        return int(doc_id), int(w), int(h), mse < bound
 
-    return media.mapInPandas(
-        op, schema="doc_id long, width int, height int, mse_ok boolean"
+    return _map_rows(
+        media, ["doc_id", "content", "raw"], row,
+        "doc_id long, width int, height int, mse_ok boolean",
     )
 
 
@@ -809,26 +685,18 @@ def multimodal_jpeg_prog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_jpeg_progressive,
     )
 
-    media = attach_jpeg_images(spark, sf_dir)  # cached baseline 4:4:4 blobs
+    def row(doc_id, blob, raw):
+        base = decode_image(bytes(blob))  # real SOF0 decode
+        h, w, _ = base.shape
+        orig = _u8(raw, h, w, 3)
+        prog = decode_jpeg_progressive(encode_jpeg_progressive(orig))
+        mse = float(((prog.astype(np.float64) - orig) ** 2).mean())
+        return int(doc_id), int(w), int(h), bool(np.array_equal(base, prog)), mse < _JPEG_MSE_BOUND
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "prog_exact": [], "mse_ok": []}
-            for doc_id, blob, raw in zip(pdf["doc_id"], pdf["content"], pdf["raw"]):
-                base = decode_image(bytes(blob))  # real SOF0 decode
-                h, w, _ = base.shape
-                orig = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(h, w, 3)
-                prog = decode_jpeg_progressive(encode_jpeg_progressive(orig))
-                mse = float(((prog.astype(np.float64) - orig) ** 2).mean())
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                out["prog_exact"].append(bool(np.array_equal(base, prog)))
-                out["mse_ok"].append(mse < _JPEG_MSE_BOUND)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        op, schema="doc_id long, width int, height int, prog_exact boolean, mse_ok boolean"
+    return _map_rows(
+        attach_jpeg_images(spark, sf_dir),  # cached baseline 4:4:4 blobs
+        ["doc_id", "content", "raw"], row,
+        "doc_id long, width int, height int, prog_exact boolean, mse_ok boolean",
     )
 
 
@@ -902,28 +770,20 @@ def multimodal_jpeg_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from drive_health_etl_spark.operators.jpeg_codec import encode_jpeg
 
+    variants = {"444": {}, "420r2": {"subsampling": "420", "restart_interval": 2}}
     base = (
         load_table(spark, sf_dir, "documents")
         .filter((F.col("doc_id") % 3 == 0) & (F.col("doc_id") < 30))
-        .select("doc_id")
+        .select("doc_id", F.explode(F.array(*map(F.lit, variants))).alias("variant"))
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "variant": [], "jpeg_sha": []}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                img = jpeg_pin_raster(d)
-                for variant, blob in (
-                    ("444", encode_jpeg(img)),
-                    ("420r2", encode_jpeg(img, subsampling="420", restart_interval=2)),
-                ):
-                    out["doc_id"].append(d)
-                    out["variant"].append(variant)
-                    out["jpeg_sha"].append(hashlib.sha256(blob).hexdigest())
-            yield pd.DataFrame(out)
+    def row(doc_id, variant):
+        blob = encode_jpeg(jpeg_pin_raster(int(doc_id)), **variants[variant])
+        return int(doc_id), variant, hashlib.sha256(blob).hexdigest()
 
-    return base.mapInPandas(op, schema="doc_id long, variant string, jpeg_sha string")
+    return _map_rows(
+        base, ["doc_id", "variant"], row, "doc_id long, variant string, jpeg_sha string"
+    )
 
 
 MULTIMODAL_JPEG_BYTES_SQL = (
@@ -963,44 +823,35 @@ def attach_wav_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL audio table: every doc with doc_id % 3 == 1 becomes a binary
     RIFF/WAVE blob (constant PCM header literal + 256 8-bit samples filled
     from the doc's text bytes). `decode_audio` parses them with the numpy
-    RIFF codec — genuine WAV files, no fake path."""
+    RIFF codec — genuine WAV files."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 1)
     return docs.select(
-        "doc_id",
-        F.concat(
-            F.lit(_wav_header()),
-            F.expr(f"encode(rpad(text || ' ', {WAV_SAMPLES}, text || ' '), 'utf-8')"),
-        ).alias("content"),
+        "doc_id", F.concat(F.lit(_wav_header()), _text_bytes(WAV_SAMPLES)).alias("content")
     )
 
 
+def _pcm_stats(doc_id: int, rate: int, samples: np.ndarray) -> tuple:
+    """(doc_id, sample_rate, n_samples, mean_amp, rms) of a decoded clip.
+    No rounding: the sums are exact integers divided by 256, a power of
+    two, so mean and rms are bit-identical across engines — and rounding
+    would DIVERGE on exact .5 ties (Python banker's vs DuckDB half-away)."""
+    s = samples.astype(np.float64)
+    rms = float(np.sqrt((s * s).mean()))
+    return int(doc_id), int(rate), int(len(samples)), float(s.mean()), rms
+
+
+_PCM_STATS_SCHEMA = "doc_id long, sample_rate int, n_samples int, mean_amp double, rms double"
+
+
 def multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode every WAV blob FOR REAL (numpy RIFF parser) inside mapInPandas
-    and emit sample rate, count, mean amplitude and RMS; the oracle
-    recomputes the stats from the sample-construction rule, so a chunk-walk
-    or offset bug breaks the hash."""
-    media = attach_wav_audio(spark, sf_dir)
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "sample_rate": [], "n_samples": [], "mean_amp": [], "rms": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                rate, samples = decode_audio(bytes(blob))  # REAL decode
-                s = samples.astype("float64")
-                out["doc_id"].append(int(doc_id))
-                out["sample_rate"].append(int(rate))
-                out["n_samples"].append(int(len(samples)))
-                # no rounding: sum/256 is an exact power-of-two division,
-                # so mean and rms are bit-identical across engines — and
-                # rounding would DIVERGE on exact .5 ties (Python banker's
-                # vs DuckDB half-away)
-                out["mean_amp"].append(float(s.mean()))
-                out["rms"].append(float(np.sqrt((s * s).mean())))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        op,
-        schema="doc_id long, sample_rate int, n_samples int, mean_amp double, rms double",
+    """Decode every WAV blob FOR REAL (numpy RIFF parser) and emit sample
+    rate, count, mean amplitude and RMS; the oracle recomputes the stats
+    from the sample-construction rule, so a chunk-walk or offset bug breaks
+    the hash."""
+    return _map_rows(
+        attach_wav_audio(spark, sf_dir), ["doc_id", "content"],
+        lambda doc_id, blob: _pcm_stats(doc_id, *decode_audio(bytes(blob))),  # REAL decode
+        _PCM_STATS_SCHEMA,
     )
 
 
@@ -1019,35 +870,22 @@ def multimodal_ulaw_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bias/exponent/mantissa bug changes `sum_decoded` and breaks the hash."""
     from drive_health_etl_spark.operators.g711_codec import decode_ulaw, encode_ulaw
 
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 2)
-    base = docs.select(
-        "doc_id",
-        F.expr(
-            f"encode(rpad(text || ' ', {_ULAW_SAMPLES}, text || ' '), 'utf-8')"
-        ).alias("payload"),
-    ).repartition(spark.sparkContext.defaultParallelism)
+    def row(doc_id, payload):
+        x = ((_u8(payload).astype(np.int32) - 128) * 256).astype(np.int16)
+        enc = encode_ulaw(x)
+        dec = decode_ulaw(enc)  # REAL companding round trip
+        err = np.abs(dec.astype(np.int64) - x.astype(np.int64))
+        b = np.frombuffer(enc, dtype=np.uint8).astype(np.int32)
+        e = (((~b) & 0xFF) >> 4) & 7
+        return (
+            int(doc_id), int(len(x)), int(dec.astype(np.int64).sum()), int(err.max()),
+            bool((err <= (1 << (e + 2))).all()),
+        )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "n_samples": [], "sum_decoded": [], "max_abs_err": [], "bound_ok": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                x = (
-                    (np.frombuffer(bytes(payload), dtype=np.uint8).astype(np.int32) - 128) * 256
-                ).astype(np.int16)
-                dec = decode_ulaw(encode_ulaw(x))  # REAL companding round trip
-                err = np.abs(dec.astype(np.int64) - x.astype(np.int64))
-                b = np.frombuffer(encode_ulaw(x), dtype=np.uint8).astype(np.int32)
-                e = (((~b) & 0xFF) >> 4) & 7
-                out["doc_id"].append(int(doc_id))
-                out["n_samples"].append(int(len(x)))
-                out["sum_decoded"].append(int(dec.astype(np.int64).sum()))
-                out["max_abs_err"].append(int(err.max()))
-                out["bound_ok"].append(bool((err <= (1 << (e + 2))).all()))
-            yield pd.DataFrame(out)
-
-    return base.mapInPandas(
-        op,
-        schema="doc_id long, n_samples int, sum_decoded long, max_abs_err int, bound_ok boolean",
+    return _map_rows(
+        _cohort(spark, sf_dir, 2).select("doc_id", _text_bytes(_ULAW_SAMPLES).alias("payload")),
+        ["doc_id", "payload"], row,
+        "doc_id long, n_samples int, sum_decoded long, max_abs_err int, bound_ok boolean",
     )
 
 
@@ -1140,16 +978,8 @@ def attach_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     header), frame f's raster drawn from the doc's text offset by 7*f so
     frames differ."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 2)
-    frames = [
-        F.concat(
-            F.lit(f"P6\n{VID_W} {VID_H}\n255\n".encode()),
-            F.expr(
-                f"encode(rpad(substr(text || ' ', {7 * f + 1}), "
-                f"{_FRAME_PAYLOAD}, text || ' '), 'utf-8')"
-            ),
-        )
-        for f in range(VID_FRAMES)
-    ]
+    header = F.lit(f"P6\n{VID_W} {VID_H}\n255\n".encode())
+    frames = [F.concat(header, _text_bytes(_FRAME_PAYLOAD, 7 * f)) for f in range(VID_FRAMES)]
     return docs.select("doc_id", F.concat(*frames).alias("content"))
 
 
@@ -1160,25 +990,18 @@ def multimodal_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     same mean from the per-frame construction rule — a frame-boundary bug
     (wrong header length, wrong raster size) shifts every later frame and
     breaks the hash."""
-    media = attach_video(spark, sf_dir)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "n_frames": [], "n_sampled": [], "mean_sampled": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                frames = decode_video(bytes(blob))  # REAL decode
-                sampled = frames[::VID_STRIDE]
-                px = np.concatenate([f.reshape(-1) for f in sampled]).astype("float64")
-                out["doc_id"].append(int(doc_id))
-                out["n_frames"].append(len(frames))
-                out["n_sampled"].append(len(sampled))
-                # exact: integer sum / power-of-two-free count — both engines
-                # divide the same exact integer sum by the same count
-                out["mean_sampled"].append(float(px.mean()))
-            yield pd.DataFrame(out)
+    def row(doc_id, blob):
+        frames = decode_video(bytes(blob))  # REAL decode
+        sampled = frames[::VID_STRIDE]
+        px = np.concatenate([f.reshape(-1) for f in sampled]).astype("float64")
+        # exact: integer sum / power-of-two-free count — both engines
+        # divide the same exact integer sum by the same count
+        return int(doc_id), len(frames), len(sampled), float(px.mean())
 
-    return media.mapInPandas(
-        op, schema="doc_id long, n_frames int, n_sampled int, mean_sampled double"
+    return _map_rows(
+        attach_video(spark, sf_dir), ["doc_id", "content"], row,
+        "doc_id long, n_frames int, n_sampled int, mean_sampled double",
     )
 
 
@@ -1215,33 +1038,12 @@ def attach_gif_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT. Cached per session like the other media fixtures."""
     from drive_health_etl_spark.operators.gif_codec import encode_gif
 
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 0)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    raster = base.select(
-        "doc_id",
-        (F.col("doc_id") % 16 + 4).cast("int").alias("w"),
-        (F.col("doc_id") % 12 + 4).cast("int").alias("h"),
-        F.expr(
-            "encode(rpad(text || ' ', CAST((doc_id % 16 + 4) * (doc_id % 12 + 4) AS INT), "
-            "text || ' '), 'utf-8')"
-        ).alias("raw"),
-    )
     gray = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for w, h, raw in zip(pdf["w"], pdf["h"], pdf["raw"]):
-                idx = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(int(h), int(w))
-                blobs.append(encode_gif(idx, gray))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
-
-    return dataset_cached(
-        spark, sf_dir, "gif",
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary").persist(),
+    return _encoded(
+        spark, sf_dir, "gif", _image_raster(_cohort(spark, sf_dir, 0), 1),
+        ["doc_id", "w", "h", "raw"],
+        lambda doc_id, w, h, raw: (doc_id, encode_gif(_u8(raw, h, w), gray)),
+        "doc_id long, content binary",
     )
 
 
@@ -1254,23 +1056,15 @@ def multimodal_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-block bug changes decoded pixels and breaks the hash exactly."""
     from drive_health_etl_spark.operators.gif_codec import decode_gif
 
-    media = attach_gif_images(spark, sf_dir)
+    def row(doc_id, blob):
+        idx, pal = decode_gif(bytes(blob))  # REAL LZW decode
+        h, w = idx.shape
+        gray = pal[idx][:, :, 0].astype("float64")  # 256-gray: R=G=B=index
+        return int(doc_id), int(w), int(h), round(float(gray.mean()), 6)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "mean_gray": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                idx, pal = decode_gif(bytes(blob))  # REAL LZW decode
-                h, w = idx.shape
-                gray = pal[idx][:, :, 0].astype("float64")  # 256-gray: R=G=B=index
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                out["mean_gray"].append(round(float(gray.mean()), 6))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        op, schema="doc_id long, width int, height int, mean_gray double"
+    return _map_rows(
+        attach_gif_images(spark, sf_dir), ["doc_id", "content"], row,
+        "doc_id long, width int, height int, mean_gray double",
     )
 
 
@@ -1300,36 +1094,25 @@ FROM img
 _ADPCM_RMS_BOUND = 4500.0
 
 
+def _pcm16(raw: bytes) -> np.ndarray:
+    """The audio cohort's int16 samples, (byte - 128) << 8, as int64."""
+    return (_u8(raw).astype(np.int64) - 128) << 8
+
+
 def attach_adpcm_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL compressed-audio table: the WAV cohort's samples (doc_id % 3
     == 1, int16 from the text-byte rule) encoded as genuine IMA ADPCM WAV
     blobs (format tag 0x0011, fact chunk, 4-byte block headers —
-    ``adpcm_codec.py``) inside mapInPandas, cached per session like the
-    image fixtures. Standards-compliant WAV readers accept these blobs."""
+    ``adpcm_codec.py``), cached per session like the image fixtures.
+    Standards-compliant WAV readers accept these blobs."""
     from drive_health_etl_spark.operators.adpcm_codec import encode_wav_ima
 
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 1)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    raster = base.select(
-        "doc_id",
-        F.expr(f"encode(rpad(text || ' ', {WAV_SAMPLES}, text || ' '), 'utf-8')").alias("raw"),
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for raw in pdf["raw"]:
-                b = np.frombuffer(bytes(raw), dtype=np.uint8).astype(np.int64)
-                samples = ((b - 128) << 8).astype(np.int16)
-                blobs.append(encode_wav_ima(samples, WAV_RATE))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs, "raw": pdf["raw"]})
-
-    return dataset_cached(
+    return _encoded(
         spark, sf_dir, "adpcm",
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary, raw binary").persist(),
+        _cohort(spark, sf_dir, 1).select("doc_id", _text_bytes(WAV_SAMPLES).alias("raw")),
+        ["doc_id", "raw"],
+        lambda doc_id, raw: (doc_id, encode_wav_ima(_pcm16(raw).astype(np.int16), WAV_RATE), raw),
+        "doc_id long, content binary, raw binary",
     )
 
 
@@ -1343,24 +1126,14 @@ def multimodal_adpcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     path — `multimodal_audio_stats`.)"""
     from drive_health_etl_spark.operators.adpcm_codec import decode_wav_ima
 
-    media = attach_adpcm_audio(spark, sf_dir)
+    def row(doc_id, blob, raw):
+        samples, rate = decode_wav_ima(bytes(blob))  # REAL ADPCM decode
+        rms = float(np.sqrt(((samples.astype(np.float64) - _pcm16(raw)) ** 2).mean()))
+        return int(doc_id), int(rate), int(len(samples)), rms < _ADPCM_RMS_BOUND
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "sample_rate": [], "n_samples": [], "rms_ok": []}
-            for doc_id, blob, raw in zip(pdf["doc_id"], pdf["content"], pdf["raw"]):
-                samples, rate = decode_wav_ima(bytes(blob))  # REAL ADPCM decode
-                b = np.frombuffer(bytes(raw), dtype=np.uint8).astype(np.int64)
-                orig = (b - 128) << 8
-                rms = float(np.sqrt(((samples.astype(np.float64) - orig) ** 2).mean()))
-                out["doc_id"].append(int(doc_id))
-                out["sample_rate"].append(int(rate))
-                out["n_samples"].append(int(len(samples)))
-                out["rms_ok"].append(rms < _ADPCM_RMS_BOUND)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        op, schema="doc_id long, sample_rate int, n_samples int, rms_ok boolean"
+    return _map_rows(
+        attach_adpcm_audio(spark, sf_dir), ["doc_id", "content", "raw"], row,
+        "doc_id long, sample_rate int, n_samples int, rms_ok boolean",
     )
 
 
@@ -1381,27 +1154,12 @@ def attach_flac_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cached per session like the other media fixtures."""
     from drive_health_etl_spark.operators.flac_codec import encode_flac
 
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 1)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    raster = base.select(
-        "doc_id",
-        F.expr(f"encode(rpad(text || ' ', {WAV_SAMPLES}, text || ' '), 'utf-8')").alias("raw"),
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for raw in pdf["raw"]:
-                b = np.frombuffer(bytes(raw), dtype=np.uint8).astype(np.int64)
-                blobs.append(encode_flac(((b - 128) << 8).astype(np.int16), WAV_RATE))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
-
-    return dataset_cached(
+    return _encoded(
         spark, sf_dir, "flac",
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary").persist(),
+        _cohort(spark, sf_dir, 1).select("doc_id", _text_bytes(WAV_SAMPLES).alias("raw")),
+        ["doc_id", "raw"],
+        lambda doc_id, raw: (doc_id, encode_flac(_pcm16(raw).astype(np.int16), WAV_RATE)),
+        "doc_id long, content binary",
     )
 
 
@@ -1415,25 +1173,12 @@ def multimodal_flac_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash compare."""
     from drive_health_etl_spark.operators.flac_codec import decode_flac
 
-    media = attach_flac_audio(spark, sf_dir)
+    def row(doc_id, blob):
+        samples, rate = decode_flac(bytes(blob))  # REAL FLAC decode
+        return _pcm_stats(doc_id, rate, samples)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "sample_rate": [], "n_samples": [], "mean_amp": [], "rms": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                samples, rate = decode_flac(bytes(blob))  # REAL FLAC decode
-                s = samples.astype(np.float64)
-                out["doc_id"].append(int(doc_id))
-                out["sample_rate"].append(int(rate))
-                out["n_samples"].append(int(len(samples)))
-                # exact: integer sums over power-of-two-scaled values
-                out["mean_amp"].append(float(s.mean()))
-                out["rms"].append(float(np.sqrt((s * s).mean())))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        op,
-        schema="doc_id long, sample_rate int, n_samples int, mean_amp double, rms double",
+    return _map_rows(
+        attach_flac_audio(spark, sf_dir), ["doc_id", "content"], row, _PCM_STATS_SCHEMA
     )
 
 
@@ -1467,43 +1212,20 @@ def attach_mjpeg_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     '00dc' JPEG chunks, idx1 index — ``avi_codec.py``), frame f's raster
     drawn from the doc's text offset by 7*f so frames differ. Standards-
     compliant MJPEG players accept these blobs. Encoded once per session
-    (the dataset-cached fixture discipline); repartitioned so the Python
-    codec spreads across cores."""
+    (the dataset-cached fixture discipline)."""
     from drive_health_etl_spark.operators.avi_codec import encode_avi_mjpeg
 
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 2)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    raster = base.select(
-        "doc_id",
-        *[
-            F.expr(
-                f"encode(rpad(substr(text || ' ', {7 * f + 1}), "
-                f"{_MJPEG_PAYLOAD}, text || ' '), 'utf-8')"
-            ).alias(f"raw{f}")
-            for f in range(MJPEG_FRAMES)
-        ],
-    )
+    def row(doc_id, *raws):
+        frames = [_u8(r, MJPEG_H, MJPEG_W, 3) for r in raws]
+        return doc_id, encode_avi_mjpeg(frames), b"".join(bytes(r) for r in raws)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs, raws = [], []
-            for i in range(len(pdf)):
-                frames = [
-                    np.frombuffer(bytes(pdf[f"raw{f}"].iloc[i]), dtype=np.uint8).reshape(
-                        MJPEG_H, MJPEG_W, 3
-                    )
-                    for f in range(MJPEG_FRAMES)
-                ]
-                blobs.append(encode_avi_mjpeg(frames))
-                raws.append(b"".join(bytes(pdf[f"raw{f}"].iloc[i]) for f in range(MJPEG_FRAMES)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs, "raw": raws})
-
-    return dataset_cached(
-        spark, sf_dir, "mjpeg",
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary, raw binary").persist(),
+    cols = [f"raw{f}" for f in range(MJPEG_FRAMES)]
+    raster = _cohort(spark, sf_dir, 2).select(
+        "doc_id", *[_text_bytes(_MJPEG_PAYLOAD, 7 * f).alias(c) for f, c in enumerate(cols)]
+    )
+    return _encoded(
+        spark, sf_dir, "mjpeg", raster, ["doc_id", *cols], row,
+        "doc_id long, content binary, raw binary",
     )
 
 
@@ -1517,29 +1239,18 @@ def multimodal_mjpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     flips the oracle hash."""
     from drive_health_etl_spark.operators.avi_codec import decode_avi_mjpeg
 
-    media = attach_mjpeg_video(spark, sf_dir)
+    def row(doc_id, blob, raw):
+        frames, meta = decode_avi_mjpeg(bytes(blob))  # REAL container+codec decode
+        raw_arr = _u8(raw, MJPEG_FRAMES, MJPEG_H, MJPEG_W, 3)
+        ok = all(
+            float(((f.astype(np.float64) - raw_arr[i]) ** 2).mean()) < _MJPEG_MSE_BOUND
+            for i, f in enumerate(frames)
+        )
+        return int(doc_id), int(meta["n_frames"]), int(meta["width"]), int(meta["height"]), bool(ok)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "n_frames": [], "width": [], "height": [], "frames_ok": []}
-            for doc_id, blob, raw in zip(pdf["doc_id"], pdf["content"], pdf["raw"]):
-                frames, meta = decode_avi_mjpeg(bytes(blob))  # REAL container+codec decode
-                raw_arr = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(
-                    MJPEG_FRAMES, MJPEG_H, MJPEG_W, 3
-                )
-                ok = all(
-                    float(((f.astype(np.float64) - raw_arr[i]) ** 2).mean()) < _MJPEG_MSE_BOUND
-                    for i, f in enumerate(frames)
-                )
-                out["doc_id"].append(int(doc_id))
-                out["n_frames"].append(int(meta["n_frames"]))
-                out["width"].append(int(meta["width"]))
-                out["height"].append(int(meta["height"]))
-                out["frames_ok"].append(bool(ok))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        op, schema="doc_id long, n_frames int, width int, height int, frames_ok boolean"
+    return _map_rows(
+        attach_mjpeg_video(spark, sf_dir), ["doc_id", "content", "raw"], row,
+        "doc_id long, n_frames int, width int, height int, frames_ok boolean",
     )
 
 
@@ -1588,33 +1299,17 @@ def attach_lossless_p_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes a 4-frame AVI with a BI_RGB DIB keyframe and LP01
     conditional-replenishment P-frames (``avi_codec.encode_avi_lossless_p``
     — per-8x8-block skip flags + mod-256 deltas, fully lossless). Encoded
-    once per session (dataset-cached); repartitioned so the Python codec
-    spreads across cores."""
+    once per session (dataset-cached)."""
     from drive_health_etl_spark.operators.avi_codec import encode_avi_lossless_p
 
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 3 == 2)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def row(doc_id, text):
+        payloads = [_lp_frame_payload(text, f) for f in range(MJPEG_FRAMES)]
+        frames = [_u8(p, MJPEG_H, MJPEG_W, 3) for p in payloads]
+        return doc_id, encode_avi_lossless_p(frames), b"".join(payloads)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs, raws = [], []
-            for text in pdf["text"]:
-                payloads = [_lp_frame_payload(text, f) for f in range(MJPEG_FRAMES)]
-                frames = [
-                    np.frombuffer(p, dtype=np.uint8).reshape(MJPEG_H, MJPEG_W, 3)
-                    for p in payloads
-                ]
-                blobs.append(encode_avi_lossless_p(frames))
-                raws.append(b"".join(payloads))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs, "raw": raws})
-
-    return dataset_cached(
-        spark, sf_dir, "mjpeg_p",
-        lambda: base.mapInPandas(op, schema="doc_id long, content binary, raw binary").persist(),
+    return _encoded(
+        spark, sf_dir, "mjpeg_p", _cohort(spark, sf_dir, 2).select("doc_id", "text"),
+        ["doc_id", "text"], row, "doc_id long, content binary, raw binary",
     )
 
 
@@ -1629,37 +1324,19 @@ def multimodal_mjpeg_p_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     block, or any keyframe byte error flips the hash."""
     from drive_health_etl_spark.operators.avi_codec import decode_avi_lossless_p
 
-    media = attach_lossless_p_video(spark, sf_dir)
+    def row(doc_id, blob, raw):
+        frames, meta = decode_avi_lossless_p(bytes(blob))
+        raw_arr = _u8(raw, MJPEG_FRAMES, MJPEG_H, MJPEG_W, 3)
+        exact = all(np.array_equal(f, raw_arr[i]) for i, f in enumerate(frames))
+        return (
+            int(doc_id), int(meta["n_frames"]), int(meta["width"]), int(meta["height"]),
+            int(meta["n_skipped_blocks"]), int(meta["sum_delta"]), bool(exact),
+        )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_frames": [], "width": [], "height": [],
-                "n_skipped_blocks": [], "sum_delta": [], "frames_exact": [],
-            }
-            for doc_id, blob, raw in zip(pdf["doc_id"], pdf["content"], pdf["raw"]):
-                frames, meta = decode_avi_lossless_p(bytes(blob))
-                raw_arr = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(
-                    MJPEG_FRAMES, MJPEG_H, MJPEG_W, 3
-                )
-                exact = all(
-                    np.array_equal(f, raw_arr[i]) for i, f in enumerate(frames)
-                )
-                out["doc_id"].append(int(doc_id))
-                out["n_frames"].append(int(meta["n_frames"]))
-                out["width"].append(int(meta["width"]))
-                out["height"].append(int(meta["height"]))
-                out["n_skipped_blocks"].append(int(meta["n_skipped_blocks"]))
-                out["sum_delta"].append(int(meta["sum_delta"]))
-                out["frames_exact"].append(bool(exact))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        op,
-        schema=(
-            "doc_id long, n_frames int, width int, height int, "
-            "n_skipped_blocks long, sum_delta long, frames_exact boolean"
-        ),
+    return _map_rows(
+        attach_lossless_p_video(spark, sf_dir), ["doc_id", "content", "raw"], row,
+        "doc_id long, n_frames int, width int, height int, "
+        "n_skipped_blocks long, sum_delta long, frames_exact boolean",
     )
 
 
@@ -1729,25 +1406,16 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept pixels. The oracle selects the same (even-row, even-col) positions
     from the raster construction rule — an off-by-one in the stride or a
     row/col swap changes which pixels survive and breaks the hash."""
-    media = attach_ppm_images(spark, sf_dir)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "rw": [], "rh": [], "mean_r": [], "mean_g": [], "mean_b": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                small = resize_image(decode_image(bytes(blob)))  # REAL decode + resize
-                h, w, _ = small.shape
-                px = small.astype("float64")
-                out["doc_id"].append(int(doc_id))
-                out["rw"].append(int(w))
-                out["rh"].append(int(h))
-                out["mean_r"].append(float(px[:, :, 0].mean()))
-                out["mean_g"].append(float(px[:, :, 1].mean()))
-                out["mean_b"].append(float(px[:, :, 2].mean()))
-            yield pd.DataFrame(out)
+    def row(doc_id, blob):
+        small = resize_image(decode_image(bytes(blob)))  # REAL decode + resize
+        h, w, _ = small.shape
+        px = small.astype("float64")
+        return (int(doc_id), int(w), int(h), *(float(px[:, :, c].mean()) for c in range(3)))
 
-    return media.mapInPandas(
-        op, schema="doc_id long, rw int, rh int, mean_r double, mean_g double, mean_b double"
+    return _map_rows(
+        attach_ppm_images(spark, sf_dir), ["doc_id", "content"], row,
+        "doc_id long, rw int, rh int, mean_r double, mean_g double, mean_b double",
     )
 
 
@@ -1831,20 +1499,10 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify join is two equi-joins on doc id. The oracle recomputes every
     hash bit from the raster construction rule, so a decoder or hasher bug
     breaks the match."""
-    media = attach_ppm_images(spark, sf_dir)
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "b0": [], "b1": [], "b2": [], "b3": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                bands = _dhash_bands(decode_image(bytes(blob)))  # REAL decode
-                out["doc_id"].append(int(doc_id))
-                for i, b in enumerate(bands):
-                    out[f"b{i}"].append(b)
-            yield pd.DataFrame(out)
-
-    hashes = media.mapInPandas(
-        op, schema="doc_id long, b0 long, b1 long, b2 long, b3 long"
+    hashes = _map_rows(
+        attach_ppm_images(spark, sf_dir), ["doc_id", "content"],
+        lambda doc_id, blob: (int(doc_id), *_dhash_bands(decode_image(bytes(blob)))),  # REAL decode
+        "doc_id long, b0 long, b1 long, b2 long, b3 long",
     ).localCheckpoint()  # decode once; reused by candidate + both verify sides
 
     bands_long = hashes.select(
@@ -1982,22 +1640,11 @@ def multimodal_audio_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound the fan-out; a production tuner widens the code to keep bucket
     occupancy ~1). The oracle rebuilds every bit from the sample
     construction rule: a chunk-walk, centering, or framing bug breaks it."""
-    media = attach_wav_audio(spark, sf_dir)
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "fp": [], "zcr": [], "energy": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                _rate, samples = decode_audio(bytes(blob))  # REAL decode
-                fp, zcr, energy = _audio_fingerprint(samples)
-                out["doc_id"].append(int(doc_id))
-                out["fp"].append(fp)
-                out["zcr"].append(zcr)
-                out["energy"].append(energy)
-            yield pd.DataFrame(out)
-
-    prints = media.mapInPandas(
-        op, schema="doc_id long, fp long, zcr long, energy long"
+    prints = _map_rows(
+        attach_wav_audio(spark, sf_dir), ["doc_id", "content"],
+        # REAL decode
+        lambda doc_id, blob: (int(doc_id), *_audio_fingerprint(decode_audio(bytes(blob))[1])),
+        "doc_id long, fp long, zcr long, energy long",
     ).localCheckpoint()  # decode once; both join sides reuse it
     a = prints.select(
         F.col("doc_id").alias("doc_a"), "fp", F.col("energy").alias("e_a")
@@ -2080,24 +1727,17 @@ def multimodal_video_scenecut(spark: SparkSession, sf_dir: str) -> DataFrame:
     differences, the threshold is a compile-time int. The oracle rebuilds
     every frame sum from the construction rule, so a frame-boundary or
     ordering bug breaks the match."""
-    media = attach_video(spark, sf_dir)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "n_cuts": [], "max_jump": [], "first_cut": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
-                frames = decode_video(bytes(blob))  # REAL decode
-                sums = [int(f.astype(np.int64).sum()) for f in frames]
-                jumps = [abs(b - a) for a, b in zip(sums, sums[1:])]
-                cuts = [i + 1 for i, j in enumerate(jumps) if j > _CUT_THRESHOLD]
-                out["doc_id"].append(int(doc_id))
-                out["n_cuts"].append(len(cuts))
-                out["max_jump"].append(max(jumps) if jumps else 0)
-                out["first_cut"].append(cuts[0] if cuts else -1)
-            yield pd.DataFrame(out)
+    def row(doc_id, blob):
+        frames = decode_video(bytes(blob))  # REAL decode
+        sums = [int(f.astype(np.int64).sum()) for f in frames]
+        jumps = [abs(b - a) for a, b in zip(sums, sums[1:])]
+        cuts = [i + 1 for i, j in enumerate(jumps) if j > _CUT_THRESHOLD]
+        return int(doc_id), len(cuts), max(jumps) if jumps else 0, cuts[0] if cuts else -1
 
-    return media.mapInPandas(
-        op, schema="doc_id long, n_cuts int, max_jump long, first_cut int"
+    return _map_rows(
+        attach_video(spark, sf_dir), ["doc_id", "content"], row,
+        "doc_id long, n_cuts int, max_jump long, first_cut int",
     )
 
 

@@ -534,7 +534,7 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_semantic_prune_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-scale prune: k grows with the corpus (the same
-    k ~ n/{SEMDEDUP_CELL_TARGET} policy as `dedup_semantic_scaled`) so
+    k ~ n/``SEMDEDUP_CELL_TARGET`` policy as `dedup_semantic_scaled`) so
     in-cell pair work stays LINEAR in n. The fixed-k `dedup_semantic_prune`
     stays the oracle-checked configuration (its unrolled Lloyd CTEs need a
     static centroid count); this variant is the 100 TB shape and the one
@@ -2169,7 +2169,7 @@ def emb_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss sketch quality: project every embedding
     64 -> ``_JL_K`` dims with a +/-1 matrix (Achlioptas's database-friendly
     construction) and measure pairwise squared-distance distortion on a
-    fenced {_JL_SAMPLE}-vector sample:
+    fenced ``_JL_SAMPLE``-vector sample:
 
         ratio(a, b) = ||Ra - Rb||^2 / (k * ||a - b||^2)   (E[ratio] = 1)
 

@@ -616,7 +616,7 @@ def stat_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose cumulative thresholds are computed once in Python and embedded as
     identical double literals in both engines. Resample means use exact
     decimal sums; the CI is an order statistic (2nd smallest / 2nd largest
-    of {B} = a 96%% interval), so no float summation crosses rows."""
+    of 50 (``_BOOT_B``) = a 96% interval), so no float summation crosses rows."""
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_acctbal").cast("decimal(18,2)").alias("x")
     )

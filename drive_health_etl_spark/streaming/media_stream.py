@@ -3,12 +3,12 @@
 A multimodal training corpus arrives continuously; the decode/feature pass
 must run per micro-batch, not as a nightly O(corpus) job. This operator is
 the streaming composition of the batch codec suite: a file-source stream of
-GIF blobs flows through the SAME Arrow-batched ``mapInPandas`` decode used
-by the batch query (real LZW, ``gif_codec.py``), then into a streaming
-aggregation by image geometry. ``mapInPandas`` on an unbounded DataFrame is
-exactly the pattern's point — the decode is a stateless narrow map, so
-Structured Streaming runs it per micro-batch with no state store, and the
-downstream groupBy is the only stateful operator.
+GIF blobs flows through the SAME Arrow-batched row map the batch queries use
+(``multimodal._map_rows``, real LZW via ``gif_codec.py``), then into a
+streaming aggregation by image geometry. ``mapInPandas`` on an unbounded
+DataFrame is exactly the pattern's point — the decode is a stateless narrow
+map, so Structured Streaming runs it per micro-batch with no state store,
+and the downstream groupBy is the only stateful operator.
 
 Driven to completion with availableNow + two source files (two
 micro-batches); complete-mode output makes the final aggregate equal the
@@ -19,34 +19,27 @@ means), so the value-hash gate is solid.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drive_health_etl_spark.operators.gif_codec import decode_gif
+from drive_health_etl_spark.operators.multimodal import _map_rows, attach_gif_images
 from drive_health_etl_spark.streaming.spool import drain, scratch, spool
+
+
+def _gif_geometry_row(blob: bytes) -> tuple[int, int, int]:
+    idx, pal = decode_gif(bytes(blob))  # REAL LZW decode, in-stream
+    h, w = idx.shape
+    return int(w), int(h), int(pal[idx][:, :, 0].astype(np.int64).sum())
 
 
 def gif_geometry(media: DataFrame) -> DataFrame:
     """Decode every (doc_id, content) GIF blob with the real LZW codec and
     aggregate (width, height) -> (n_images, total_gray)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drive_health_etl_spark.operators.gif_codec import decode_gif
-
-        for pdf in batches:
-            out = {"width": [], "height": [], "gray_sum": []}
-            for blob in pdf["content"]:
-                idx, pal = decode_gif(bytes(blob))  # REAL LZW decode, in-stream
-                h, w = idx.shape
-                out["width"].append(int(w))
-                out["height"].append(int(h))
-                out["gray_sum"].append(int(pal[idx][:, :, 0].astype(np.int64).sum()))
-            yield pd.DataFrame(out)
-
-    decoded = media.mapInPandas(op, schema="width int, height int, gray_sum long")
+    decoded = _map_rows(
+        media, ["content"], _gif_geometry_row, "width int, height int, gray_sum long"
+    )
     return decoded.groupBy("width", "height").agg(
         F.count("*").alias("n_images"),
         F.sum("gray_sum").alias("total_gray"),
@@ -57,8 +50,6 @@ def st_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the GIF fixture corpus (two parquet spool files -> two
     micro-batches), decode every blob with the real LZW codec inside the
     stream, and aggregate (width, height) -> (n_images, total_gray)."""
-    from drive_health_etl_spark.operators.multimodal import attach_gif_images
-
     media = attach_gif_images(spark, sf_dir).select("doc_id", "content")
     with scratch(spark, "dhe_media_") as tmp:
         stream = spool(media, F.col("doc_id") % 2, f"{tmp}/src")

@@ -3,16 +3,12 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from drive_health_etl_spark.operators.multimodal import (
-    attach_media,
-    decode_image,
-    extract_features,
-)
+from drive_health_etl_spark.operators.multimodal import attach_media, decode_image
 
 
-def test_decode_refuses_unknown_format_without_fake():
+def test_decode_refuses_unknown_format():
     with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG\r\n...")  # compressed formats need PIL
+        decode_image(b"\x89PNG\r\n...")  # truncated PNG signature: no codec claims it
 
 
 def test_decode_netpbm_real():
@@ -38,33 +34,11 @@ def test_ppm_roundtrip_through_spark(spark, sf_dir):
     assert img.ndim == 3 and img.shape[2] == 3
 
 
-def test_decode_fake_deterministic():
-    a = decode_image(b"hello world", fake=True)
-    b = decode_image(b"hello world", fake=True)
-    assert a.shape == (8, 64) and (a == b).all()
-
-
-def test_media_schema_and_feature_plumbing(spark, sf_dir):
-    media = attach_media(spark, sf_dir)
-    row = media.first()
+def test_attach_media_schema(spark, sf_dir):
+    row = attach_media(spark, sf_dir).first()
     assert isinstance(row["content"], bytearray | bytes)
     assert row["byte_len"] == len(row["content"])
     assert row["modality"] in ("image", "audio", "video")
-
-    feats = extract_features(media.limit(20))
-    rows = feats.collect()
-    assert len(rows) == 20
-    for r in rows:
-        assert len(r["feature"]) == 8
-        assert abs(sum(r["feature"]) - 1.0) < 1e-9  # normalized histogram
-        assert r["n_frames"] >= 1
-
-
-def test_feature_extraction_deterministic(spark, sf_dir):
-    media = attach_media(spark, sf_dir).limit(10)
-    a = sorted(map(tuple, extract_features(media).select("doc_id", "feature").collect()))
-    b = sorted(map(tuple, extract_features(media).select("doc_id", "feature").collect()))
-    assert [(d, tuple(f)) for d, f in a] == [(d, tuple(f)) for d, f in b]
 
 
 def test_decode_wav_real():

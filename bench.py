@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from drive_health_etl_spark.plans.registry import REGISTRY
 from drive_health_etl_spark.session import get_spark
+from perfbench.measure import tree_pids
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -244,34 +245,6 @@ def _read_proc_stat() -> dict[str, float] | None:
         return None
 
 
-def _descendant_pids() -> set[int]:
-    """This process plus all live descendants (the py4j-launched JVM and any
-    helpers), from /proc ppid chains."""
-    ppid_of: dict[int, int] = {}
-    try:
-        for entry in os.listdir("/proc"):
-            if not entry.isdigit():
-                continue
-            try:
-                with open(f"/proc/{entry}/stat") as f:
-                    stat = f.read()
-                # comm may contain spaces/parens: fields resume after last ')'
-                ppid_of[int(entry)] = int(stat.rsplit(")", 1)[1].split()[1])
-            except Exception:
-                continue
-    except Exception:
-        return {os.getpid()}
-    tree = {os.getpid()}
-    grew = True
-    while grew:
-        grew = False
-        for pid, ppid in ppid_of.items():
-            if ppid in tree and pid not in tree:
-                tree.add(pid)
-                grew = True
-    return tree
-
-
 def _tree_cpu_jiffies() -> float:
     """utime+stime summed over the bench's live process tree, PLUS each
     member's reaped-children time (cutime+cstime): transient pyspark
@@ -282,7 +255,7 @@ def _tree_cpu_jiffies() -> float:
     the parent's cutime/cstime — summing both keeps the tree total
     continuous across worker death without double counting."""
     tot = 0.0
-    for pid in _descendant_pids():
+    for pid in tree_pids(os.getpid()):
         try:
             with open(f"/proc/{pid}/stat") as f:
                 fields = f.read().rsplit(")", 1)[1].split()

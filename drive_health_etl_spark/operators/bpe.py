@@ -37,7 +37,7 @@ for why that formulation is the 100 TB shape.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from drive_health_etl_spark.operators.fitcache import dataset_cached
@@ -48,7 +48,7 @@ BPE_ROUNDS = 3
 
 
 def _pair_counts(s_df: DataFrame) -> DataFrame:
-    toks = F.filter(F.split(F.trim("s"), r"\s+"), lambda x: x != F.lit(""))
+    toks = tokens_col("s")
     pairs = F.expr(
         "transform(sequence(0, size(toks)-2), i -> struct(toks[i] AS w1, toks[i+1] AS w2))"
     )
@@ -63,8 +63,7 @@ def _pair_counts(s_df: DataFrame) -> DataFrame:
 
 
 def _token_total(s_df: DataFrame) -> int:
-    toks = F.filter(F.split(F.trim("s"), r"\s+"), lambda x: x != F.lit(""))
-    return s_df.select(F.sum(F.size(toks)).alias("n")).collect()[0]["n"]
+    return s_df.select(F.sum(F.size(tokens_col("s"))).alias("n")).collect()[0]["n"]
 
 
 def _train_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
@@ -162,6 +161,22 @@ def _bpe_train_sql() -> str:
 TEXT_BPE_TRAIN_SQL = _bpe_train_sql()
 
 
+def _merged_tokens(spark: SparkSession, sf_dir: str, *cols: Column) -> DataFrame:
+    """``cols`` of each document plus ``toks``, its whitespace tokens after
+    the trained merges: pad the tokens into " t1 t2 ... ", apply each
+    (w1, w2) in rank order as training's literal rewrite, then re-tokenize.
+    Shared by `text_bpe_encode` and `text_bpe_vocab`."""
+    merges = _train_merges(spark, sf_dir)
+    enc = load_table(spark, sf_dir, "documents").select(
+        *cols, F.concat(F.lit(" "), F.concat_ws(" ", tokens_col()), F.lit(" ")).alias("s")
+    )
+    for _rnd, w1, w2, _c, _n in merges:
+        enc = enc.withColumn(
+            "s", F.replace(F.col("s"), F.lit(f" {w1} {w2} "), F.lit(f" {w1}~{w2} "))
+        )
+    return enc.select(*enc.columns[:-1], tokens_col("s").alias("toks"))
+
+
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply the trained BPE merge table to the corpus — the missing half
     of the tokenizer loop (`text_bpe_train` FITS the merges; a training
@@ -197,20 +212,9 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis"); the shape mirrors the reference's payload-normalize step
     (/root/reference/src/phone.js:36-56) — a learned table applied
     row-wise at scale."""
-    merges = _train_merges(spark, sf_dir)
-
-    docs = load_table(spark, sf_dir, "documents")
-    enc = docs.select(
-        "doc_id",
-        F.concat(F.lit(" "), F.concat_ws(" ", tokens_col()), F.lit(" ")).alias("s"),
-        F.size(tokens_col()).cast("int").alias("n_tokens_base"),
+    enc = _merged_tokens(
+        spark, sf_dir, F.col("doc_id"), F.size(tokens_col()).cast("int").alias("n_tokens_base")
     )
-    for _rnd, w1, w2, _c, _n in merges:
-        enc = enc.withColumn(
-            "s", F.replace(F.col("s"), F.lit(f" {w1} {w2} "), F.lit(f" {w1}~{w2} "))
-        )
-    toks = F.filter(F.split(F.trim("s"), r"\s+"), lambda x: x != F.lit(""))
-    enc = enc.select("doc_id", "n_tokens_base", toks.alias("toks"))
 
     # vocab ranking: one bounded count aggregate; the collect is capped by
     # construction (base vocab + BPE_ROUNDS merge units)
@@ -245,21 +249,12 @@ def text_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode's digest exercises only in aggregate. Bounded output: base
     vocab + one entry per learned merge (any real tokenizer's vocab is
     budget-bounded), so the single count aggregate is the only shuffle."""
-    merges = _train_merges(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    enc = docs.select(
-        F.concat(F.lit(" "), F.concat_ws(" ", tokens_col()), F.lit(" ")).alias("s")
-    )
-    for _rnd, w1, w2, _c, _n in merges:
-        enc = enc.withColumn(
-            "s", F.replace(F.col("s"), F.lit(f" {w1} {w2} "), F.lit(f" {w1}~{w2} "))
-        )
-    toks = F.filter(F.split(F.trim("s"), r"\s+"), lambda x: x != F.lit(""))
     from pyspark.sql import Window
 
     w = Window.orderBy(F.col("count").desc(), F.col("token").asc())
     return (
-        enc.select(F.explode(toks).alias("token"))
+        _merged_tokens(spark, sf_dir)
+        .select(F.explode("toks").alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("count"))
         # single-partition window is CORRECT here: its input is the

@@ -207,23 +207,11 @@ GROUP BY doc_id
 
 # Pathological-bucket guard: a bucket of n docs expands to n^2/2 pairs, so
 # one degenerate bucket (e.g. a corpus that is 50% one boilerplate page)
-# can dominate the whole job. Buckets are truncated to this many docs; the
-# dropped tail is observable via minhash_bucket_stats(). Pre-collapsing
-# exact duplicates (dedup_exact) before LSH keeps real corpora far below
-# the cap — on this testdata the largest bucket is <20 docs, so the cap
+# can dominate the whole job. Buckets are truncated to this many docs.
+# Pre-collapsing exact duplicates (dedup_exact) before LSH keeps real
+# corpora far below the cap — on this testdata the largest bucket is <20 docs, so the cap
 # never binds and the DuckDB oracle (uncapped band self-join) still matches.
 BUCKET_CAP = 1000
-
-
-def minhash_bucket_stats(spark: SparkSession, sf_dir: str, cap: int = BUCKET_CAP) -> DataFrame:
-    """LSH bucket-size distribution + how many docs the cap would drop —
-    the drop-count log for dedup_minhash_pairs' pathological-bucket guard."""
-    buckets = _lsh_buckets(minhash_signatures(spark, sf_dir))
-    return buckets.agg(
-        F.count("*").alias("n_buckets"),
-        F.max(F.size("ids")).alias("max_bucket"),
-        F.sum(F.greatest(F.size("ids") - cap, F.lit(0))).cast("long").alias("docs_dropped"),
-    )
 
 
 def _lsh_buckets(sigs: DataFrame) -> DataFrame:
@@ -547,9 +535,11 @@ SELECT doc_id, simhash, n_chars, cluster_size FROM (
 """
 
 
-def dedup_components(
-    spark: SparkSession, sf_dir: str, small_graph_edges: int = 100_000
-) -> DataFrame:
+# dedup_components runs a driver-side union-find up to this many edges.
+SMALL_GRAPH_EDGES = 100_000
+
+
+def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the near-dup pair graph — the cluster-
     collapse step after LSH: every doc in a component dedupes to the
     component's min doc_id.
@@ -575,7 +565,7 @@ def dedup_components(
     # magnitude in scheduling overhead; above it, fall through to the
     # distributed star-contraction. Same fixpoint either way.
     n_edges = pairs.count()
-    if n_edges <= small_graph_edges:
+    if n_edges <= SMALL_GRAPH_EDGES:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:

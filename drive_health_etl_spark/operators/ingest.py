@@ -20,8 +20,6 @@ Stage map (reference file:line -> function here):
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import datetime, timedelta
-from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -220,8 +218,8 @@ def ingest(raw: DataFrame, audit_rate: float = 1.0, normalize_phones: bool = Tru
     )
 
 
-def write_warehouse(df: DataFrame, path: str, mode: str = "append") -> None:
-    """Partitioned/clustered warehouse write (S5, DDL ``README.md:86-92``).
+def write_warehouse(df: DataFrame, path: str) -> None:
+    """Partitioned/clustered warehouse append (S5, DDL ``README.md:86-92``).
 
     Day-partition on event time (-> partition pruning for
     ``DATE(occurred_at) = X`` scans) and sort within partitions by
@@ -235,22 +233,7 @@ def write_warehouse(df: DataFrame, path: str, mode: str = "append") -> None:
         df.withColumn("event_date", F.to_date("occurred_at"))
         .repartition("event_date")
         .sortWithinPartitions("event_date", "tenant_id", "event_type")
-        .write.mode(mode)
+        .write.mode("append")
         .partitionBy("event_date")
         .parquet(path)
     )
-
-
-def retention_expire(spark, path: str, ttl_days: int = 365) -> list[str]:
-    """Partition-TTL job (``README.md:88``: 1y expiry). Returns partitions
-    that an external cleaner should drop — pure metadata, no data scan:
-    the partitions come from the file index's ``event_date=`` path
-    segments (a declared schema skips schema inference), so no Spark job
-    runs."""
-    files = spark.read.schema("event_date date").parquet(path).inputFiles()
-    today = datetime.now(ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))).date()
-    cutoff = (today - timedelta(days=ttl_days)).isoformat()
-    days = {
-        seg.split("=", 1)[1] for f in files for seg in f.split("/") if seg.startswith("event_date=")
-    }
-    return sorted(d for d in days if d < cutoff)

@@ -1,29 +1,25 @@
-"""Multi-dimensional data layout: Z-order (Morton) clustering for parquet
-file skipping on MORE THAN ONE column.
+"""Multi-dimensional layout keys: Z-order (Morton) and Hilbert curves for
+parquet file skipping on MORE THAN ONE column.
 
 A warehouse sorted by one column prunes scans on that column only; filters
-on a second column read every file. Interleaving the bits of two (or more)
-key columns into one Morton key and range-partitioning + sorting the write
-on that key makes every file cover a compact rectangle in (x, y) space — so
-parquet min/max footer stats stay tight on BOTH columns and the scan skips
-files for predicates on EITHER. This is the same layout strategy as Delta
-Lake's OPTIMIZE ZORDER BY; here it is plain Spark: a native bit-interleave
-expression + ``repartitionByRange`` + ``sortWithinPartitions`` + parquet.
+on a second column read every file. Interleaving the bits of two key
+columns into one curve key and range-partitioning + sorting a write on that
+key makes every file cover a compact rectangle in (x, y) space, so parquet
+min/max footer stats stay tight on BOTH columns. This is the key behind
+Delta Lake's OPTIMIZE ZORDER BY; here it is plain Spark: a native
+bit-interleave expression (``morton_key``) or an ``aggregate`` fold over the
+bit levels (``hilbert_key_df``), no UDF.
 
 Scale notes:
-- The Morton key is pure integer bit arithmetic inside whole-stage codegen —
+- The keys are pure integer bit arithmetic inside whole-stage codegen —
   no UDF, no stats collection pass (keys are normalized by masking to the
   low ``bits`` bits, not by min/max scaling, so no extra scan).
-- ``repartitionByRange`` samples the key distribution (driver-side sketch of
-  O(partitions) split points — metadata-bounded) and gives each output file
-  a disjoint z-range; skew in the key space degrades balance, not
-  correctness, and AQE-style salting is orthogonal.
-- Generalizes to N columns by round-robin interleave; resolution ``bits``
-  trades layout quality for key width (16 bits/column x 2 columns fits
-  comfortably in a long).
+- Resolution ``bits`` trades layout quality for key width (16 bits/column
+  x 2 columns fits comfortably in a long).
 
-The key math is DuckDB-oracle-checked (``layout_zorder_stats``): both
-engines evaluate the same shift/mask formula exactly over int64.
+The key math is DuckDB-oracle-checked (``layout_zorder_stats``,
+``layout_hilbert_stats``): both engines evaluate the same shift/mask
+formulas exactly over int64.
 """
 
 from __future__ import annotations
@@ -56,60 +52,6 @@ def morton_key_sql(x: str, y: str, bits: int = 8) -> str:
         parts.append(f"((({x} >> {i}) & 1) << {2 * i + 1})")
         parts.append(f"((({y} >> {i}) & 1) << {2 * i})")
     return " | ".join(parts)
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str],
-    bits: int = 8,
-    num_files: int = 16,
-    curve: str = "morton",
-) -> None:
-    """Write ``df`` as parquet clustered on the Morton key of ``cols``:
-    range-partition on the key (disjoint z-range per file) and sort within
-    each file (tight per-page stats). The key column itself is dropped —
-    the layout, not the data, carries it.
-
-    Each column is first normalized onto the full [0, 2^bits) range via its
-    min/max — WITHOUT normalization a narrow-domain column only populates
-    low interleave positions and the wide column's high bits dominate the
-    ordering, collapsing z-order back to a single-column sort (same reason
-    Delta's OPTIMIZE ZORDER rank-normalizes). The bounds aggregate is one
-    map-side-combinable pass yielding ONE row, broadcast back — fully
-    declarative, no driver collect."""
-    x, y = cols
-    n = 1 << bits
-    bounds = df.agg(
-        F.min(x).alias("_minx"), F.max(x).alias("_maxx"),
-        F.min(y).alias("_miny"), F.max(y).alias("_maxy"),
-    )
-
-    def _scaled(col: str, mn: str, mx: str):
-        # floor((v - min) * 2^bits / (range + 1)) in [0, 2^bits)
-        span = (F.col(mx) - F.col(mn) + F.lit(1)).cast("double")
-        return F.floor(
-            (F.col(col) - F.col(mn)).cast("double") * F.lit(float(n)) / span
-        ).cast("long")
-
-    scaled = (
-        df.crossJoin(F.broadcast(bounds))
-        .withColumn("_sx", _scaled(x, "_minx", "_maxx"))
-        .withColumn("_sy", _scaled(y, "_miny", "_maxy"))
-        .drop("_minx", "_maxx", "_miny", "_maxy")
-    )
-    if curve == "hilbert":
-        keyed = hilbert_key_df(scaled, "_sx", "_sy", bits, out="__zkey")
-    else:
-        keyed = scaled.withColumn("__zkey", morton_key(F.col("_sx"), F.col("_sy"), bits))
-    (
-        keyed.drop("_sx", "_sy")
-        .repartitionByRange(num_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 # --- Hilbert curve (locality-superior alternative to Morton) ----------------
@@ -228,8 +170,8 @@ _BITS = 8
 def layout_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton-key distribution over lineitem's (l_partkey, l_suppkey):
     per z-quadrant (top 4 bits of the interleaved key) row count and key
-    bounds. Exercises exactly the bit-interleave ``zorder_write`` clusters
-    by; pure int64 arithmetic, so the DuckDB oracle hash-matches bitwise."""
+    bounds. Pure int64 arithmetic, so the DuckDB oracle hash-matches
+    bitwise."""
     li = load_table(spark, sf_dir, "lineitem")
     mask = F.lit((1 << _BITS) - 1)
     zkey = morton_key(

@@ -71,28 +71,6 @@ def refresh_rollup(
     return n_parts
 
 
-def rollup_distinct_tenants(
-    spark: SparkSession,
-    rollup_path: str,
-    date_from: str | None = None,
-    date_to: str | None = None,
-) -> DataFrame:
-    """Distinct tenants active in a date range, answered ENTIRELY from the
-    rollup by merging per-day HLL sketches (``hll_union_agg``) — the
-    re-aggregation COUNT DISTINCT cannot do. Partition pruning keeps the
-    read to the requested days; at 100 TB this replaces a full fact-table
-    shuffle with a union of kilobyte-sized sketches."""
-    r = spark.read.parquet(rollup_path)
-    if date_from is not None:
-        r = r.filter(F.col("event_date") >= date_from)
-    if date_to is not None:
-        r = r.filter(F.col("event_date") <= date_to)
-    return r.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("tenant_sketch")).alias("distinct_tenants"),
-        F.countDistinct("event_date").alias("n_days"),
-    )
-
-
 def rollup_totals(spark: SparkSession, rollup_path: str) -> DataFrame:
     """The reference's verification aggregate served FROM the rollup —
     per-(tenant, event_type) totals without scanning the fact table."""

@@ -51,16 +51,3 @@ def salted_join(
     )
     joined = salted_big.join(exploded_small, on=[key, "_salt"], how=how)
     return joined.drop("_salt")
-
-
-def skewed_key_profile(df: DataFrame, key: str, top: int = 10) -> DataFrame:
-    """Hot-key diagnostic: per-key row counts and fraction of total — run
-    this before choosing n_salts (skew ratio drives the salt count)."""
-    total = df.count()
-    return (
-        df.groupBy(key)
-        .agg(F.count("*").alias("n_rows"))
-        .withColumn("fraction", F.round(F.col("n_rows") / F.lit(float(total)), 6))
-        .orderBy(F.col("n_rows").desc())
-        .limit(top)
-    )

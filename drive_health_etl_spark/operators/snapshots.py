@@ -72,7 +72,7 @@ def commit_snapshot(df: DataFrame, table_path: str, mode: str = "append") -> int
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unsupported snapshot mode: {mode!r}")
-    # Single-writer fence (same lock as merge_upsert): without it two
+    # Single-writer fence (same lock as refresh_rollup): without it two
     # concurrent committers can allocate the SAME version number and the
     # later manifest publish silently clobbers the earlier one.
     from drive_health_etl_spark.operators.upsert import warehouse_write_lock
@@ -183,9 +183,8 @@ def merge_into(target: DataFrame, source: DataFrame, key: str, op_col: str = "op
     DELETE, WHEN NOT MATCHED AND op='I' THEN INSERT; everything else is a
     no-op. One full-outer equi-join on the key — the Delta/Iceberg MERGE
     execution shape. At scale the join is preceded by touched-file pruning
-    (join source key bounds against manifest min/max stats — the partition-
-    pruned variant lives in ``operators/upsert.py:merge_upsert``); semantics
-    here, pruning there.
+    (join source key bounds against manifest min/max stats, as
+    ``read_snapshot_pruned`` does for a predicate).
 
     The source carries the full target schema plus ``op_col``; unmatched
     source rows with op 'U'/'D' fall through silently (MERGE's standard
@@ -350,48 +349,6 @@ SELECT COALESCE(region, 'legacy') AS region, COUNT(*) AS n_events,
        ROUND(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_value
 FROM evolved GROUP BY 1 ORDER BY region
 """
-
-
-def snapshots_table(spark: SparkSession, table_path: str) -> DataFrame:
-    """The snapshot log as a queryable DataFrame — the Iceberg
-    ``table$snapshots`` metadata-table idea: (version, mode, n_files,
-    n_parent_files). Metadata-only (reads manifests, no data files)."""
-    rows = []
-    for v in list_snapshots(table_path):
-        m = _read_manifest(table_path, v)
-        rows.append((v, m.get("mode", "append"), len(m["files"]), m.get("parent")))
-    return spark.createDataFrame(
-        rows, "version int, mode string, n_files int, parent int"
-    )
-
-
-def vacuum_snapshots(table_path: str, keep_last: int = 1) -> dict:
-    """Expire old snapshots and delete data files no retained version
-    references — Delta VACUUM / Iceberg expire_snapshots. Safety order:
-    (1) delete expired manifests FIRST (so a crash mid-vacuum can never
-    leave a manifest pointing at deleted files), then (2) delete
-    unreferenced data files. Returns counts for the audit log."""
-    versions = list_snapshots(table_path)
-    keep = set(versions[-keep_last:]) if keep_last > 0 else set(versions)
-    expired = [v for v in versions if v not in keep]
-    referenced: set[str] = set()
-    for v in keep:
-        referenced.update(_read_manifest(table_path, v)["files"])
-    candidates: set[str] = set()
-    for v in expired:
-        candidates.update(_read_manifest(table_path, v)["files"])
-    for v in expired:
-        os.remove(_manifest_path(table_path, v))
-    removed = 0
-    for f in sorted(candidates - referenced):
-        if os.path.exists(f):
-            os.remove(f)
-            removed += 1
-    return {
-        "expired_versions": len(expired),
-        "files_removed": removed,
-        "files_retained": len(referenced),
-    }
 
 
 # --- File-level min/max stats + pruned reads --------------------------------

@@ -22,7 +22,6 @@ DLQ branch (ST5): terminal rows append to a side parquet sink in the same
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -166,42 +165,3 @@ def start_stream_ingest(spark: SparkSession, cfg: StreamIngestConfig, available_
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def run_stream_ingest_blocking(spark: SparkSession, cfg: StreamIngestConfig) -> None:
-    """Process everything currently in input_path and return (ST2's graceful
-    drain: availableNow + awaitTermination)."""
-    q = start_stream_ingest(spark, cfg, available_now=True)
-    q.awaitTermination()
-
-
-def streaming_windowed_counts(
-    spark: SparkSession,
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """ST8 [ext]: watermarked tumbling-window aggregation over an event-time
-    stream — late rows beyond the watermark are dropped, state is bounded.
-    Pass a streaming DataFrame with (ts, event_type, value)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
-    )
-
-
-def streaming_session_counts(
-    spark: SparkSession,
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """ST8 [ext]: watermarked session windows per user."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-        .agg(F.count("*").alias("n_events"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n_events")
-    )

@@ -13,16 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def enrich_with_dim(stream: DataFrame, dim: DataFrame, key: str = "user_id") -> DataFrame:
-    """Stream-static enrichment: join a stream against a static dimension
-    snapshot (the lookup-table pattern — user profile, tenant config). The
-    static side is broadcast per micro-batch, so the streaming side stays a
-    stateless narrow map: no watermark, no join state, unlike the
-    stream-stream path below. Left join preserves stream rows with no dim
-    match (late-provisioned keys)."""
-    return stream.join(F.broadcast(dim), key, "left")
-
-
 def purchase_attribution(events: DataFrame) -> DataFrame:
     """events: a streaming DataFrame with (event_id, user_id, ts,
     event_type); its click and purchase rows are the two join sides.

@@ -65,68 +65,3 @@ def dedup_events(events_stream: DataFrame) -> DataFrame:
     return events_stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-
-
-# --- transformWithState variant (Spark 4.x successor API) -------------------
-# Same per-user counters through the typed-state processor surface: named
-# state variables (ValueState here; List/MapState and timers are the API's
-# other primitives), explicit lifecycle (init/handleInputRows/close), and
-# RocksDB-backed state. This is the API new stateful operators should target;
-# applyInPandasWithState above is kept as the stable/legacy twin.
-#
-# GATED: the transformWithState Python worker talks to the JVM state server
-# over a protobuf channel, so running it requires the `google.protobuf`
-# package (absent from this container — tests skip, and the operator is not
-# in the query registry). On a cluster with protobuf installed,
-# tws_user_counters is a drop-in replacement for stateful_user_counters.
-
-
-class UserCounterProcessor:
-    """StatefulProcessor: per-user (count, sum, last_ts) in a ValueState."""
-
-    def init(self, handle) -> None:
-        self._counters = handle.getValueState("counters", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        if self._counters.exists():
-            n, total, last_ts = self._counters.get()
-        else:
-            n, total, last_ts = 0, 0.0, None
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            batch_max = pdf["ts"].max()
-            last_ts = batch_max if last_ts is None else max(last_ts, batch_max)
-        self._counters.update((n, total, last_ts))
-        yield pd.DataFrame(
-            {"user_id": [user_id], "n_events": [n], "total_value": [total], "last_ts": [last_ts]}
-        )
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:  # pragma: no cover
-        pass
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):  # pragma: no cover
-        yield from ()
-
-    def close(self) -> None:
-        pass
-
-
-def tws_user_counters(events_stream: DataFrame) -> DataFrame:
-    """transformWithStateInPandas twin of :func:`stateful_user_counters`.
-    Requires the RocksDB state-store provider (the caller sets
-    ``spark.sql.streaming.stateStore.providerClass``)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # Subclass at call time so importing this module never hard-depends on
-    # the Spark 4 streaming API surface.
-    # concrete methods must precede the ABC in the MRO or the class stays
-    # abstract (abstractness resolves from the first definition found)
-    proc = type("_Proc", (UserCounterProcessor, StatefulProcessor), {})()
-    return events_stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -19,11 +19,11 @@ from bench import (
     IDLE_EXT_SHARE_MAX,
     IDLE_IOWAIT_SHARE_MAX,
     IDLE_LOAD1_MAX,
-    _descendant_pids,
     external_shares,
     idle_verdict,
     load_snapshot,
     parse_proc_stat,
+    tree_pids,
 )
 
 # user nice system idle iowait irq softirq steal guest guest_nice
@@ -107,7 +107,7 @@ def test_descendant_pids_sees_child_process():
     child = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(20)"])
     try:
         time.sleep(0.2)
-        pids = _descendant_pids()
+        pids = tree_pids(os.getpid())
         assert os.getpid() in pids
         assert child.pid in pids
     finally:

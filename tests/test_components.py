@@ -2,19 +2,17 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
+from drive_health_etl_spark.operators import dedup
 from drive_health_etl_spark.operators.dedup import (
     _cc_star_contraction,
     dedup_components,
 )
 
 
-def test_driver_and_distributed_paths_agree(spark, sf_dir):
+def test_driver_and_distributed_paths_agree(spark, sf_dir, monkeypatch):
     local = sorted(map(tuple, dedup_components(spark, sf_dir).collect()))
-    distributed = sorted(
-        map(tuple, dedup_components(spark, sf_dir, small_graph_edges=0).collect())
-    )
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
+    distributed = sorted(map(tuple, dedup_components(spark, sf_dir).collect()))
     assert local == distributed
     # every component root is a member of its own component and is minimal
     roots = {r for _d, r in local}

@@ -1,12 +1,24 @@
 """Scale guards on the MinHash-LSH dedup path: the pathological all-identical
 corpus (one LSH bucket holding everything) must stay bounded via BUCKET_CAP,
-with the dropped tail observable through minhash_bucket_stats."""
+with the dropped tail observable through the bucket sizes."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from drive_health_etl_spark.operators import dedup, fitcache
+
+
+def _bucket_stats(spark, sf_dir, cap):
+    """LSH bucket count, largest bucket, and how many docs a cap of ``cap``
+    drops from the buckets ``dedup_minhash_pairs`` expands."""
+    buckets = dedup._lsh_buckets(dedup.minhash_signatures(spark, sf_dir))
+    return buckets.agg(
+        F.count("*").alias("n_buckets"),
+        F.max(F.size("ids")).alias("max_bucket"),
+        F.sum(F.greatest(F.size("ids") - cap, F.lit(0))).cast("long").alias("docs_dropped"),
+    ).collect()[0]
 
 
 @pytest.fixture()
@@ -28,7 +40,7 @@ def test_bucket_cap_bounds_pathological_corpus(spark, identical_corpus, monkeypa
     # capped: C(50, 2) pairs, not C(3000, 2)
     assert pairs.count() == 50 * 49 // 2
 
-    stats = dedup.minhash_bucket_stats(spark, identical_corpus, cap=50).collect()[0]
+    stats = _bucket_stats(spark, identical_corpus, cap=50)
     assert stats["max_bucket"] == 3000
     # 4 bands x (3000 - 50) docs dropped — the "logged drop-count"
     assert stats["docs_dropped"] == 4 * (3000 - 50)
@@ -37,7 +49,7 @@ def test_bucket_cap_bounds_pathological_corpus(spark, identical_corpus, monkeypa
 def test_bucket_cap_never_binds_on_testdata(spark, sf_dir):
     """On the real corpus the cap must be far above every bucket — capped and
     uncapped candidate sets are identical (oracle parity depends on this)."""
-    stats = dedup.minhash_bucket_stats(spark, sf_dir).collect()[0]
+    stats = _bucket_stats(spark, sf_dir, cap=dedup.BUCKET_CAP)
     assert stats["docs_dropped"] == 0
     assert stats["max_bucket"] < dedup.BUCKET_CAP
 

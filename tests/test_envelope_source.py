@@ -44,10 +44,7 @@ def test_stream_ingest_from_envelope_source(spark, tmp_path):
     checkpointed foreachBatch ingest chain -> warehouse parquet, across two
     drains (the second must process only the new spool file and dedup
     redelivered keys against the warehouse)."""
-    from drive_health_etl_spark.streaming.ingest_stream import (
-        StreamIngestConfig,
-        run_stream_ingest_blocking,
-    )
+    from drive_health_etl_spark.streaming.ingest_stream import StreamIngestConfig, start_stream_ingest
 
     spool = str(tmp_path / "spool")
     cfg = StreamIngestConfig(
@@ -58,14 +55,14 @@ def test_stream_ingest_from_envelope_source(spark, tmp_path):
         source_format="envelope",
     )
     write_spool_file(spool, envelopes.smoke_messages(), "000001.jsonl")
-    run_stream_ingest_blocking(spark, cfg)
+    start_stream_ingest(spark, cfg, available_now=True).awaitTermination()
     first = spark.read.parquet(cfg.warehouse_path).count()
     assert first == len(envelopes.smoke_messages())
 
     # second drain: one new file, plus a redelivery of file 1 (same
     # idempotency keys) — only the genuinely new rows may land
     write_spool_file(spool, envelopes.smoke_messages(), "000002.jsonl")
-    run_stream_ingest_blocking(spark, cfg)
+    start_stream_ingest(spark, cfg, available_now=True).awaitTermination()
     assert spark.read.parquet(cfg.warehouse_path).count() == first
 
 

@@ -1,41 +1,12 @@
-"""Z-order layout: key math properties + measured parquet file skipping.
-
-The point of ``zorder_write`` is that per-file min/max footer stats stay
-tight on BOTH clustered columns, so a point predicate on either column can
-skip most files. The skipping test measures that directly from the parquet
-footers (the same stats Spark's scan uses) and compares against a
-single-column-sorted layout, which must NOT skip on the second column.
-"""
+"""Layout-key math: the Morton interleave is a bijection with the documented
+bit placement, and the Hilbert curve keeps consecutive keys grid-adjacent
+where Morton jumps."""
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
-import pytest
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.layout import morton_key, zorder_write
-from drive_health_etl_spark.sources.tables import load_table
-
-
-def _file_bounds(path: str, col: str) -> list[tuple[int, int]]:
-    """(min, max) of ``col`` per parquet file, read from footer stats."""
-    bounds = []
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.names.index(col)
-        mn, mx = None, None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            mn = st.min if mn is None else min(mn, st.min)
-            mx = st.max if mx is None else max(mx, st.max)
-        bounds.append((mn, mx))
-    return bounds
-
-
-def _files_matching(bounds: list[tuple[int, int]], value: int) -> int:
-    return sum(1 for mn, mx in bounds if mn <= value <= mx)
+from drive_health_etl_spark.operators.layout import morton_key
 
 
 def test_morton_key_properties(spark):
@@ -54,76 +25,11 @@ def test_morton_key_properties(spark):
     assert [r.z for r in row] == [2, 1, 15]
 
 
-def _probes(bounds: list[tuple[int, int]]) -> list[int]:
-    """Four probe values spread across the column's actual global range."""
-    lo = min(mn for mn, _ in bounds)
-    hi = max(mx for _, mx in bounds)
-    return [lo + k * (hi - lo) // 5 for k in (1, 2, 3, 4)]
-
-
-@pytest.fixture(scope="module")
-def layouts(spark, sf_dir, tmp_path_factory):
-    # (l_partkey, l_orderkey): both domains are wide enough that 16 files
-    # can't each cover the whole range — the regime where layout matters
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
-    )
-    zpath = str(tmp_path_factory.mktemp("layout") / "zorder")
-    lpath = str(tmp_path_factory.mktemp("layout") / "linear")
-    zorder_write(li, zpath, ("l_partkey", "l_orderkey"), bits=8, num_files=16)
-    # baseline: single-column sort on l_partkey only
-    (
-        li.repartitionByRange(16, "l_partkey")
-        .sortWithinPartitions("l_partkey")
-        .write.mode("overwrite")
-        .parquet(lpath)
-    )
-    return zpath, lpath
-
-
-def test_zorder_skips_on_both_columns(layouts):
-    zpath, _ = layouts
-    for col in ("l_partkey", "l_orderkey"):
-        bounds = _file_bounds(zpath, col)
-        n = len(bounds)
-        # average over several probe values: a point predicate on EITHER
-        # z-ordered column must touch well under half the files
-        probes = _probes(bounds)
-        avg = sum(_files_matching(bounds, v) for v in probes) / len(probes)
-        assert avg <= n / 2, f"{col}: touches {avg}/{n} files"
-
-
-def test_linear_layout_cannot_skip_second_column(layouts):
-    zpath, lpath = layouts
-    # sorted by l_partkey: skips on it...
-    pk = _file_bounds(lpath, "l_partkey")
-    assert _files_matching(pk, _probes(pk)[1]) <= 2
-    # ...but l_orderkey stats cover ~everything in ~every file
-    sk = _file_bounds(lpath, "l_orderkey")
-    probes = _probes(sk)
-    avg_linear = sum(_files_matching(sk, v) for v in probes) / len(probes)
-    zk = _file_bounds(zpath, "l_orderkey")
-    avg_z = sum(_files_matching(zk, v) for v in probes) / len(probes)
-    # z-order strictly beats the linear layout on the second column
-    assert avg_z < avg_linear / 2
-    assert avg_linear > len(sk) * 0.9  # the linear layout truly cannot skip
-
-
-def test_zorder_write_roundtrip(spark, sf_dir, layouts):
-    zpath, _ = layouts
-    li = load_table(spark, sf_dir, "lineitem")
-    back = spark.read.parquet(zpath)
-    assert back.count() == li.count()
-    assert set(back.columns) == {"l_orderkey", "l_partkey", "l_suppkey", "l_quantity"}
-
-
 def test_hilbert_locality_beats_morton(spark):
     """The Hilbert property: EVERY pair of consecutive d values maps to
     grid-ADJACENT cells (Manhattan distance 1); Morton jumps at quadrant
     boundaries. This is why Hilbert range scans touch tighter rectangles."""
-    from pyspark.sql import functions as F
-
-    from drive_health_etl_spark.operators.layout import hilbert_key_df, morton_key
+    from drive_health_etl_spark.operators.layout import hilbert_key_df
 
     bits = 4  # full 16x16 grid = 256 cells, exhaustive
     n = 1 << bits
@@ -146,19 +52,3 @@ def test_hilbert_locality_beats_morton(spark):
         abs(a[1] - b[1]) + abs(a[2] - b[2]) for a, b in zip(mrows, mrows[1:])
     ]
     assert max(m_manhattan) > 1  # Morton demonstrably jumps
-
-
-def test_hilbert_write_skips_on_both_columns(spark, sf_dir, tmp_path):
-    from drive_health_etl_spark.operators.layout import zorder_write as zw
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
-    )
-    hpath = str(tmp_path / "hilbert")
-    zw(li, hpath, ("l_partkey", "l_orderkey"), bits=8, num_files=16, curve="hilbert")
-    for col in ("l_partkey", "l_orderkey"):
-        bounds = _file_bounds(hpath, col)
-        probes = _probes(bounds)
-        avg = sum(_files_matching(bounds, v) for v in probes) / len(probes)
-        assert avg <= len(bounds) / 2, f"{col}: touches {avg}/{len(bounds)} files"
-    assert spark.read.parquet(hpath).count() == li.count()

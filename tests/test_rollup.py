@@ -3,11 +3,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from drive_health_etl_spark.operators.ingest import ingest, write_warehouse
-from drive_health_etl_spark.operators.rollup import (
-    refresh_rollup,
-    rollup_distinct_tenants,
-    rollup_totals,
-)
+from drive_health_etl_spark.operators.rollup import refresh_rollup, rollup_totals
 from drive_health_etl_spark.sources import envelopes
 
 
@@ -18,13 +14,13 @@ def test_incremental_rollup_matches_full_recompute(spark, sf_dir, tmp_path):
     rows = res.warehouse.cache()
     # initial load: first 20 days only
     first = rows.filter(F.to_date("occurred_at") < "2024-01-21")
-    write_warehouse(first, wh, mode="overwrite")
+    write_warehouse(first, wh)
     n1 = refresh_rollup(spark, wh, rollup)
     assert n1 == 20
 
     # late batch arrives for days 21..30 -> append + incremental refresh
     late = rows.filter(F.to_date("occurred_at") >= "2024-01-21")
-    write_warehouse(late, wh, mode="append")
+    write_warehouse(late, wh)
     touched = [r[0] for r in late.select(F.to_date("occurred_at").alias("d")).distinct().collect()]
     n2 = refresh_rollup(spark, wh, rollup, touched_dates=touched)
     assert n2 == 10
@@ -61,30 +57,3 @@ def test_incremental_rollup_matches_full_recompute(spark, sf_dir, tmp_path):
     assert n_full == 25
     assert spark.read.parquet(rollup).select("event_date").distinct().count() == 25
     rows.unpersist()
-
-
-def test_sketch_rollup_merges_distinct_across_days(spark, sf_dir, tmp_path):
-    """Per-day HLL sketches in the rollup merge to the exact cross-day
-    distinct-tenant count (small domain -> HLL is exact), including over a
-    pruned sub-range — the re-aggregation property COUNT DISTINCT lacks."""
-    wh = str(tmp_path / "wh")
-    rollup = str(tmp_path / "rollup")
-    res = ingest(envelopes.messages_from_events(spark, sf_dir), normalize_phones=False)
-    write_warehouse(res.warehouse, wh, mode="overwrite")
-    refresh_rollup(spark, wh, rollup)
-
-    exact_all = spark.read.parquet(wh).select("tenant_id").distinct().count()
-    got = rollup_distinct_tenants(spark, rollup).collect()[0]
-    assert got["distinct_tenants"] == exact_all
-
-    lo, hi = "2024-01-05", "2024-01-11"
-    exact_range = (
-        spark.read.parquet(wh)
-        .filter((F.col("event_date") >= lo) & (F.col("event_date") <= hi))
-        .select("tenant_id")
-        .distinct()
-        .count()
-    )
-    got_range = rollup_distinct_tenants(spark, rollup, date_from=lo, date_to=hi).collect()[0]
-    assert got_range["distinct_tenants"] == exact_range
-    assert got_range["n_days"] == 7

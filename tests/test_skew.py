@@ -2,7 +2,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.skew import salted_join, skewed_key_profile
+from drive_health_etl_spark.operators.skew import salted_join
 from drive_health_etl_spark.sources.tables import load_table
 
 
@@ -63,13 +63,6 @@ def test_salted_join_rejects_build_side_outer(spark, sf_dir):
     dim = _tenant_dim(spark, events)
     with pytest.raises(ValueError, match="inner/left only"):
         salted_join(events, dim, "tenant", how="full")
-
-
-def test_skewed_key_profile(spark, sf_dir):
-    events = _skewed_events(spark, sf_dir)
-    prof = skewed_key_profile(events, "tenant", top=3).collect()
-    assert prof[0]["tenant"] == "hot-tenant"
-    assert prof[0]["fraction"] > 0.85
 
 
 def test_salting_evens_partition_histogram(spark, sf_dir):

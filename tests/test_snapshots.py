@@ -115,45 +115,3 @@ def test_streaming_versioned_commits(spark, tmp_path):
     per_version = [read_snapshot(spark, table, v).count() for v in versions]
     assert per_version == sorted(per_version)  # appends only grow
     assert per_version[0] < 90
-
-
-def test_snapshots_metadata_table_and_vacuum(spark, tmp_path):
-    """The snapshot log is queryable (version/mode/file counts/parent), and
-    vacuum expires old versions + deletes files only they referenced while
-    keeping the retained version byte-identical."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from drive_health_etl_spark.operators.snapshots import (
-        commit_snapshot,
-        read_snapshot,
-        snapshots_table,
-        vacuum_snapshots,
-    )
-
-    table = str(tmp_path / "t")
-    df1 = spark.range(0, 100).select(F.col("id").alias("k"))
-    df2 = spark.range(100, 150).select(F.col("id").alias("k"))
-    commit_snapshot(df1.coalesce(1), table, mode="append")
-    commit_snapshot(df2.coalesce(1), table, mode="append")
-    commit_snapshot(df2.coalesce(1), table, mode="overwrite")
-
-    meta = {r["version"]: r for r in snapshots_table(spark, table).collect()}
-    assert set(meta) == {1, 2, 3}
-    assert meta[1]["mode"] == "append" and meta[1]["parent"] is None
-    assert meta[2]["n_files"] == meta[1]["n_files"] + 1 and meta[2]["parent"] == 1
-    assert meta[3]["mode"] == "overwrite" and meta[3]["n_files"] == 1
-
-    stats = vacuum_snapshots(table, keep_last=1)
-    assert stats["expired_versions"] == 2
-    assert stats["files_removed"] >= 1  # v1's file is unreferenced by v3
-    # retained version still reads exactly
-    assert read_snapshot(spark, table).count() == 50
-    # expired manifests are gone
-    assert {r["version"] for r in snapshots_table(spark, table).collect()} == {3}
-    # no dangling references: every retained file exists
-    from drive_health_etl_spark.operators.snapshots import _read_manifest
-
-    for f in _read_manifest(table, 3)["files"]:
-        assert os.path.exists(f)

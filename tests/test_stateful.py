@@ -52,58 +52,3 @@ def test_stateful_counters_accumulate_across_batches(spark, sf_dir, tmp_path):
     assert got == want
     # and the stream really ran as two micro-batches, one per file
     assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) == 2
-
-
-def test_tws_counters_accumulate_across_batches(spark, sf_dir, tmp_path):
-    """transformWithState twin of the test above — skips where the
-    google.protobuf package (required by the TWS Python state channel) is
-    absent, which is the case in this container."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from drive_health_etl_spark.session import spark_conf
-    from drive_health_etl_spark.streaming.stateful import tws_user_counters
-
-    src = str(tmp_path / "src")
-    events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    events.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    events.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(src)
-    )
-    with spark_conf(
-        spark,
-        {
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-            )
-        },
-    ):
-        q = (
-            tws_user_counters(stream)
-            .writeStream.format("memory")
-            .queryName("tws_out")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    out = spark.sql(
-        """
-        SELECT user_id, n_events, total_value FROM (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY n_events DESC) AS rn
-          FROM tws_out
-        ) WHERE rn = 1
-        """
-    )
-    expected = events.groupBy("user_id").agg(
-        F.count("*").alias("n_events"), F.sum("value").alias("total_value")
-    )
-    got = {r["user_id"]: (r["n_events"], round(r["total_value"], 6)) for r in out.collect()}
-    want = {r["user_id"]: (r["n_events"], round(r["total_value"], 6)) for r in expected.collect()}
-    assert got == want

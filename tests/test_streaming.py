@@ -1,5 +1,5 @@
 """Structured Streaming tests: checkpointed micro-batch ingest with
-cross-batch idempotency, DLQ side sink, watermarked windowed aggs.
+cross-batch idempotency, DLQ side sink, size-based triggers.
 
 File-source + availableNow triggers make the stream fully deterministic and
 synchronous — the local stand-in for the reference's Pub/Sub push loop.
@@ -7,19 +7,12 @@ synchronous — the local stand-in for the reference's Pub/Sub push loop.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
 from drive_health_etl_spark.sources import envelopes
 from drive_health_etl_spark.sources.tables import load_table
-from drive_health_etl_spark.streaming.ingest_stream import (
-    StreamIngestConfig,
-    run_stream_ingest_blocking,
-    streaming_session_counts,
-    streaming_windowed_counts,
-)
+from drive_health_etl_spark.streaming.ingest_stream import StreamIngestConfig, start_stream_ingest
 
 
 @pytest.fixture()
@@ -40,7 +33,7 @@ def _write_input(spark, cfg, msgs, name):
 def test_stream_ingest_end_to_end(spark, paths):
     cfg = paths
     _write_input(spark, cfg, envelopes.fixture_messages(), "b1")
-    run_stream_ingest_blocking(spark, cfg)
+    start_stream_ingest(spark, cfg, available_now=True).awaitTermination()
 
     wh = spark.read.parquet(cfg.warehouse_path)
     keys = [r["idempotency_key"] for r in wh.select("idempotency_key").collect()]
@@ -53,7 +46,7 @@ def test_stream_ingest_end_to_end(spark, paths):
         envelopes._msg(envelopes._envelope(payload={"call_id": "fresh-1"}), "m-fresh")
     ]
     _write_input(spark, cfg, new, "b2")
-    run_stream_ingest_blocking(spark, cfg)
+    start_stream_ingest(spark, cfg, available_now=True).awaitTermination()
 
     wh2 = spark.read.parquet(cfg.warehouse_path)
     keys2 = sorted(r["idempotency_key"] for r in wh2.select("idempotency_key").collect())
@@ -64,45 +57,11 @@ def test_stream_ingest_end_to_end(spark, paths):
 def test_stream_ingest_checkpoint_no_reprocess(spark, paths):
     cfg = paths
     _write_input(spark, cfg, envelopes.smoke_messages(), "b1")
-    run_stream_ingest_blocking(spark, cfg)
+    start_stream_ingest(spark, cfg, available_now=True).awaitTermination()
     n1 = spark.read.parquet(cfg.warehouse_path).count()
     # Re-running with the same checkpoint and no new files is a no-op.
-    run_stream_ingest_blocking(spark, cfg)
+    start_stream_ingest(spark, cfg, available_now=True).awaitTermination()
     assert spark.read.parquet(cfg.warehouse_path).count() == n1 == 3
-
-
-def _stream_events(spark, sf_dir, tmp_path):
-    # Re-write the (nanos-converted) events table so the streaming source
-    # reads clean micro-timestamps.
-    src = str(tmp_path / "events_stream_src")
-    events = load_table(spark, sf_dir, "events")
-    events.coalesce(2).write.mode("overwrite").parquet(src)
-    return spark.readStream.schema(events.schema).format("parquet").load(src), events
-
-
-def test_streaming_windowed_counts_match_batch(spark, sf_dir, tmp_path):
-    stream, batch = _stream_events(spark, sf_dir, tmp_path)
-    agg = streaming_windowed_counts(spark, stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["window_start"], r["event_type"]): r["n"]
-        for r in spark.sql("SELECT * FROM win_out").collect()
-    }
-    expected = {
-        (r["window_start"], r["event_type"]): r["n"]
-        for r in batch.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-        .collect()
-    }
-    assert got == expected
 
 
 def test_rate_limited_multi_trigger(spark, sf_dir, tmp_path):
@@ -132,54 +91,6 @@ def test_rate_limited_multi_trigger(spark, sf_dir, tmp_path):
     assert len(batches) == 3
     total = spark.sql("SELECT SUM(count) AS s FROM rl_out").collect()[0]["s"]
     assert total == events.count()
-
-
-def test_streaming_session_counts(spark, sf_dir, tmp_path):
-    stream, batch = _stream_events(spark, sf_dir, tmp_path)
-    agg = streaming_session_counts(spark, stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    n_stream = spark.sql("SELECT SUM(n_events) AS s FROM sess_out").collect()[0]["s"]
-    assert n_stream == batch.count()  # every event lands in exactly one session
-
-
-def test_stream_static_enrichment_matches_batch(spark, sf_dir, tmp_path):
-    """Stream-static broadcast enrichment: per-batch dim lookup must produce
-    exactly the batch left-join result, with stream rows preserved when the
-    dim has no row for the key (stateless — no watermark required)."""
-    from drive_health_etl_spark.streaming.joins import enrich_with_dim
-
-    stream, batch = _stream_events(spark, sf_dir, tmp_path)
-    # static user-profile dim covering only even user ids (forces unmatched rows)
-    dim = (
-        batch.select("user_id").distinct().filter(F.col("user_id") % 2 == 0)
-        .withColumn("tier", F.when(F.col("user_id") % 4 == 0, "gold").otherwise("basic"))
-    )
-    q = (
-        enrich_with_dim(stream, dim)
-        .writeStream.format("memory")
-        .queryName("enriched_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["event_id"], r["tier"])
-        for r in spark.sql("SELECT event_id, tier FROM enriched_out").collect()
-    }
-    expected = {
-        (r["event_id"], r["tier"])
-        for r in batch.join(F.broadcast(dim), "user_id", "left").select("event_id", "tier").collect()
-    }
-    assert got == expected
-    assert any(t is None for _e, t in got)  # unmatched keys preserved by the left join
 
 
 def test_dedup_against_warehouse_strategies(spark, tmp_path):

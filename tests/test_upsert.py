@@ -1,159 +1,35 @@
+"""The single-writer table lock (``warehouse_write_lock``), seen through a
+writer that takes it: ``commit_snapshot``."""
+
 from __future__ import annotations
 
-import json
+import os
+import time
 
-from pyspark.sql import functions as F
+import pytest
 
-from drive_health_etl_spark.operators.ingest import ingest, write_warehouse
-from drive_health_etl_spark.operators.upsert import merge_upsert
-from drive_health_etl_spark.sources import envelopes
-
-
-def _wh(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "wh")
-    res = ingest(envelopes.messages_from_events(spark, sf_dir), normalize_phones=False)
-    write_warehouse(res.warehouse, out, mode="overwrite")
-    return out
+from drive_health_etl_spark.operators.snapshots import commit_snapshot, list_snapshots, read_snapshot
+from drive_health_etl_spark.operators.upsert import ConcurrentWriteError, warehouse_write_lock
 
 
-def test_merge_upsert_updates_and_inserts(spark, sf_dir, tmp_path):
-    out = _wh(spark, sf_dir, tmp_path)
-    before = spark.read.parquet(out)
-    n0 = before.count()
-    victim = before.orderBy("idempotency_key").first()
-
-    updates = spark.createDataFrame(
-        [
-            # update: same key, new payload
-            (victim["tenant_id"], victim["event_type"], 1, 1, None, victim["occurred_at"],
-             victim["received_at"], "merge-test", True, victim["idempotency_key"], json.dumps({"v": 2})),
-            # insert: brand-new key, same partition
-            (victim["tenant_id"], victim["event_type"], 1, 1, None, victim["occurred_at"],
-             victim["received_at"], "merge-test", True, "brand-new-key", json.dumps({"v": 1})),
-        ],
-        schema=before.drop("event_date").schema,
-    )
-    merge_upsert(spark, out, updates)
-
-    after = spark.read.parquet(out)
-    assert after.count() == n0 + 1  # one insert, one in-place update
-    got = after.filter(F.col("idempotency_key") == victim["idempotency_key"]).collect()
-    assert len(got) == 1 and got[0]["source"] == "merge-test"
-    assert after.filter(F.col("idempotency_key") == "brand-new-key").count() == 1
-
-
-def test_merge_upsert_corrupt_target_propagates(spark, sf_dir, tmp_path):
-    """A readable-path-but-broken target must raise, NOT be treated as
-    'first write' (which would drop pre-existing rows in touched
-    partitions)."""
-    import pytest
-
-    out = _wh(spark, sf_dir, tmp_path)
-    before = spark.read.parquet(out)
-    row = before.first()
-    updates = spark.createDataFrame(
-        [tuple(row[c] for c in before.drop("event_date").columns)],
-        schema=before.drop("event_date").schema,
-    )
-    # a populated dir with an unreadable parquet footer (an EMPTY dir is
-    # legitimately first-write — the lock protocol creates the dir itself)
-    import shutil
-
-    broken = str(tmp_path / "broken")
-    (tmp_path / "broken").mkdir()
-    (tmp_path / "broken" / "part-00000.parquet").write_bytes(b"not a parquet file")
-    with pytest.raises(Exception):
-        merge_upsert(spark, broken, updates)
-    shutil.rmtree(broken)
-
-    # genuinely-missing path still means first write
-    fresh = str(tmp_path / "fresh")
-    merge_upsert(spark, fresh, updates)
-    assert spark.read.parquet(fresh).count() == 1
-
-
-def test_merge_upsert_restores_overwrite_mode(spark, sf_dir, tmp_path):
-    out = _wh(spark, sf_dir, tmp_path)
-    before = spark.read.parquet(out)
-    row = before.first()
-    updates = spark.createDataFrame(
-        [tuple(row[c] for c in before.drop("event_date").columns)],
-        schema=before.drop("event_date").schema,
-    )
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    merge_upsert(spark, out, updates)
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == prior
-
-
-def test_merge_upsert_only_rewrites_touched_partitions(spark, sf_dir, tmp_path):
-    import os
-    import time
-
-    out = _wh(spark, sf_dir, tmp_path)
-    parts = sorted(p for p in os.listdir(out) if p.startswith("event_date="))
-    untouched_dir = os.path.join(out, parts[-1])
-    mtime_before = max(
-        os.path.getmtime(os.path.join(untouched_dir, f)) for f in os.listdir(untouched_dir)
-    )
-    time.sleep(1.1)
-
-    before = spark.read.parquet(out)
-    n_before = before.count()
-    first_date = before.agg(F.min("event_date")).collect()[0][0]
-    row = before.filter(F.col("event_date") == first_date).first()
-    updates = spark.createDataFrame(
-        [tuple(row[c] for c in before.drop("event_date").columns)],
-        schema=before.drop("event_date").schema,
-    ).withColumn("source", F.lit("touched"))
-    merge_upsert(spark, out, updates)
-
-    mtime_after = max(
-        os.path.getmtime(os.path.join(untouched_dir, f)) for f in os.listdir(untouched_dir)
-    )
-    assert mtime_after == mtime_before  # dynamic overwrite left other partitions alone
-    assert spark.read.parquet(out).count() == n_before
-
-
-def test_merge_lock_blocks_concurrent_writer(spark, sf_dir, tmp_path):
-    import pytest
-
-    from drive_health_etl_spark.operators.upsert import (
-        ConcurrentWriteError,
-        warehouse_write_lock,
-    )
-
-    out = _wh(spark, sf_dir, tmp_path)
-    before = spark.read.parquet(out)
-    first_date = before.agg(F.min("event_date")).collect()[0][0]
-    row = before.filter(F.col("event_date") == first_date).first()
-    updates = spark.createDataFrame(
-        [tuple(row[c] for c in before.drop("event_date").columns)],
-        schema=before.drop("event_date").schema,
-    )
-    with warehouse_write_lock(out):  # first writer holds the table
+def test_merge_lock_blocks_concurrent_writer(spark, tmp_path):
+    table = str(tmp_path / "t")
+    with warehouse_write_lock(table):  # first writer holds the table
         with pytest.raises(ConcurrentWriteError):
-            merge_upsert(spark, out, updates)
-    merge_upsert(spark, out, updates)  # lock released -> proceeds
+            commit_snapshot(spark.range(10), table)
+    assert list_snapshots(table) == []
+    commit_snapshot(spark.range(10), table)  # lock released -> proceeds
+    assert list_snapshots(table) == [1]
 
 
-def test_merge_lock_breaks_stale_lock(spark, sf_dir, tmp_path):
-    import os
-    import time
-
-    out = _wh(spark, sf_dir, tmp_path)
-    n = spark.read.parquet(out).count()
-    lock = out.rstrip("/") + "._merge.lock"
-    open(lock, "w").write("{}")
+def test_merge_lock_breaks_stale_lock(spark, tmp_path):
+    table = str(tmp_path / "t")
+    lock = table + "._merge.lock"
+    with open(lock, "w") as f:
+        f.write("{}")
     old = time.time() - 4000
     os.utime(lock, (old, old))  # crashed writer from over an hour ago
 
-    before = spark.read.parquet(out)
-    first_date = before.agg(F.min("event_date")).collect()[0][0]
-    row = before.filter(F.col("event_date") == first_date).first()
-    updates = spark.createDataFrame(
-        [tuple(row[c] for c in before.drop("event_date").columns)],
-        schema=before.drop("event_date").schema,
-    )
-    merge_upsert(spark, out, updates)  # stale lock broken, merge succeeds
+    commit_snapshot(spark.range(10), table)  # stale lock broken, commit succeeds
     assert not os.path.exists(lock)
-    assert spark.read.parquet(out).count() == n
+    assert read_snapshot(spark, table).count() == 10

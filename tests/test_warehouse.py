@@ -1,22 +1,20 @@
 """Warehouse layout tests: partitioned/clustered write (S5), partition
-pruning, retention TTL (the 1-year expiry of README.md:88), approx-agg
-accuracy."""
+pruning, approx-agg accuracy."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.ingest import ingest, retention_expire, write_warehouse
+from drive_health_etl_spark.operators.ingest import ingest, write_warehouse
 from drive_health_etl_spark.plans.extended import a5_approx_stats
 from drive_health_etl_spark.sources import envelopes
 from drive_health_etl_spark.sources.tables import load_table
-from tests.conftest import group_jobs
 
 
 def test_partitioned_write_and_pruning(spark, sf_dir, tmp_path):
     out = str(tmp_path / "wh")
     res = ingest(envelopes.messages_from_events(spark, sf_dir), normalize_phones=False)
-    write_warehouse(res.warehouse, out, mode="overwrite")
+    write_warehouse(res.warehouse, out)
 
     wh = spark.read.parquet(out)
     n_parts = wh.select("event_date").distinct().count()
@@ -27,21 +25,6 @@ def test_partitioned_write_and_pruning(spark, sf_dir, tmp_path):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "event_date" in plan.split("PartitionFilters", 1)[1][:200]
     assert 0 < pruned.count() < wh.count()
-
-
-def test_retention_ttl(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "wh")
-    res = ingest(envelopes.messages_from_events(spark, sf_dir), normalize_phones=False)
-    write_warehouse(res.warehouse, out, mode="overwrite")
-    # events are dated 2024-01; far older than any sane TTL from 'today'
-    assert len(retention_expire(spark, out, ttl_days=36500)) == 0
-    assert len(retention_expire(spark, out, ttl_days=1)) == 30
-    # metadata only: the partitions come from the file listing, no job runs
-    expired = []
-    jobs = group_jobs(spark, "retention-ttl", lambda: expired.extend(retention_expire(spark, out, ttl_days=1)))
-    assert jobs == []
-    days = spark.read.parquet(out).select("event_date").distinct().collect()
-    assert expired == sorted(r[0].isoformat() for r in days)
 
 
 def test_approx_stats_accuracy(spark, sf_dir):
